@@ -2062,9 +2062,9 @@ object Dedup {
       partitionCols = sharded)
 
   /** Fragmentation-measured compaction trigger: compact ONLY when the
-    * index has measurably decayed — the auto mode of the governed
-    * streams' in-loop compaction, replacing the blind `compactEvery = N`
-    * dial. The measure is the append-accreting primary row table
+    * index has measurably decayed — the governed streams' in-loop
+    * compaction (`autoCompact = true`). The measure is the
+    * append-accreting primary row table
     * (`signatures` / `vectors` — every committed batch lands exactly one
     * file set there): the index is fragmented when that table holds at
     * least `fragmentFactor` × the file count a compaction would rewrite
@@ -2148,7 +2148,7 @@ object Dedup {
     * the moved-aside original) with the table dir itself possibly
     * absent; every subsequent index open then fails loudly, and with
     * in-loop compaction ([[graft.streaming.StreamOps.indexedDedupStream]]'s
-    * `compactEvery`) that means a restarted stream fails on every batch
+    * `autoCompact`) that means a restarted stream fails on every batch
     * until someone repairs the directory by hand. This runs the repair
     * automatically: at compaction start and at governed-stream open
     * (the ledger-init calls); safe to invoke any time.
@@ -3737,25 +3737,37 @@ object Dedup {
     * ledger that already exists is left untouched.
     */
   def initIngestLedger(spark: org.apache.spark.sql.SparkSession,
-                       indexPath: String): Unit = {
+                       indexPath: String): Unit =
+    initLedger(spark, indexPath, "signatures")(
+      readSignatureIndex(spark, indexPath))
+
+  /** [[initIngestLedger]] for a persisted SRP embedding index — the base
+    * watermark comes from the index's vector table. */
+  def initSrpIngestLedger(spark: org.apache.spark.sql.SparkSession,
+                          indexPath: String): Unit =
+    initLedger(spark, indexPath, "vectors")(readSrpIndex(spark, indexPath))
+
+  /** [[initIngestLedger]] for a persisted digest index — the base
+    * watermark comes from the physical digest table. */
+  def initDigestIngestLedger(spark: org.apache.spark.sql.SparkSession,
+                             indexPath: String): Unit =
+    initLedger(spark, indexPath, "digests")(
+      readDigestIndex(spark, indexPath))
+
+  /** Ledger init shared by the three index families: `open` validates
+    * the index + params; `primary` is the row table whose physical max
+    * id becomes the base watermark. */
+  private def initLedger(spark: org.apache.spark.sql.SparkSession,
+                         indexPath: String, primary: String)
+                        (open: => Any): Unit = {
     // stream-open healing: a crash mid-in-loop-compaction must not leave
     // the restarted stream failing on an absent table dir
     recoverCompaction(spark, indexPath)
-    readSignatureIndex(spark, indexPath) // validates index + params
+    open
     // base watermark from the PHYSICAL table, not the tombstone-filtered
     // view: deleted ids stay retired, so the watermark must clear every
     // id ever written (id reuse would collide with pending tombstones)
-    bootstrapLedger(spark, indexPath, "signatures")
-  }
-
-  /** [[initIngestLedger]]'s twin for a persisted SRP embedding index —
-    * the base watermark comes from the index's vector table. */
-  def initSrpIngestLedger(spark: org.apache.spark.sql.SparkSession,
-                          indexPath: String): Unit = {
-    recoverCompaction(spark, indexPath)
-    readSrpIndex(spark, indexPath) // validates index + params
-    // physical table for the base watermark — see initIngestLedger
-    bootstrapLedger(spark, indexPath, "vectors")
+    bootstrapLedger(spark, indexPath, primary)
   }
 
   /** Physical max id of an index row table — the monotone-id
@@ -3775,22 +3787,32 @@ object Dedup {
     val members = readMemberDirs(fs, path, sub).map(_.toSeq.sorted)
     graft.sources.MetaIO.statsMaxLong(conf, s"$path/$sub", "id", members)
       .getOrElse {
+        // cast: an index written from 32-bit ids stores an INT32 `id`
+        // column (the footers answer None for it) — getLong needs a long
         val maxRow = readIndexTable(spark, s"$path/$sub")
-          .agg(max(col("id"))).head()
+          .agg(max(col("id").cast("long"))).head()
         if (maxRow.isNullAt(0)) None else Some(maxRow.getLong(0))
       }
   }
 
-  /** Write the ledger's bootstrap row if no ledger exists: base
-    * watermark = [[physicalMaxId]] of the index's primary row table;
-    * the one-row write is driver-side too ([[writeOneRowParquet]] —
-    * the same writer every later ledger row uses). */
+  /** Write the ledger's bootstrap row if the ledger holds no visible
+    * parquet file: base watermark = [[physicalMaxId]] of the index's
+    * primary row table; the one-row write is driver-side too
+    * ([[writeOneRowParquet]] — the same writer every later ledger row
+    * uses). A crash inside that write leaves the directory with only a
+    * hidden temp file — no ledger to any reader — so such leftovers are
+    * deleted and the bootstrap runs again. */
   private def bootstrapLedger(spark: org.apache.spark.sql.SparkSession,
                               indexPath: String, sub: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = new org.apache.hadoop.fs.Path(s"$indexPath/ingest_ledger")
     val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) {
+    val entries = if (fs.exists(dir)) fs.listStatus(dir).toSeq else Nil
+    def hidden(st: org.apache.hadoop.fs.FileStatus) =
+      st.getPath.getName.startsWith(".") || st.getPath.getName.startsWith("_")
+    if (!entries.exists(st => st.isFile && !hidden(st) && st.getLen > 0)) {
+      entries.filter(_.getPath.getName.startsWith("."))
+        .foreach(st => fs.delete(st.getPath, true))
       val w0 = physicalMaxId(spark, indexPath, sub).getOrElse(-1L)
       writeOneRowParquet(spark,
         new org.apache.hadoop.fs.Path(dir,
@@ -3799,49 +3821,46 @@ object Dedup {
     }
   }
 
-  /** One micro-batch of the production incremental-dedup loop, EXACTLY
-    * ONCE under crash/replay — the piece that turns the persisted
-    * signature index into a streaming ingest pipeline
-    * (`StreamOps.indexedDedupStream` wraps this in `foreachBatch`).
+  /** Run `f` on a LANE — a fresh daemon thread — to overlap INDEPENDENT
+    * Spark actions inside one governed micro-batch (guide §2.6: actions
+    * are only sequential because the driver calls them sequentially; the
+    * scheduler happily runs several jobs at once).
     *
-    * Per batch: within-batch near-dups collapse to their cluster
-    * representative (min id, the same policy as `Pipelines.trainingCorpus`),
-    * survivors are screened against the COMMITTED corpus index, novel docs
-    * land in `outPath/batch_id=<id>/` and their signatures/bands append to
-    * the index; finally one ledger row commits the batch.
-    *
-    * Exactly-once mechanics — the ledger watermark is the linchpin:
-    *  - Every read of the index is filtered to `id <= w`, the COMMITTED
-    *    watermark (max ledgered `watermark_after`; for a replayed batch,
-    *    its own ledgered `watermark_before`). Rows a crashed attempt
-    *    appended beyond `w` are invisible, so the batch's novel set is a
-    *    pure function of (ledger, batch) — bit-identical on every replay,
-    *    and batch docs can never collide with their own half-appended
-    *    signatures.
-    *  - The output write is a per-batch directory overwrite: a replay
-    *    rewrites the same rows into the same directory, never duplicates.
-    *  - Index appends are self-healing: expected rows are re-derived from
-    *    the novel set and anti-joined against the physical tail
-    *    (`id > w`), so a torn append (signatures landed, bands did not —
-    *    parquet jobs commit atomically but independently) appends exactly
-    *    the missing remainder. The band derivation reuses the write-time
-    *    cap rule against committed-bucket occupancy, so the healed index
-    *    ≡ a clean [[appendSignatureIndex]] of the novel set.
-    *  - The ledger row is written LAST — it is the commit marker. A crash
-    *    anywhere earlier replays into the identical computation; a crash
-    *    after the ledger write replays as a recognized no-op (same
-    *    `watermark_before` is reused, appends find nothing missing).
-    *
-    * CONTRACT: batch ids are strictly greater than the committed
-    * watermark (monotone ingest ids, same as [[appendSignatureIndex]]),
-    * and batches arrive through one governed stream (Structured
-    * Streaming's serial foreachBatch — no concurrent writers).
-    *
-    * Scale shape: the committed-corpus side is the indexed probe
-    * (zero corpus text reads); everything else is batch-sized — the
-    * ledger is one row per batch and only ≤ 1 row of it is ever
-    * collected.
-    */
+    * One thread per task, created HERE: Spark local properties (job
+    * group, `streaming.sql.batchId`, SQL execution id) are inherited only
+    * when a thread is created, so a lane started by the submitting batch
+    * tags its jobs with that batch's properties. A pooled thread would
+    * keep the properties of whichever batch created it and file its jobs
+    * under a stale batch. A batch submits at most two lanes, so the
+    * thread start is noise next to the Spark job it runs. */
+  private def laneSubmit[A](f: => A): java.util.concurrent.Future[A] = {
+    val task = new java.util.concurrent.FutureTask[A](
+      new java.util.concurrent.Callable[A] { def call(): A = f })
+    val t = new Thread(task, "graft-governed-lane")
+    t.setDaemon(true)
+    t.start()
+    task
+  }
+
+  /** Join a lane, unwrapping ExecutionException so callers see the
+    * task's own failure class (the same contract the parallel cache
+    * copy keeps for its FileNotFoundException retry). */
+  private def laneAwait[A](fut: java.util.concurrent.Future[A]): A =
+    try fut.get()
+    catch {
+      case e: java.util.concurrent.ExecutionException => throw e.getCause
+    }
+
+  /** Join every in-flight lane, swallowing their failures — the abort
+    * path: a batch that is already failing must still not leave an
+    * in-flight append racing its own replay (the replay claims a fresh
+    * epoch; an orphan write landing after it would corrupt the torn-tail
+    * accounting). */
+  private def laneDrain(futs: java.util.concurrent.Future[_]*): Unit =
+    futs.foreach { f =>
+      if (f != null) try f.get() catch { case _: Throwable => () }
+    }
+
   /** Save the execution confs a governed micro-batch tunes
     * ([[tuneBatchExecution]]) and restore them when the batch ends —
     * success or failure. The tuning itself happens INSIDE the batch,
@@ -3868,43 +3887,6 @@ object Dedup {
     * run on their own `spark.newSession()`
     * (`ShardedGovernedIngestSpec` pins the isolation).
     */
-  /** Daemon lane pool for overlapping INDEPENDENT per-batch Spark
-    * actions inside one governed micro-batch (guide §2.6: actions are
-    * only sequential because the driver calls them sequentially; the
-    * scheduler happily runs several jobs at once). Cached pool: bounded
-    * in practice by two submissions per in-flight batch, and sharded
-    * deployments run several governed streams concurrently, so a fixed
-    * pool could needlessly serialize streams. Lane tasks never submit
-    * lane tasks — no starvation cycle. */
-  private lazy val lanePool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newCachedThreadPool((r: Runnable) => {
-      val t = new Thread(r, "graft-governed-lane"); t.setDaemon(true); t
-    })
-
-  private def laneSubmit[A](f: => A): java.util.concurrent.Future[A] =
-    lanePool.submit(new java.util.concurrent.Callable[A] {
-      def call(): A = f
-    })
-
-  /** Join a lane, unwrapping ExecutionException so callers see the
-    * task's own failure class (the same contract the parallel cache
-    * copy keeps for its FileNotFoundException retry). */
-  private def laneAwait[A](fut: java.util.concurrent.Future[A]): A =
-    try fut.get()
-    catch {
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
-    }
-
-  /** Join every in-flight lane, swallowing their failures — the abort
-    * path: a batch that is already failing must still not leave an
-    * in-flight append racing its own replay (the replay claims a fresh
-    * epoch; an orphan write landing after it would corrupt the torn-tail
-    * accounting). */
-  private def laneDrain(futs: java.util.concurrent.Future[_]*): Unit =
-    futs.foreach { f =>
-      if (f != null) try f.get() catch { case _: Throwable => () }
-    }
-
   private def withPinnedPlan[A](
       spark: org.apache.spark.sql.SparkSession)(f: => A): A = {
     val kA = "spark.sql.adaptive.enabled"
@@ -3993,16 +3975,38 @@ object Dedup {
   private def batchShufflePartitions(expandedRows: Long, prev: Int): Int =
     math.max(1, math.min(prev, (expandedRows / 65536L + 1).toInt))
 
+  /** One micro-batch of the production incremental-dedup loop, EXACTLY
+    * ONCE under crash/replay — the piece that turns the persisted
+    * signature index into a streaming ingest pipeline
+    * (`StreamOps.indexedDedupStream` wraps this in `foreachBatch`).
+    *
+    * Per batch: within-batch near-dups collapse to their cluster
+    * representative (min id, the same policy as `Pipelines.trainingCorpus`),
+    * survivors are screened against the COMMITTED corpus index, novel docs
+    * land in `outPath/batch_id=<id>/` and their signatures/bands append to
+    * the index; finally one ledger row commits the batch. The
+    * exactly-once mechanics are the governed core shared by every index
+    * family — see [[governedBatch]].
+    *
+    * CONTRACT: batch ids are strictly greater than the committed
+    * watermark (monotone ingest ids, same as [[appendSignatureIndex]]),
+    * and batches arrive through one governed stream (Structured
+    * Streaming's serial foreachBatch — no concurrent writers).
+    *
+    * Scale shape: the committed-corpus side is the indexed probe
+    * (zero corpus text reads); everything else is batch-sized — the
+    * ledger is one row per batch and only ≤ 1 row of it is ever
+    * collected.
+    */
   def ingestBatchWithIndex(batch: DataFrame, idCol: String, textCol: String,
                            indexPath: String, outPath: String,
                            batchId: Long,
                            quarantine: Boolean = false): IngestBatchStats =
-    withPinnedPlan(batch.sparkSession) {
-      ingestBatchWithIndexImpl(batch, idCol, textCol, indexPath, outPath,
-        batchId, quarantine)
-    }
+    withPinnedPlan(batch.sparkSession)(governedBatch(batch, idCol, indexPath,
+      outPath, batchId, quarantine,
+      minHashFamily(batch.sparkSession, indexPath, idCol, textCol)))
 
-  /** Per-batch governance scalars both governed loops resolve up front:
+  /** Per-batch governance scalars a governed batch resolves up front:
     * replay flag, committed watermark `w`, the batch geometry, the
     * torn-tail flag, the touched-shard set, and — quarantine mode
     * only — the detected contract violation. */
@@ -4087,13 +4091,12 @@ object Dedup {
     * head, tail isEmpty, touched collect) and the ledger aggregate ran
     * as a fourth stage inside the first — the ledger now resolves
     * driver-side ([[ledgerFront]]), which is what lets the tail count
-    * (needs `w`) fold in. Shared verbatim by all three governed loops
-    * (`opName` only labels the contract errors).
+    * (needs `w`) fold in. `opName` only labels the contract errors.
     *
     * `physTail2` (r20): the two-table families pass their SECOND
     * physical table (bands / buckets) so the torn flag covers EITHER
-    * tail. With both tails checked, the order between the signature
-    * append and the band append stops being a proof obligation — the
+    * tail. With both tails checked, the order between the primary
+    * append and the bucket append stops being a proof obligation — the
     * two appends run on overlapped lanes (guide §2.6) and a crash can
     * leave either tail alone; each heal anti-joins its own physical
     * tail. The occupancy delta and the ledger row still land strictly
@@ -4117,7 +4120,7 @@ object Dedup {
                                 quarantine: Boolean,
                                 physTail: DataFrame,
                                 touchedAgg: Option[DataFrame],
-                                physTail2: Option[DataFrame] = None)
+                                physTail2: Option[DataFrame])
       : BatchFront = {
     val (replayed, w, quarantinedBefore) =
       ledgerFront(b.sparkSession, indexPath, batchId)
@@ -4281,21 +4284,53 @@ object Dedup {
                          indexPath: String, outPath: String, batchId: Long,
                          idCol: String, textCol: String,
                          repair: DataFrame => DataFrame = identity)
+      : IngestBatchStats =
+    redriveGoverned(spark, indexPath, batchId, idCol, repair,
+      "redriveQuarantined")(
+      ingestBatchWithIndex(_, idCol, textCol, indexPath, outPath, batchId))
+
+  /** [[redriveQuarantined]] for the governed SRP embedding loop. */
+  def redriveQuarantinedSrp(spark: org.apache.spark.sql.SparkSession,
+                            indexPath: String, outPath: String,
+                            batchId: Long, idCol: String, vecCol: String,
+                            threshold: Double,
+                            repair: DataFrame => DataFrame = identity)
+      : IngestBatchStats =
+    redriveGoverned(spark, indexPath, batchId, idCol, repair,
+      "redriveQuarantinedSrp")(ingestBatchWithSrpIndex(_, idCol, vecCol,
+      indexPath, outPath, batchId, threshold))
+
+  /** [[redriveQuarantined]] for the governed digest loop. */
+  def redriveQuarantinedDigest(spark: org.apache.spark.sql.SparkSession,
+                               indexPath: String, outPath: String,
+                               batchId: Long, idCol: String,
+                               digCol: String,
+                               repair: DataFrame => DataFrame = identity)
+      : IngestBatchStats =
+    redriveGoverned(spark, indexPath, batchId, idCol, repair,
+      "redriveQuarantinedDigest")(ingestBatchWithDigestIndex(_, idCol,
+      digCol, indexPath, outPath, batchId))
+
+  /** The redrive shared by the three families: `ingest` runs the
+    * family's governed batch fail-loud under the quarantined batch id;
+    * `op` labels the errors. */
+  private def redriveGoverned(spark: org.apache.spark.sql.SparkSession,
+                              indexPath: String, batchId: Long,
+                              idCol: String,
+                              repair: DataFrame => DataFrame, op: String)
+                             (ingest: DataFrame => IngestBatchStats)
       : IngestBatchStats = {
     val dir = quarantinedBatchDir(indexPath, batchId)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a scrub crash mid-swap parks the batch under __scrub_old_… —
     // heal first, or the sole raw copy would read as "no such batch"
     recoverScrubLeftovers(fs, quarantineDir(indexPath))
-    require(fs.exists(dir),
-      s"redriveQuarantined: no quarantined batch $batchId at $dir")
-    requireQuarantineLedgerRow(spark, indexPath, batchId,
-      "redriveQuarantined")
-    val stats = ingestBatchWithIndex(
-      repair(liveQuarantinedRows(spark, indexPath, dir, idCol)), idCol,
-      textCol, indexPath, outPath, batchId, quarantine = false)
+    require(fs.exists(dir), s"$op: no quarantined batch $batchId at $dir")
+    requireQuarantineLedgerRow(spark, indexPath, batchId, op)
+    val stats =
+      ingest(repair(liveQuarantinedRows(spark, indexPath, dir, idCol)))
     require(fs.delete(dir, true),
-      s"redriveQuarantined: could not remove $dir after the commit")
+      s"$op: could not remove $dir after the commit")
     stats
   }
 
@@ -4310,29 +4345,6 @@ object Dedup {
     readTombstones(spark, indexPath).fold(raw)(t =>
       raw.join(broadcast(t.select(col("id").as("__tomb_id"))),
         col(idCol).try_cast("long") === col("__tomb_id"), "left_anti"))
-  }
-
-  /** [[redriveQuarantined]]'s twin for the governed SRP embedding
-    * loop (pending takedowns honored the same way). */
-  def redriveQuarantinedSrp(spark: org.apache.spark.sql.SparkSession,
-                            indexPath: String, outPath: String,
-                            batchId: Long, idCol: String, vecCol: String,
-                            threshold: Double,
-                            repair: DataFrame => DataFrame = identity)
-      : IngestBatchStats = {
-    val dir = quarantinedBatchDir(indexPath, batchId)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverScrubLeftovers(fs, quarantineDir(indexPath)) // see MinHash twin
-    require(fs.exists(dir),
-      s"redriveQuarantinedSrp: no quarantined batch $batchId at $dir")
-    requireQuarantineLedgerRow(spark, indexPath, batchId,
-      "redriveQuarantinedSrp")
-    val stats = ingestBatchWithSrpIndex(
-      repair(liveQuarantinedRows(spark, indexPath, dir, idCol)), idCol,
-      vecCol, indexPath, outPath, batchId, threshold, quarantine = false)
-    require(fs.delete(dir, true),
-      s"redriveQuarantinedSrp: could not remove $dir after the commit")
-    stats
   }
 
   /** Dismiss a quarantined batch: explicit destruction of the diverted
@@ -4352,13 +4364,14 @@ object Dedup {
     require(fs.delete(dir, true), s"dropQuarantined: could not remove $dir")
   }
 
-  /** LATE FOLD + commit, shared by both governed loops: one job over the
-    * already-checkpointed frames answers the remaining scalars —
-    * capped-bucket count (delta non-emptiness) and, only when torn, the
-    * replay presence flag (previously three separate jobs; the novel
-    * row count now arrives driver-side from the staging write's parquet
-    * footers, r20) — then lands the occupancy delta and, last, the
-    * ledger commit marker.
+  /** LATE FOLD + commit, the last step of [[governedBatch]]. For a
+    * family with a bucket table (`occupancy` defined: the capped rows,
+    * the rows this attempt appended, the raw occupancy read), one job
+    * over the already-checkpointed frames answers the remaining scalars
+    * — capped-bucket count (delta non-emptiness) and, only when torn,
+    * the replay presence flag (the novel row count arrives driver-side
+    * from the staging write's parquet footers) — then lands the
+    * occupancy delta. Last, for every family, the ledger commit marker.
     *
     * The occupancy delta is stamped with the batch's committed
     * watermark: a governed read at any later watermark w' >= wAfter
@@ -4378,163 +4391,235 @@ object Dedup {
     * side table in parity with the bucket table it describes.
     */
   private def finishGovernedBatch(spark: org.apache.spark.sql.SparkSession,
-                                  indexPath: String, novelRows: Long,
-                                  capped: DataFrame, healedAppend: DataFrame,
-                                  occRaw: DataFrame,
-                                  keyCols: Seq[String], shards: Int,
-                                  torn: Boolean, w: Long, wAfter: Long,
-                                  replayed: Boolean, claimed: Long,
-                                  batchId: Long): Unit = {
-    val lateBase = capped.agg(count(lit(1)).as("n_capped"))
-    val late =
-      (if (shards > 0 && torn)
-         // POSITIVE rows only: the probe asks "did THIS batch's delta
-         // land" and batch deltas are positive counts by construction.
-         // A purge's negative rows are stamped at the max COMMITTED
-         // watermark (see purgeTombstones), which CAN equal a torn
-         // batch's wAfter — guarding on sign (not stamp) keeps the
-         // probe correct against them, and against historical negative
-         // rows written by earlier stamp schemes.
-         lateBase.crossJoin(occRaw.agg(
-           count(when(col("wm") === lit(wAfter) && col("occ") > 0, 1))
-             .as("n_replay")))
-       else lateBase).head()
-    val deltaPresent = shards > 0 && torn && late.getLong(1) > 0
-    if (shards > 0 && late.getLong(0) > 0) {
-      if (!deltaPresent)
-        appendOccupancyDelta(spark, indexPath, capped, keyCols, shards,
-          wAfter)
-      else if (!healedAppend.isEmpty)
-        // supplementary delta for the purge-re-opened remainder — see
-        // the scaladoc above; rare path (torn + present + nonempty heal)
-        appendOccupancyDelta(spark, indexPath, healedAppend, keyCols,
-          shards, wAfter)
+                                  indexPath: String, f: GovernedFamily,
+                                  front: BatchFront, novelRows: Long,
+                                  occupancy: Option[(DataFrame, DataFrame,
+                                    DataFrame)],
+                                  claimed: Long, batchId: Long): Unit = {
+    val wAfter = front.wAfter
+    occupancy.foreach { case (capped, healedAppend, occRaw) =>
+      val lateBase = capped.agg(count(lit(1)).as("n_capped"))
+      val late =
+        (if (f.shards > 0 && front.torn)
+           // POSITIVE rows only: the probe asks "did THIS batch's delta
+           // land" and batch deltas are positive counts by construction.
+           // A purge's negative rows are stamped at the max COMMITTED
+           // watermark (see purgeTombstones), which CAN equal a torn
+           // batch's wAfter — guarding on sign (not stamp) keeps the
+           // probe correct against them, and against historical negative
+           // rows written by earlier stamp schemes.
+           lateBase.crossJoin(occRaw.agg(
+             count(when(col("wm") === lit(wAfter) && col("occ") > 0, 1))
+               .as("n_replay")))
+         else lateBase).head()
+      val deltaPresent = f.shards > 0 && front.torn && late.getLong(1) > 0
+      if (f.shards > 0 && late.getLong(0) > 0) {
+        if (!deltaPresent)
+          appendOccupancyDelta(spark, indexPath, capped, f.keyCols, f.shards,
+            wAfter)
+        else if (!healedAppend.isEmpty)
+          // supplementary delta for the purge-re-opened remainder — see
+          // the scaladoc above; rare path (torn + present + nonempty heal)
+          appendOccupancyDelta(spark, indexPath, healedAppend, f.keyCols,
+            f.shards, wAfter)
+      }
     }
     // Ledger row LAST — the commit marker; the epoch re-check makes a
     // compaction landing mid-batch abort (and replay) this batch instead
     // of letting it commit over a moved index.
-    if (!replayed) {
+    if (!front.replayed) {
       requireEpoch(spark, indexPath, claimed)
-      commitLedgerRow(spark, indexPath, batchId, w, wAfter, novelRows)
+      commitLedgerRow(spark, indexPath, batchId, front.w, wAfter, novelRows)
     }
   }
 
-  private def ingestBatchWithIndexImpl(
-      batch: DataFrame, idCol: String, textCol: String,
-      indexPath: String, outPath: String, batchId: Long,
-      quarantine: Boolean): IngestBatchStats = {
-    val spark = batch.sparkSession
+  /** What one index family contributes to a governed micro-batch
+    * ([[governedBatch]]); the exactly-once protocol itself is shared.
+    *
+    * `keyCols` key the SHARDED table the cross-index probe reads — the
+    * bucket table when the family has one, else the primary table — and
+    * `shards` is its shard count (0 = legacy unsharded index).
+    * `primaryShards` is the primary table's own shard count (0 when a
+    * bucket table carries the sharding).
+    * `expansion` is the expanded rows per batch row the screens' shuffles
+    * carry ([[tuneBatchExecution]]). `touched` projects the batch to its
+    * probe keys for the front fold's touched-shard set; it runs on the
+    * RAW batch, so it must not throw on malformed input (see
+    * [[resolveBatchFront]]). `screens(batch, w, touched)` returns the
+    * within-batch and the cross-index duplicate ids, each one column
+    * named after the id column. `primaryRows` projects novel rows to
+    * primary-table rows.
+    */
+  private final case class GovernedFamily(
+      opName: String, primary: String, keyCols: Seq[String], shards: Int,
+      primaryShards: Int, expansion: Long, touched: DataFrame => DataFrame,
+      screens: (DataFrame, Long, Seq[Int]) => (DataFrame, DataFrame),
+      primaryRows: DataFrame => DataFrame,
+      buckets: Option[GovernedBuckets])
+
+  /** A family's capped bucket table, kept in step with `occupancy/`:
+    * `view` is the tombstone-filtered table (the occupancy source of a
+    * legacy unsharded index), `rows` derives (id, keyCols...) from
+    * primary rows, `cap` is the write-time per-bucket cap. */
+  private final case class GovernedBuckets(table: String, cap: Int,
+                                           view: DataFrame,
+                                           rows: DataFrame => DataFrame)
+
+  /** The MinHash family: signatures + capped band table. */
+  private def minHashFamily(spark: org.apache.spark.sql.SparkSession,
+                            indexPath: String, idCol: String,
+                            textCol: String): GovernedFamily = {
     GraftFunctions.register(spark)
     val ix = readSignatureIndex(spark, indexPath)
     val p = ix.params
+    val bandStructs = array((0 until p.bands).map { bnd =>
+      struct(lit(bnd).as("band"),
+        bandKey(col("minhash"), bnd, p.rowsPerBand).as("bkey"))
+    }: _*)
+    def signed(df: DataFrame) =
+      withMinHashSignature(df, textCol, p).filter(size(col("shingles")) > 0)
+    def bandRows(sigs: DataFrame) =
+      sigs.select(col("id"), explode(bandStructs).as("bk"))
+        .select(col("id"), col("bk.band").as("band"),
+          col("bk.bkey").as("bkey"))
+    GovernedFamily("ingestBatchWithIndex", "signatures", Seq("band", "bkey"),
+      ix.shards, primaryShards = 0, p.bands,
+      touched = b => bandRows(signed(b).select(col(idCol).as("id"),
+        col("minhash"))),
+      screens = (b, w, touched) => {
+        val committed = MinHashIndex(ix.signatures.filter(col("id") <= lit(w)),
+          ix.bands.filter(col("id") <= lit(w)), p, ix.shards)
+        // Within-batch screen: greedy star rule — drop any doc with a
+        // SMALLER-id near-duplicate in the same batch (pairs carry
+        // id_a < id_b, so the drop set is exactly the distinct id_b side).
+        // Equivalent to the connected-component representative on
+        // clique-shaped duplicate groups (the overwhelmingly common case)
+        // but needs NO iterative label propagation: the CC variant chains
+        // O(component diameter) Spark jobs into EVERY micro-batch, ~1.5 s
+        // of the measured per-batch floor at the verify SF and unbounded
+        // on adversarial chains. On transitive chains star keeps every
+        // local minimum — per-pair near-dup semantics rather than cluster
+        // semantics, the right screen for dedup (distant chain members are
+        // not near-duplicates of each other). d6/d6b expose both semantics
+        // as batch operators; p1's pipeline routes through star too.
+        // eagerCap=false: the batch-sized skew cap stays lazy and folds
+        // into the novel write instead of running its own count job.
+        (minHashNearDupPairs(b, idCol, textCol, p, eagerCap = false)
+           .select(col("id_b").as(idCol)).distinct(),
+         minHashNearDupPairsIncremental(b, committed, idCol, textCol, p,
+             if (ix.shards > 0) Some(touched) else None)
+           .select(col("batch_id").as(idCol)).distinct())
+      },
+      primaryRows = novel => signed(novel).select(col(idCol).as("id"),
+        col("shingles"), size(col("shingles")).as("sz"), col("minhash")),
+      buckets = Some(GovernedBuckets("bands", p.maxBucket, ix.bands,
+        bandRows)))
+  }
+
+  /** One governed micro-batch, EXACTLY ONCE under crash/replay — the
+    * protocol every index family shares (`f` supplies only what differs:
+    * tables, screens, projections, caps).
+    *
+    * Exactly-once mechanics — the ledger watermark is the linchpin:
+    *  - Every read of the index is filtered to `id <= w`, the COMMITTED
+    *    watermark (max ledgered `watermark_after`; for a replayed batch,
+    *    its own ledgered `watermark_before`). Rows a crashed attempt
+    *    appended beyond `w` are invisible, so the batch's novel set is a
+    *    pure function of (ledger, batch) — bit-identical on every replay,
+    *    and batch rows can never collide with their own half-appended
+    *    index rows.
+    *  - The output write is a per-batch directory overwrite: a replay
+    *    rewrites the same rows into the same directory, never duplicates.
+    *  - Index appends are self-healing: expected rows are re-derived from
+    *    the novel set and anti-joined against the physical tail
+    *    (`id > w`), so a torn append (primary rows landed, bucket rows
+    *    did not — parquet jobs commit atomically but independently)
+    *    appends exactly the missing remainder. The bucket derivation
+    *    reuses the write-time cap rule against committed-bucket
+    *    occupancy, so the healed index ≡ a clean maintenance append of
+    *    the novel set.
+    *  - The ledger row is written LAST — it is the commit marker. A crash
+    *    anywhere earlier replays into the identical computation; a crash
+    *    after the ledger write replays as a recognized no-op (same
+    *    `watermark_before` is reused, appends find nothing missing).
+    *
+    * A family without a bucket table (digest) has no occupancy, so its
+    * path skips the lanes, the late fold and the occupancy delta.
+    */
+  private def governedBatch(batch: DataFrame, idCol: String,
+                            indexPath: String, outPath: String, batchId: Long,
+                            quarantine: Boolean,
+                            f: GovernedFamily): IngestBatchStats = {
+    val spark = batch.sparkSession
     // Claim the index for this mutation; re-checked before the ledger
     // commit, so a compaction landing mid-batch makes this batch abort
     // (and replay) instead of committing over a moved index.
     val claimed = claimEpoch(spark, indexPath)
 
     val b = batch.localCheckpoint()
-    val physSig = readIndexTable(spark, s"$indexPath/signatures")
-    val physBand = readIndexTable(spark, s"$indexPath/bands")
-    val bandStructs = array((0 until p.bands).map { bnd =>
-      struct(lit(bnd).as("band"),
-        bandKey(col("minhash"), bnd, p.rowsPerBand).as("bkey"))
-    }: _*)
+    val physPrimary = readIndexTable(spark, s"$indexPath/${f.primary}")
+    val physBuckets =
+      f.buckets.map(s => readIndexTable(spark, s"$indexPath/${s.table}"))
     // FRONT FOLD — see resolveBatchFront: ledger driver-side, then ONE
-    // job for batch geometry × BOTH physical torn-tail counts × touched
-    // shards (previously three sequential jobs per micro-batch). The
-    // band tail joins the fold (r20) so the signature and band appends
-    // can run on overlapped lanes below — see the torn-check note.
-    val front = resolveBatchFront(b, idCol, batchId, indexPath,
-      "ingestBatchWithIndex", quarantine, physSig,
-      if (ix.shards > 0)
-        Some(touchedShardsAgg(
-          withMinHashSignature(b, textCol, p)
-            .filter(size(col("shingles")) > 0)
-            .select(explode(bandStructs).as("bk"))
-            .select(col("bk.band").as("band"), col("bk.bkey").as("bkey")),
-          Seq("band", "bkey"), ix.shards))
+    // job for batch geometry × every physical torn-tail count × touched
+    // shards.
+    //
+    // TORN-TAIL CHECK — folded into that job (row-group pruned: parquet
+    // min/max stats skip every committed row group; a clean index reads
+    // ~no data). With a bucket table the check covers BOTH physical
+    // tails: the two appends run on overlapped lanes below, so a crash
+    // can leave either tail alone, and empty tails on both tables prove
+    // NO prior attempt wrote anything past `w`. The occupancy delta
+    // and the ledger row land strictly after both appends (lanes
+    // joined), so a pre-existing delta still implies torn = true and the
+    // replay presence probe still fires. The self-healing anti-joins and
+    // that probe stay skipped on the clean path (the overwhelmingly
+    // common one); only a genuinely torn or replayed batch pays for
+    // healing.
+    //
+    // PHYSICAL tables, never the tombstone-filtered views: a takedown
+    // landing between a torn crash and this replay can tombstone exactly
+    // the ids the crash wrote past `w`, and a filtered view would then
+    // read an empty tail — torn = false — and re-append their rows PLUS
+    // a second positive occupancy delta over physical rows the purge
+    // will subtract only once (occupancy drifts negative, caps
+    // over-admit). Replay/monotonicity machinery reads physical tables
+    // (the same invariant as the max-id and ledger bootstraps); the
+    // filtered views serve probe/committed semantics only.
+    val front = resolveBatchFront(b, idCol, batchId, indexPath, f.opName,
+      quarantine, physPrimary,
+      if (f.shards > 0)
+        Some(touchedShardsAgg(f.touched(b), f.keyCols, f.shards))
       else None,
-      physTail2 = Some(physBand))
+      physBuckets)
     if (front.violation.isDefined) {
       val stats = quarantineGovernedBatch(spark, b, indexPath, batchId,
         front, claimed)
       graft.plans.Checkpoints.free(b)
       return stats
     }
-    val replayed = front.replayed
     val w = front.w
-    val batchRows = front.batchRows
-    // The committed view of the index: everything a crashed attempt may
-    // have appended beyond the watermark is invisible. Shards carry over
-    // so the screen probe keeps its partition pruning.
-    val committed = MinHashIndex(ix.signatures.filter(col("id") <= lit(w)),
-      ix.bands.filter(col("id") <= lit(w)), p, ix.shards)
-
-    // TORN-TAIL CHECK — folded into the front job (row-group pruned:
-    // parquet min/max stats skip every committed row group; a clean
-    // index reads ~no data). The check covers BOTH physical tails
-    // (signatures AND bands, r20): the two appends run on overlapped
-    // lanes below, so a crash can leave either tail alone, and empty
-    // tails on BOTH tables prove NO prior attempt wrote anything past
-    // `w`. The occupancy delta and the ledger row land strictly after
-    // both appends (lanes joined), so a pre-existing delta still
-    // implies torn = true and the replay presence probe still fires.
-    // The self-healing anti-joins and that probe stay skipped on the
-    // clean path (the overwhelmingly common one); only a genuinely
-    // torn or replayed batch pays for healing.
-    //
-    // PHYSICAL table, never the tombstone-filtered `ix` view: a takedown
-    // landing between a torn crash and this replay can tombstone exactly
-    // the ids the crash wrote past `w`, and the filtered view would then
-    // read an empty tail — torn = false — and re-append their signature
-    // and band rows PLUS a second positive occupancy delta over physical
-    // rows the purge will subtract only once (occupancy drifts negative,
-    // caps over-admit). Replay/monotonicity machinery reads physical
-    // tables (the same invariant as the max-id and ledger bootstraps);
-    // the filtered view serves probe/committed semantics only.
-    val physSigTail = physSig.filter(col("id") > lit(w))
     val torn = front.torn
-
     // Touched shards of the WHOLE batch (collected in the front job) —
     // shared by the cross-index probe, the occupancy read and the
-    // band-tail filter. A superset of the novel rows' touched set —
+    // bucket-tail filter. A superset of the novel rows' touched set —
     // supersets only weaken pruning, never correctness.
     val touched = front.touched
     // Per-batch execution profile (restored by withPinnedPlan): the
-    // EXPANDED band-row estimate plus the on-disk size of the index
-    // slice the probe join will actually read (touched shards only)
-    // Legacy unsharded index: no partition dirs to prune, so the size
-    // probe would getContentSummary the WHOLE bands table every
-    // micro-batch — an O(index files) recursive metadata walk on the
-    // driver. Skip it (sentinel = assume over-ceiling): AQE stays on and
-    // the byte-based partition floor saturates, both the right calls for
-    // an unprunable full-index probe join.
-    tuneBatchExecution(spark, batchRows * p.bands,
-      if (ix.shards > 0)
-        dirBytes(spark, s"$indexPath/bands", touched.map(k => s"shard=$k"))
+    // EXPANDED row estimate plus the on-disk size of the index slice the
+    // probe join will actually read (touched shards only). Legacy
+    // unsharded index: no partition dirs to prune, so the size probe
+    // would getContentSummary the WHOLE table every micro-batch — an
+    // O(index files) recursive metadata walk on the driver. Skip it
+    // (sentinel = assume over-ceiling): AQE stays on and the byte-based
+    // partition floor saturates, both the right calls for an unprunable
+    // full-index probe join.
+    val probed = f.buckets.fold(f.primary)(_.table)
+    tuneBatchExecution(spark, front.batchRows * f.expansion,
+      if (f.shards > 0)
+        dirBytes(spark, s"$indexPath/$probed", touched.map(k => s"shard=$k"))
       else Long.MaxValue)
-
-    // Within-batch screen: greedy star rule — drop any doc with a
-    // SMALLER-id near-duplicate in the same batch (pairs carry
-    // id_a < id_b, so the drop set is exactly the distinct id_b side).
-    // Equivalent to the connected-component representative on
-    // clique-shaped duplicate groups (the overwhelmingly common case)
-    // but needs NO iterative label propagation: the CC variant chains
-    // O(component diameter) Spark jobs into EVERY micro-batch, ~1.5 s
-    // of the measured per-batch floor at the verify SF and unbounded
-    // on adversarial chains. On transitive chains star keeps every
-    // local minimum — per-pair near-dup semantics rather than cluster
-    // semantics, the right screen for dedup (distant chain members are
-    // not near-duplicates of each other). d6/d6b expose both semantics
-    // as batch operators; p1's pipeline routes through star too.
-    // eagerCap=false: the batch-sized skew cap stays lazy and folds into
-    // the `novel` checkpoint job instead of running its own count.
-    val withinDup = minHashNearDupPairs(b, idCol, textCol, p,
-        eagerCap = false)
-      .select(col("id_b").as(idCol)).distinct()
-    val crossDup = minHashNearDupPairsIncremental(b, committed, idCol,
-        textCol, p, if (ix.shards > 0) Some(touched) else None)
-      .select(col("batch_id").as(idCol)).distinct()
+    val (withinDup, crossDup) = f.screens(b, w, touched)
 
     // (1) Output: per-batch directory overwrite — replay-idempotent.
     // The output write IS the materialization of the whole screen DAG:
@@ -4543,127 +4628,130 @@ object Dedup {
     // of paying a separate localCheckpoint job + in-memory blocks for
     // rows that had to be written anyway.
     //
-    // coalesce SIZED TO THE BATCH (r19, guide §6 small files): without
-    // it the write inherits the batch scan's split count — dozens of
-    // tasks each writing a KB-scale file per micro-batch, tripling into
-    // the sig/band appends that read this table back (a small-files
-    // explosion compounding over a long-running stream). ~64k rows per
-    // output file, ceiling = the tuned per-batch shuffle partitions, so
-    // a corpus-scale batch keeps its write parallelism. The final stage
-    // above the coalesce is two broadcast anti-join probes — trivial
-    // per-row work, safe to narrow.
+    // coalesce SIZED TO THE BATCH (guide §6 small files): without it the
+    // write inherits the batch scan's split count — dozens of tasks each
+    // writing a KB-scale file per micro-batch, multiplying into the
+    // index appends that read this table back (a small-files explosion
+    // compounding over a long-running stream). ~64k rows per output
+    // file, ceiling = the tuned per-batch shuffle partitions, so a
+    // corpus-scale batch keeps its write parallelism. The final stage
+    // above the coalesce is two anti-join probes — trivial per-row work,
+    // safe to narrow.
     val novelOut = s"$outPath/batch_id=$batchId"
-    // OCCUPANCY LANE (r20, guide §2.6): the side-table read+checkpoint
-    // depends only on the front fold's touched set — never on the novel
-    // write — so it runs UNDER the novel write on a lane thread.
-    // (occupancy/ is not appended to until finishGovernedBatch, well
-    // after this lane is joined.)
-    val occF = laneSubmit {
-      (if (ix.shards > 0) readOccupancyRaw(spark, indexPath, Some(touched))
-       else committed.bands.groupBy(col("band"), col("bkey"))
+    // OCCUPANCY LANE (guide §2.6): the side-table read+checkpoint depends
+    // only on the front fold's touched set — never on the novel write —
+    // so it runs UNDER the novel write on a lane. (occupancy/ is not
+    // appended to until finishGovernedBatch, well after this lane is
+    // joined.) On a sharded index it reads the side table's RAW delta
+    // rows, shard-pruned to the buckets this batch can touch (O(batch),
+    // never O(index)), read ONCE and checkpointed, serving both the
+    // committed cap view (wm <= w) and, on a torn batch, the replay
+    // presence flag (wm == wAfter). A legacy unsharded index recomputes
+    // occupancy from the committed bucket table, in the same (occ, wm)
+    // shape.
+    val occF = f.buckets.map(s => laneSubmit {
+      (if (f.shards > 0) readOccupancyRaw(spark, indexPath, Some(touched))
+       else s.view.filter(col("id") <= lit(w))
+         .groupBy(f.keyCols.map(col): _*)
          .agg(count(lit(1)).as("occ")).withColumn("wm", lit(w)))
         .localCheckpoint()
-    }
-    var sigF: java.util.concurrent.Future[Unit] = null
+    })
+    var primaryF: java.util.concurrent.Future[Unit] = null
     try {
       b.join(withinDup, Seq(idCol), "left_anti")
         .join(crossDup, Seq(idCol), "left_anti")
-        .coalesce(batchShufflePartitions(batchRows,
+        .coalesce(batchShufflePartitions(front.batchRows,
           spark.conf.get("spark.sql.shuffle.partitions").toInt))
         .write.mode("overwrite").parquet(novelOut)
+      // The within-screen's own checkpoints (the SRP multi-probe cap's)
+      // are dead the moment the write lands — free them NOW; a production
+      // stream runs unbounded batches and cannot afford one leaked block
+      // set per micro-batch. freeExcept keeps the batch checkpoint `b`
+      // persisted BY CONSTRUCTION (it is also a leaf of this plan); `b`
+      // is released at the end of the batch.
+      graft.plans.Checkpoints.freeExcept(withinDup, b)
       val novel = spark.read.schema(b.schema).parquet(novelOut)
-      // Novel row count from the just-written footers (r20): a
-      // driver-side metadata read — parquet row counts are exact —
-      // replaces the count side of the late fold; falls back to the
-      // scan if any footer is unreadable.
+      // Novel row count from the just-written footers: a driver-side
+      // metadata read — parquet row counts are exact — instead of a
+      // count job; falls back to the scan if any footer is unreadable.
       val novelRows = graft.sources.MetaIO.rowCount(
           spark.sparkContext.hadoopConfiguration, novelOut)
         .getOrElse(novel.count())
 
-      // (2) Self-healing index append: derive the expected rows; on a
+      // (2) Self-healing index appends: derive the expected rows; on a
       // torn batch, append only what the physical tail is missing
-      // (anti-join); on the clean path (BOTH tails proven empty above)
+      // (anti-join); on the clean path (both tails proven empty above)
       // append directly. No checkpoint of its own: `novel` IS
-      // materialized (parquet staging) and the signature kernels are
-      // deterministic, so every consumer (signatures append, band
-      // derivation) sees identical rows. SIGNATURE LANE (r20): the
-      // append reads `novel` and writes signatures/ while the main
-      // thread derives the band chain from the same staging table — the
-      // two lanes touch disjoint tables, and the dual torn-tail check
-      // above removed the append-order proof obligation between them.
-      val newSigs = withMinHashSignature(novel, textCol, p)
-        .filter(size(col("shingles")) > 0)
-        .select(col(idCol).as("id"), col("shingles"),
-          size(col("shingles")).as("sz"), col("minhash"))
-      sigF = laneSubmit {
-        (if (torn)
-           // heal against the PHYSICAL tail (see the torn-check note):
-           // rows the crash wrote and a takedown since tombstoned are
-           // still on disk and must not be appended twice
-           newSigs.join(physSigTail.select("id"), Seq("id"), "left_anti")
-         else newSigs)
-          .write.mode("append").parquet(s"$indexPath/signatures")
+      // materialized (parquet staging) and the projections are
+      // deterministic, so every consumer (primary append, bucket
+      // derivation) sees identical rows.
+      val newPrimary = f.primaryRows(novel)
+      val primaryAppend =
+        if (torn)
+          newPrimary.join(physPrimary.filter(col("id") > lit(w)).select("id"),
+            Seq("id"), "left_anti")
+        else newPrimary
+      def appendPrimary(): Unit =
+        appendBucketRows(primaryAppend, indexPath, f.primary, f.keyCols,
+          f.primaryShards)
+      // PRIMARY LANE: with a bucket table, the primary append runs while
+      // this thread derives the bucket chain from the same staging table
+      // — the two touch disjoint tables, and the dual torn-tail check
+      // removed the append-order proof obligation between them. Without
+      // one there is nothing to overlap.
+      primaryF =
+        if (f.buckets.isEmpty)
+          java.util.concurrent.CompletableFuture.completedFuture(appendPrimary())
+        else laneSubmit(appendPrimary())
+      val keyed = "id" +: f.keyCols
+      val occupancy = f.buckets.zip(occF).map { case (s, occLane) =>
+        val occRaw = laneAwait(occLane)
+        val occ = occupancyAt(occRaw, f.keyCols, w)
+        val wB = Window.partitionBy(f.keyCols.map(col): _*)
+          .orderBy(col("id"))
+        // The full expected bucket set of this batch (checkpointed: it
+        // feeds the self-healing anti-join append AND the occupancy
+        // delta, and the two must describe the same rows).
+        val capped = s.rows(newPrimary)
+          .withColumn("__bn", row_number().over(wB))
+          .join(occ, f.keyCols, "left")
+          .filter(col("__bn") + coalesce(col("__occ"), lit(0L)) <= s.cap)
+          .select(keyed.map(col): _*)
+          .localCheckpoint()
+        val bucketAppend =
+          if (torn) {
+            // physical bucket tail, same reason as the primary heal
+            val tail = physBuckets.get.filter(col("id") > lit(w))
+            val tailPruned =
+              if (f.shards > 0) tail.filter(shardFilter(touched)) else tail
+            capped.join(tailPruned.select(keyed.map(col): _*), keyed,
+              "left_anti")
+          } else capped
+        appendBucketRows(bucketAppend, indexPath, s.table, f.keyCols,
+          f.shards)
+        (capped, bucketAppend, occRaw)
       }
-      val batchBands = newSigs
-        .select(col("id"), explode(bandStructs).as("bk"))
-        .select(col("id"), col("bk.band").as("band"),
-          col("bk.bkey").as("bkey"))
-      // Committed occupancy: on a sharded index from the side table's
-      // RAW delta rows (shard-pruned to the buckets this batch can
-      // touch, so the read is O(batch), never O(index)) — read ONCE,
-      // checkpointed, serving both the committed cap view (wm <= w)
-      // and, on a torn batch, the replay presence flag (wm == wAfter)
-      // with no second directory scan. The checkpoint also guarantees
-      // nothing downstream re-reads occupancy/ after this batch appends
-      // to it. Legacy unsharded index recomputes from committed bands,
-      // wrapped in the same (occ, wm) shape.
-      val occRaw = laneAwait(occF)
-      val occ = occupancyAt(occRaw, Seq("band", "bkey"), w)
-      val wB = Window.partitionBy(col("band"), col("bkey")).orderBy(col("id"))
-      // The full expected band set of this batch (checkpointed: it feeds
-      // the self-healing anti-join append AND the occupancy delta, and
-      // the two must describe the same rows).
-      val capped = batchBands
-        .withColumn("__bn", row_number().over(wB))
-        .join(occ, Seq("band", "bkey"), "left")
-        .filter(col("__bn") + coalesce(col("__occ"), lit(0L)) <= p.maxBucket)
-        .select("id", "band", "bkey")
-        .localCheckpoint()
-      val bandAppend =
-        if (torn) {
-          // physical band tail, same reason as the signature heal above
-          val tail = physBand.filter(col("id") > lit(w))
-          val tailPruned =
-            if (ix.shards > 0) tail.filter(shardFilter(touched)) else tail
-          capped.join(tailPruned.select("id", "band", "bkey"),
-            Seq("id", "band", "bkey"), "left_anti")
-        } else capped
-      appendBucketRows(bandAppend, indexPath, "bands", Seq("band", "bkey"),
-        ix.shards)
-
       // BOTH appends durable before the occupancy delta and the ledger
-      // commit marker — the lane join is the new form of the old
-      // append-order invariant.
-      laneAwait(sigF)
+      // commit marker — the lane join is the append-order invariant.
+      laneAwait(primaryF)
 
-      // LATE FOLD + occupancy delta + ledger commit — see
-      // finishGovernedBatch
-      val wAfter = front.wAfter
-      finishGovernedBatch(spark, indexPath, novelRows, capped,
-        bandAppend, occRaw, Seq("band", "bkey"), ix.shards, torn, w, wAfter,
-        replayed, claimed, batchId)
+      finishGovernedBatch(spark, indexPath, f, front, novelRows, occupancy,
+        claimed, batchId)
       // Takedown propagation: the overwrite above rewrote this batch's
       // output directory from the raw batch — while a tombstone is
       // pending, a replay must not resurrect rows scrubOutputs removed
       // from the served corpus. Zero jobs on the clean (no-tombstone)
       // path.
       scrubBatchOutput(spark, indexPath, outPath, batchId, idCol)
-      graft.plans.Checkpoints.free(occRaw)
-      graft.plans.Checkpoints.free(capped)
+      occupancy.foreach { case (capped, _, occRaw) =>
+        graft.plans.Checkpoints.free(occRaw)
+        graft.plans.Checkpoints.free(capped)
+      }
       graft.plans.Checkpoints.free(b)
-      IngestBatchStats(batchId, batchRows, novelRows, w, wAfter, replayed)
+      IngestBatchStats(batchId, front.batchRows, novelRows, w, front.wAfter,
+        front.replayed)
     } catch {
-      case e: Throwable => laneDrain(occF, sigF); throw e
+      case e: Throwable => laneDrain(occF.orNull, primaryF); throw e
     }
   }
 
@@ -4733,16 +4821,14 @@ object Dedup {
       s"could not commit $tmp -> $file (rename refused)")
   }
 
-  /** [[ingestBatchWithIndex]]'s twin for the persisted SRP EMBEDDING
-    * index: one governed micro-batch of embedding near-dup ingest,
-    * exactly once under crash/replay. Identical ledger mechanics (see
-    * [[ingestBatchWithIndex]] — watermark-filtered committed view,
-    * per-batch output overwrite, self-healing appends, ledger row
-    * commits last); the dedup semantics are the embedding family's:
-    * within-batch pairs via SRP-LSH UNDER THE INDEX'S OWN GEOMETRY
-    * (multi-probe on), cluster representative kept, survivors screened
-    * by the incremental index probe, exact-cosine verification
-    * everywhere. `StreamOps.indexedEmbeddingDedupStream` wraps this in
+  /** [[ingestBatchWithIndex]] for the persisted SRP EMBEDDING index: one
+    * governed micro-batch of embedding near-dup ingest, exactly once
+    * under crash/replay (the shared protocol — see [[governedBatch]]);
+    * the dedup semantics are the embedding family's: within-batch pairs
+    * via SRP-LSH UNDER THE INDEX'S OWN GEOMETRY (multi-probe on),
+    * cluster representative kept, survivors screened by the incremental
+    * index probe, exact-cosine verification everywhere.
+    * `StreamOps.indexedEmbeddingDedupStream` wraps this in
     * `foreachBatch`.
     */
   def ingestBatchWithSrpIndex(batch: DataFrame, idCol: String,
@@ -4750,184 +4836,53 @@ object Dedup {
                               outPath: String, batchId: Long,
                               threshold: Double,
                               quarantine: Boolean = false): IngestBatchStats =
-    withPinnedPlan(batch.sparkSession) {
-      ingestBatchWithSrpIndexImpl(batch, idCol, vecCol, indexPath, outPath,
-        batchId, threshold, quarantine)
-    }
+    withPinnedPlan(batch.sparkSession)(governedBatch(batch, idCol, indexPath,
+      outPath, batchId, quarantine,
+      srpFamily(batch.sparkSession, indexPath, idCol, vecCol, threshold)))
 
-  private def ingestBatchWithSrpIndexImpl(
-      batch: DataFrame, idCol: String, vecCol: String, indexPath: String,
-      outPath: String, batchId: Long, threshold: Double,
-      quarantine: Boolean): IngestBatchStats = {
-    val spark = batch.sparkSession
+  /** The SRP family: vectors + capped multi-table bucket table. */
+  private def srpFamily(spark: org.apache.spark.sql.SparkSession,
+                        indexPath: String, idCol: String, vecCol: String,
+                        threshold: Double): GovernedFamily = {
     GraftFunctions.register(spark)
     val ix = readSrpIndex(spark, indexPath)
-    val claimed = claimEpoch(spark, indexPath)
-
-    val b = batch.localCheckpoint()
-    val physVec = readIndexTable(spark, s"$indexPath/vectors")
-    val physBkt = readIndexTable(spark, s"$indexPath/buckets")
-    // FRONT FOLD — see resolveBatchFront: ledger driver-side, then ONE
-    // job for batch geometry × BOTH physical torn-tail counts × the
-    // touched shards of the batch's MULTI-PROBE bucket set (base + every
-    // Hamming-1 flip — a superset of the novel rows' base buckets, so
-    // pruning stays correct). The bucket tail joins the fold (r20) so
-    // the vector and bucket appends can run on overlapped lanes below.
-    val front = resolveBatchFront(b, idCol, batchId, indexPath,
-      "ingestBatchWithSrpIndex", quarantine, physVec,
-      if (ix.shards > 0) {
+    GovernedFamily("ingestBatchWithSrpIndex", "vectors", Seq("tbl", "bkt"),
+      ix.shards, primaryShards = 0, ix.tables * (1L + ix.planes),
+      // the batch's MULTI-PROBE bucket set (base + every Hamming-1 flip)
+      // — a superset of the novel rows' base buckets, so pruning stays
+      // correct
+      touched = b => {
         val flips = col("bkt") +: (0 until ix.planes).map(j =>
           col("bkt").bitwiseXOR(lit(1L << j)))
-        Some(touchedShardsAgg(
-          b.select(posexplode(GraftFunctions.srpBuckets(
-              col(vecCol).cast("array<float>"), ix.tables, ix.planes,
-              ix.dim)).as(Seq("tbl", "bkt")))
-            .select(col("tbl"), explode(array(flips: _*)).as("bkt")),
-          Seq("tbl", "bkt"), ix.shards))
-      } else None,
-      physTail2 = Some(physBkt))
-    if (front.violation.isDefined) {
-      val stats = quarantineGovernedBatch(spark, b, indexPath, batchId,
-        front, claimed)
-      graft.plans.Checkpoints.free(b)
-      return stats
-    }
-    val replayed = front.replayed
-    val w = front.w
-    val batchRows = front.batchRows
-    val committed = SrpIndex(ix.vectors.filter(col("id") <= lit(w)),
-      ix.buckets.filter(col("id") <= lit(w)),
-      ix.tables, ix.planes, ix.dim, ix.maxBucket, ix.shards)
-
-    // TORN-TAIL CHECK — folded into the front job, covering BOTH
-    // physical tails (vectors AND buckets, r20): the two appends run on
-    // overlapped lanes below, so a crash can leave either tail alone,
-    // and empty tails on BOTH tables prove the clean path (see the
-    // MinHash twin); row-group stats make this ~free on a clean index.
-    // PHYSICAL tables, not the tombstone-filtered `ix` view — a
-    // takedown of the crashed append's own ids must not mask the torn
-    // tail (see the MinHash twin's torn-check note for the full
-    // failure chain).
-    val physVecTail = physVec.filter(col("id") > lit(w))
-    val torn = front.torn
-    val touched = front.touched
-    // Per-batch execution profile (restored by withPinnedPlan): the
-    // EXPANDED multi-probe bucket-row estimate plus the on-disk size of
-    // the index slice the probe join will read (touched shards only)
-    // Unsharded legacy index: skip the whole-table metadata walk — see
-    // the MinHash twin's note at its tuneBatchExecution call.
-    tuneBatchExecution(spark, batchRows * ix.tables * (1L + ix.planes),
-      if (ix.shards > 0)
-        dirBytes(spark, s"$indexPath/buckets", touched.map(k => s"shard=$k"))
-      else Long.MaxValue)
-
-    // Greedy star within-batch screen — see ingestBatchWithIndex.
-    // eagerCap stays TRUE here, unlike the MinHash twin: the SRP screen's
-    // no-hot fast path (skip the window entirely) was measured worth
-    // ~12% of the whole p6 entry at sf0.1, while the MinHash screen was
-    // parity either way (its band rows are far narrower than the
-    // multi-probe bucket rows). The multi-probe checkpoint this implies
-    // is freed right after the output write below — no per-batch leak.
-    val withinDup = embeddingNearDupLsh(b, idCol, vecCol, threshold, ix.dim,
-        tables = ix.tables, planes = ix.planes, maxBucket = ix.maxBucket,
-        multiProbe = true, eagerCap = true)
-      .select(col("id_b").as(idCol)).distinct()
-    val crossDup = embeddingNearDupLshIncremental(b, committed, idCol,
-        vecCol, threshold, if (ix.shards > 0) Some(touched) else None)
-      .select(col("batch_id").as(idCol)).distinct()
-
-    // Output write = the screen DAG's one materialization; read straight
-    // back as the staging table; coalesce sized to the batch — see the
-    // MinHash twin's novel-write note (r19).
-    val novelOut = s"$outPath/batch_id=$batchId"
-    // OCCUPANCY LANE (r20) — see the MinHash twin: depends only on the
-    // front fold's touched set, runs UNDER the novel write.
-    val occF = laneSubmit {
-      (if (ix.shards > 0) readOccupancyRaw(spark, indexPath, Some(touched))
-       else committed.buckets.groupBy(col("tbl"), col("bkt"))
-         .agg(count(lit(1)).as("occ")).withColumn("wm", lit(w)))
-        .localCheckpoint()
-    }
-    var vecF: java.util.concurrent.Future[Unit] = null
-    try {
-      b.join(withinDup, Seq(idCol), "left_anti")
-        .join(crossDup, Seq(idCol), "left_anti")
-        .coalesce(batchShufflePartitions(batchRows,
-          spark.conf.get("spark.sql.shuffle.partitions").toInt))
-        .write.mode("overwrite").parquet(novelOut)
-      // The within-screen's multi-probe checkpoint is dead the moment the
-      // write lands (novel is parquet-backed from here on) — free its
-      // blocks NOW; a production stream runs unbounded batches and cannot
-      // afford one leaked block set per micro-batch. freeExcept keeps the
-      // batch checkpoint `b` persisted BY CONSTRUCTION (it is also a leaf
-      // of this plan), so a future edit that reads `b` after this point
-      // cannot hit missing blocks; `b` is released at the end of the batch.
-      graft.plans.Checkpoints.freeExcept(withinDup, b)
-      val novel = spark.read.schema(b.schema).parquet(novelOut)
-      // novel row count from the staging write's footers — see the
-      // MinHash twin (r20)
-      val novelRows = graft.sources.MetaIO.rowCount(
-          spark.sparkContext.hadoopConfiguration, novelOut)
-        .getOrElse(novel.count())
-
-      // Plain projection of the checkpointed `novel` — deterministic for
-      // both consumers (vector append, bucket derivation), no second
-      // materialization (see ingestBatchWithIndex's newSigs note).
-      // VECTOR LANE (r20) — see the MinHash twin's signature lane: the
-      // dual torn-tail check removed the append-order proof obligation.
-      val newVecs = novel.select(col(idCol).as("id"),
-          col(vecCol).cast("array<float>").as("v"))
-      vecF = laneSubmit {
-        (if (torn)
-           // physical-tail heal — see the MinHash twin
-           newVecs.join(physVecTail.select("id"), Seq("id"), "left_anti")
-         else newVecs)
-          .write.mode("append").parquet(s"$indexPath/vectors")
-      }
-      val batchBuckets = newVecs.select(col("id"),
-        posexplode(GraftFunctions.srpBuckets(col("v"), ix.tables, ix.planes,
-          ix.dim)).as(Seq("tbl", "bkt")))
-      val occRaw = laneAwait(occF)
-      val occ = occupancyAt(occRaw, Seq("tbl", "bkt"), w)
-      val wB = Window.partitionBy(col("tbl"), col("bkt")).orderBy(col("id"))
-      val capped = batchBuckets
-        .withColumn("__bn", row_number().over(wB))
-        .join(occ, Seq("tbl", "bkt"), "left")
-        .filter(col("__bn") + coalesce(col("__occ"), lit(0L)) <= ix.maxBucket)
-        .select("id", "tbl", "bkt")
-        .localCheckpoint()
-      val bucketAppend =
-        if (torn) {
-          // physical bucket tail — see the MinHash twin
-          val tail = physBkt.filter(col("id") > lit(w))
-          val tailPruned =
-            if (ix.shards > 0) tail.filter(shardFilter(touched)) else tail
-          capped.join(tailPruned.select("id", "tbl", "bkt"),
-            Seq("id", "tbl", "bkt"), "left_anti")
-        } else capped
-      appendBucketRows(bucketAppend, indexPath, "buckets", Seq("tbl", "bkt"),
-        ix.shards)
-
-      // BOTH appends durable before the occupancy delta and the ledger
-      // commit marker — see the MinHash twin.
-      laneAwait(vecF)
-
-      val wAfter = front.wAfter
-      // LATE FOLD + occupancy delta + ledger commit — see
-      // finishGovernedBatch
-      finishGovernedBatch(spark, indexPath, novelRows, capped,
-        bucketAppend, occRaw, Seq("tbl", "bkt"), ix.shards, torn, w, wAfter,
-        replayed, claimed, batchId)
-      // Takedown propagation to this batch's own output — see the
-      // MinHash twin.
-      scrubBatchOutput(spark, indexPath, outPath, batchId, idCol)
-      graft.plans.Checkpoints.free(occRaw)
-      graft.plans.Checkpoints.free(capped)
-      graft.plans.Checkpoints.free(b)
-      IngestBatchStats(batchId, batchRows, novelRows, w, wAfter, replayed)
-    } catch {
-      case e: Throwable => laneDrain(occF, vecF); throw e
-    }
+        b.select(posexplode(GraftFunctions.srpBuckets(
+            col(vecCol).cast("array<float>"), ix.tables, ix.planes,
+            ix.dim)).as(Seq("tbl", "bkt")))
+          .select(col("tbl"), explode(array(flips: _*)).as("bkt"))
+      },
+      screens = (b, w, touched) => {
+        val committed = SrpIndex(ix.vectors.filter(col("id") <= lit(w)),
+          ix.buckets.filter(col("id") <= lit(w)),
+          ix.tables, ix.planes, ix.dim, ix.maxBucket, ix.shards)
+        // Greedy star within-batch screen (see minHashFamily). eagerCap
+        // stays TRUE here, unlike the MinHash family: the SRP screen's
+        // no-hot fast path (skip the window entirely) was measured worth
+        // ~12% of the whole p6 entry at sf0.1, while the MinHash screen
+        // was parity either way (its band rows are far narrower than the
+        // multi-probe bucket rows). The multi-probe checkpoint this
+        // implies is freed right after the novel write.
+        (embeddingNearDupLsh(b, idCol, vecCol, threshold, ix.dim,
+            tables = ix.tables, planes = ix.planes, maxBucket = ix.maxBucket,
+            multiProbe = true, eagerCap = true)
+           .select(col("id_b").as(idCol)).distinct(),
+         embeddingNearDupLshIncremental(b, committed, idCol, vecCol,
+             threshold, if (ix.shards > 0) Some(touched) else None)
+           .select(col("batch_id").as(idCol)).distinct())
+      },
+      primaryRows = novel => novel.select(col(idCol).as("id"),
+        col(vecCol).cast("array<float>").as("v")),
+      buckets = Some(GovernedBuckets("buckets", ix.maxBucket, ix.buckets,
+        v => v.select(col("id"), posexplode(GraftFunctions.srpBuckets(
+          col("v"), ix.tables, ix.planes, ix.dim)).as(Seq("tbl", "bkt"))))))
   }
 
   // ---- persisted digest index: the EXACT-dedup governed family ----
@@ -5122,148 +5077,55 @@ object Dedup {
       Some(compactDigestIndex(spark, path, targetFileBytes))
     } else None
 
-  /** [[initIngestLedger]]'s twin for a persisted digest index — the
-    * base watermark comes from the physical digest table. */
-  def initDigestIngestLedger(spark: org.apache.spark.sql.SparkSession,
-                             indexPath: String): Unit = {
-    recoverCompaction(spark, indexPath)
-    readDigestIndex(spark, indexPath) // validates index + params
-    bootstrapLedger(spark, indexPath, "digests")
-  }
-
   /** One micro-batch of the governed EXACT-dedup loop — the digest
-    * family's [[ingestBatchWithIndex]]: same ledger/exactly-once
-    * mechanics (committed-watermark reads, per-batch output overwrite,
-    * self-healing appends against the PHYSICAL tail, ledger row commits
-    * last, quarantine divert on contract violations), with the family's
-    * screen semantics — within-batch min-id representative per digest,
-    * committed-index digest anti-join (shard-pruned). No occupancy or
-    * caps: exact dedup admits every novel digest.
+    * family's [[ingestBatchWithIndex]]: the shared exactly-once protocol
+    * ([[governedBatch]] — committed-watermark reads, per-batch output
+    * overwrite, self-healing appends against the PHYSICAL tail, ledger
+    * row commits last, quarantine divert on contract violations), with
+    * the family's screen semantics — within-batch min-id representative
+    * per digest, committed-index digest anti-join (shard-pruned). No
+    * occupancy or caps: exact dedup admits every novel digest.
     */
   def ingestBatchWithDigestIndex(batch: DataFrame, idCol: String,
                                  digCol: String, indexPath: String,
                                  outPath: String, batchId: Long,
                                  quarantine: Boolean = false)
       : IngestBatchStats =
-    withPinnedPlan(batch.sparkSession) {
-      ingestBatchWithDigestIndexImpl(batch, idCol, digCol, indexPath,
-        outPath, batchId, quarantine)
-    }
+    withPinnedPlan(batch.sparkSession)(governedBatch(batch, idCol, indexPath,
+      outPath, batchId, quarantine,
+      digestFamily(batch.sparkSession, indexPath, idCol, digCol)))
 
-  private def ingestBatchWithDigestIndexImpl(
-      batch: DataFrame, idCol: String, digCol: String, indexPath: String,
-      outPath: String, batchId: Long,
-      quarantine: Boolean): IngestBatchStats = {
-    val spark = batch.sparkSession
+  /** The digest family: one sharded (id, dig) table, no bucket table. */
+  private def digestFamily(spark: org.apache.spark.sql.SparkSession,
+                           indexPath: String, idCol: String,
+                           digCol: String): GovernedFamily = {
     val ix = readDigestIndex(spark, indexPath)
-    val claimed = claimEpoch(spark, indexPath)
-
-    val b = batch.localCheckpoint()
-    val physDig = readIndexTable(spark, s"$indexPath/digests")
-    val bd = b.select(col(idCol), col(digCol).cast("string").as("__dig"))
-      .filter(col("__dig").isNotNull)
-    // FRONT FOLD — see resolveBatchFront: ledger driver-side, then ONE
-    // job for batch geometry × physical torn-tail count × touched
-    // shards of the batch's digests.
-    val front = resolveBatchFront(b, idCol, batchId, indexPath,
-      "ingestBatchWithDigestIndex", quarantine, physDig,
-      Some(touchedShardsAgg(bd, Seq("__dig"), ix.shards)))
-    if (front.violation.isDefined) {
-      val stats = quarantineGovernedBatch(spark, b, indexPath, batchId,
-        front, claimed)
-      graft.plans.Checkpoints.free(b)
-      return stats
-    }
-    val replayed = front.replayed
-    val w = front.w
-    val batchRows = front.batchRows
-    // Committed view — tombstone-filtered (probes see the retained
-    // corpus) AND watermark-filtered (a crashed attempt's appends are
-    // invisible).
-    val committed = ix.digests.filter(col("id") <= lit(w))
-    // TORN-TAIL CHECK on the PHYSICAL table — folded into the front
-    // job; same invariant (and the same takedown-between-crash-and-
-    // replay hazard) as the MinHash twin: a row-group-pruned scan,
-    // ~free on a clean index.
-    val physTail = physDig.filter(col("id") > lit(w))
-    val torn = front.torn
-    val touched = front.touched
-    tuneBatchExecution(spark, batchRows,
-      dirBytes(spark, s"$indexPath/digests", touched.map(k => s"shard=$k")))
-
-    // Within-batch screen: min-id representative per digest (the exact
-    // family's greedy star — every duplicate group is a clique).
-    val mins = bd.groupBy(col("__dig")).agg(min(col(idCol)).as("__min_id"))
-    val withinDup = bd.join(mins, Seq("__dig"))
-      .filter(col(idCol) =!= col("__min_id")).select(col(idCol))
-    // Committed screen: shard-pruned digest anti-join.
-    val crossDup = bd.join(
-        committed.filter(shardFilter(touched))
-          .select(col("dig").as("__dig")),
-        Seq("__dig"), "left_semi")
-      .select(col(idCol))
-
-    // (1) Output: per-batch directory overwrite — replay-idempotent;
-    // doubles as the staging materialization; coalesce sized to the
-    // batch — see the MinHash twin's novel-write note (r19).
-    val novelOut = s"$outPath/batch_id=$batchId"
-    b.join(withinDup, Seq(idCol), "left_anti")
-      .join(crossDup, Seq(idCol), "left_anti")
-      .coalesce(batchShufflePartitions(batchRows,
-        spark.conf.get("spark.sql.shuffle.partitions").toInt))
-      .write.mode("overwrite").parquet(novelOut)
-    val novel = spark.read.schema(b.schema).parquet(novelOut)
-
-    // (2) Self-healing append: on a torn batch, append only the rows the
-    // physical tail is missing.
-    val newRows = novel.filter(col(digCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"),
-        col(digCol).cast("string").as("dig"))
-    appendBucketRows(
-      if (torn) newRows.join(physTail.select("id"), Seq("id"), "left_anti")
-      else newRows,
-      indexPath, "digests", Seq("dig"), ix.shards)
-
-    // (3) Ledger row LAST — the commit marker, under the epoch re-check.
-    // Novel row count from the staging write's parquet footers (r20):
-    // a driver-side metadata read — exact by format — replaces the
-    // count job; falls back to the scan if any footer is unreadable.
-    val novelRows = graft.sources.MetaIO.rowCount(
-        spark.sparkContext.hadoopConfiguration, novelOut)
-      .getOrElse(novel.count())
-    val wAfter = front.wAfter
-    if (!replayed) {
-      requireEpoch(spark, indexPath, claimed)
-      commitLedgerRow(spark, indexPath, batchId, w, wAfter, novelRows)
-    }
-    // Takedown propagation to this batch's own output — see the
-    // MinHash twin.
-    scrubBatchOutput(spark, indexPath, outPath, batchId, idCol)
-    graft.plans.Checkpoints.free(b)
-    IngestBatchStats(batchId, batchRows, novelRows, w, wAfter, replayed)
-  }
-
-  /** [[redriveQuarantined]]'s twin for the governed digest loop
-    * (pending takedowns honored the same way). */
-  def redriveQuarantinedDigest(spark: org.apache.spark.sql.SparkSession,
-                               indexPath: String, outPath: String,
-                               batchId: Long, idCol: String,
-                               digCol: String,
-                               repair: DataFrame => DataFrame = identity)
-      : IngestBatchStats = {
-    val dir = quarantinedBatchDir(indexPath, batchId)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverScrubLeftovers(fs, quarantineDir(indexPath)) // see MinHash twin
-    require(fs.exists(dir),
-      s"redriveQuarantinedDigest: no quarantined batch $batchId at $dir")
-    requireQuarantineLedgerRow(spark, indexPath, batchId,
-      "redriveQuarantinedDigest")
-    val stats = ingestBatchWithDigestIndex(
-      repair(liveQuarantinedRows(spark, indexPath, dir, idCol)), idCol,
-      digCol, indexPath, outPath, batchId, quarantine = false)
-    require(fs.delete(dir, true),
-      s"redriveQuarantinedDigest: could not remove $dir after the commit")
-    stats
+    def digests(df: DataFrame) =
+      df.select(col(idCol), col(digCol).cast("string").as("dig"))
+        .filter(col("dig").isNotNull)
+    // digest indexes are always sharded (writeDigestIndex requires it),
+    // so the core always prunes the probe and measures its slice
+    GovernedFamily("ingestBatchWithDigestIndex", "digests", Seq("dig"),
+      ix.shards, primaryShards = ix.shards, 1L,
+      touched = digests,
+      screens = (b, w, touched) => {
+        val bd = digests(b)
+        // Within-batch screen: min-id representative per digest (the
+        // exact family's greedy star — every duplicate group is a clique).
+        val mins = bd.groupBy(col("dig")).agg(min(col(idCol)).as("__min_id"))
+        (bd.join(mins, Seq("dig"))
+           .filter(col(idCol) =!= col("__min_id")).select(col(idCol)),
+         // Committed screen: shard-pruned digest semi-join against the
+         // tombstone- and watermark-filtered index.
+         bd.join(ix.digests.filter(col("id") <= lit(w))
+             .filter(shardFilter(touched)).select(col("dig")),
+           Seq("dig"), "left_semi")
+           .select(col(idCol)))
+      },
+      primaryRows = novel => novel.filter(col(digCol).isNotNull)
+        .select(col(idCol).cast("long").as("id"),
+          col(digCol).cast("string").as("dig")),
+      buckets = None)
   }
 
   // ---- cross-shard duplicate reconciliation (multi-stream scale-out) --

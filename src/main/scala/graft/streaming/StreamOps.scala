@@ -144,27 +144,29 @@ object StreamOps {
     * its own size — zero corpus text reads — and the index grows with
     * the accepted stream.
     *
+    * `quarantine = true`: a contract-violating batch (non-monotone /
+    * non-castable ids) diverts whole to `<indexPath>/quarantine/batch_id=N`
+    * and the stream CONTINUES (its ledger row carries `novel_rows = -1`);
+    * the default stays fail-loud.
+    *
     * FILE-COUNT HYGIENE: every committed batch appends one file set per
     * table plus a ledger row, an occupancy delta and epoch claims — an
     * unattended long-running stream decays into a small-files swamp.
-    * `compactEvery = N` folds the index in-loop after every Nth
-    * COMMITTED batch via [[graft.operators.Dedup.compactSignatureIndex]]
-    * — safe exactly BECAUSE it runs between `foreachBatch` invocations
-    * of the serial stream (no batch in flight) and under the index's
-    * epoch fence (the compaction advances the epoch; a concurrent
-    * maintenance job would abort, not corrupt). Replays skip it (a
-    * replayed batch must see the index generation its first attempt
-    * saw). A crash inside the compaction's directory swap self-heals:
-    * stream open runs [[graft.operators.Dedup.recoverCompaction]], which
-    * restores a table left stranded in `__compacting_<sub>` before the
-    * first batch reads the index. 0 = never (run compaction from a
-    * maintenance job instead). `autoCompact = true` replaces the blind
-    * every-Nth dial with the MEASURED trigger
-    * ([[graft.operators.Dedup.autoCompactSignatureIndex]]): one flat
-    * directory listing per committed batch, compaction only when the
-    * index has actually decayed ≥ the fragmentation factor (or pending
-    * deletes await physical reclamation) — a fragmented stream
-    * self-compacts, an un-fragmented one never churns.
+    * `autoCompact = true` folds the index in-loop with the MEASURED
+    * trigger ([[graft.operators.Dedup.autoCompactSignatureIndex]]): one
+    * flat directory listing per committed batch, compaction only when
+    * the index has actually decayed ≥ the fragmentation factor (or
+    * pending deletes await physical reclamation) — a fragmented stream
+    * self-compacts, an un-fragmented one never churns. Safe exactly
+    * BECAUSE it runs between `foreachBatch` invocations of the serial
+    * stream (no batch in flight) and under the index's epoch fence (the
+    * compaction advances the epoch; a concurrent maintenance job would
+    * abort, not corrupt). Replays skip it (a replayed batch must see the
+    * index generation its first attempt saw). A crash inside the
+    * compaction's directory swap self-heals: stream open runs
+    * [[graft.operators.Dedup.recoverCompaction]], which restores a table
+    * left stranded in `__compacting_<sub>` before the first batch reads
+    * the index. Off = run compaction from a maintenance job instead.
     *
     * SCALE-OUT (multi-stream deployment pattern, PLANS.md
     * "multi-stream ingest scale-out"): one governed stream is serial by
@@ -186,23 +188,92 @@ object StreamOps {
                          indexPath: String, outPath: String,
                          checkpoint: String,
                          trigger: Trigger = Trigger.AvailableNow(),
-                         compactEvery: Int = 0,
                          autoCompact: Boolean = false,
                          quarantine: Boolean = false)
       : StreamingQuery = {
     graft.operators.Dedup.initIngestLedger(spark, indexPath)
+    governedStream(spark, inPath, schema, idCol, indexPath, outPath,
+      checkpoint, trigger, autoCompact)(
+      graft.operators.Dedup.ingestBatchWithIndex(_, idCol, textCol,
+        indexPath, outPath, _, quarantine),
+      () => graft.operators.Dedup.autoCompactSignatureIndex(spark,
+        indexPath).isDefined)
+  }
+
+  /** [[indexedDedupStream]] for EMBEDDING near-dup over a persisted SRP
+    * index: the same governed loop
+    * (`graft.operators.Dedup.ingestBatchWithSrpIndex` — ledger-governed,
+    * exactly-once, self-healing appends), with the dedup semantics of
+    * the embedding family (SRP-LSH candidates under the index's own
+    * geometry, exact-cosine verification at `threshold`).
+    */
+  def indexedEmbeddingDedupStream(spark: SparkSession, inPath: String,
+                                  schema: org.apache.spark.sql.types.StructType,
+                                  idCol: String, vecCol: String,
+                                  indexPath: String, outPath: String,
+                                  checkpoint: String, threshold: Double,
+                                  trigger: Trigger = Trigger.AvailableNow(),
+                                  autoCompact: Boolean = false,
+                                  quarantine: Boolean = false)
+      : StreamingQuery = {
+    graft.operators.Dedup.initSrpIngestLedger(spark, indexPath)
+    governedStream(spark, inPath, schema, idCol, indexPath, outPath,
+      checkpoint, trigger, autoCompact)(
+      graft.operators.Dedup.ingestBatchWithSrpIndex(_, idCol, vecCol,
+        indexPath, outPath, _, threshold, quarantine),
+      () => graft.operators.Dedup.autoCompactSrpIndex(spark,
+        indexPath).isDefined)
+  }
+
+  /** [[indexedDedupStream]] for EXACT dedup over a persisted digest
+    * index — the governed media-ingest loop (content digests, URLs,
+    * checksums): the same governed loop
+    * (`graft.operators.Dedup.ingestBatchWithDigestIndex` — exactly-once
+    * under crash/replay, quarantine divert, ≤1-batch takedown scrub
+    * latency, in-loop compaction), with the exact family's screen
+    * semantics (within-batch min-id representative per digest,
+    * committed-index digest anti-join). The index stores (id, digest)
+    * rows only, so a 100 TB media stream carries ~72 bytes of index
+    * per object regardless of payload size.
+    */
+  def indexedDigestDedupStream(spark: SparkSession, inPath: String,
+                               schema: org.apache.spark.sql.types.StructType,
+                               idCol: String, digCol: String,
+                               indexPath: String, outPath: String,
+                               checkpoint: String,
+                               trigger: Trigger = Trigger.AvailableNow(),
+                               autoCompact: Boolean = false,
+                               quarantine: Boolean = false)
+      : StreamingQuery = {
+    graft.operators.Dedup.initDigestIngestLedger(spark, indexPath)
+    governedStream(spark, inPath, schema, idCol, indexPath, outPath,
+      checkpoint, trigger, autoCompact)(
+      graft.operators.Dedup.ingestBatchWithDigestIndex(_, idCol, digCol,
+        indexPath, outPath, _, quarantine),
+      () => graft.operators.Dedup.autoCompactDigestIndex(spark,
+        indexPath).isDefined)
+  }
+
+  /** The `foreachBatch` loop shared by the governed dedup streams:
+    * `ingest` runs one family's governed batch, `compact` its measured
+    * compaction trigger (true = the index was compacted). Per batch:
+    * ingest, its audit stats row, then — committed batches only — the
+    * takedown-scrub gate and, with `autoCompact`, compaction. */
+  private def governedStream(spark: SparkSession, inPath: String,
+                             schema: org.apache.spark.sql.types.StructType,
+                             idCol: String, indexPath: String,
+                             outPath: String, checkpoint: String,
+                             trigger: Trigger, autoCompact: Boolean)
+                            (ingest: (DataFrame, Long) =>
+                               graft.operators.Dedup.IngestBatchStats,
+                             compact: () => Boolean): StreamingQuery = {
     // The tombstone file set the last in-loop scrub propagated (stream
     // closure state; lost on restart = one redundant idempotent scrub).
     var scrubbedTombs = Set.empty[String]
     spark.readStream.schema(schema).parquet(inPath)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // quarantine = true: a contract-violating batch (non-monotone /
-        // non-castable ids) diverts whole to
-        // <indexPath>/quarantine/batch_id=N and the stream CONTINUES
-        // (ledger row carries novel_rows = -1); default stays fail-loud.
-        val stats = graft.operators.Dedup.ingestBatchWithIndex(
-          batch, idCol, textCol, indexPath, outPath, batchId, quarantine)
+        val stats = ingest(batch, batchId)
         // per-batch audit row (novel/dup rates) — idempotent on replay
         graft.operators.Dedup.appendIngestStats(spark, indexPath, stats)
         if (!stats.replayed) {
@@ -221,127 +292,7 @@ object StreamOps {
             graft.operators.Dedup.scrubQuarantined(spark, indexPath, idCol)
             scrubbedTombs = pending
           }
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-            graft.operators.Dedup.compactSignatureIndex(spark, indexPath)
-            scrubbedTombs = Set.empty
-          } else if (autoCompact) {
-            if (graft.operators.Dedup
-                .autoCompactSignatureIndex(spark, indexPath).isDefined)
-              scrubbedTombs = Set.empty
-          }
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-  }
-
-  /** [[indexedDedupStream]]'s twin for EMBEDDING near-dup over a
-    * persisted SRP index: same governed `foreachBatch` loop
-    * (`graft.operators.Dedup.ingestBatchWithSrpIndex` — ledger-governed,
-    * exactly-once, self-healing appends), with the dedup semantics of
-    * the embedding family (SRP-LSH candidates under the index's own
-    * geometry, exact-cosine verification at `threshold`).
-    */
-  def indexedEmbeddingDedupStream(spark: SparkSession, inPath: String,
-                                  schema: org.apache.spark.sql.types.StructType,
-                                  idCol: String, vecCol: String,
-                                  indexPath: String, outPath: String,
-                                  checkpoint: String, threshold: Double,
-                                  trigger: Trigger = Trigger.AvailableNow(),
-                                  compactEvery: Int = 0,
-                                  autoCompact: Boolean = false,
-                                  quarantine: Boolean = false)
-      : StreamingQuery = {
-    graft.operators.Dedup.initSrpIngestLedger(spark, indexPath)
-    // last-scrubbed tombstone set — see indexedDedupStream
-    var scrubbedTombs = Set.empty[String]
-    spark.readStream.schema(schema).parquet(inPath)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val stats = graft.operators.Dedup.ingestBatchWithSrpIndex(
-          batch, idCol, vecCol, indexPath, outPath, batchId, threshold,
-          quarantine)
-        graft.operators.Dedup.appendIngestStats(spark, indexPath, stats)
-        // in-loop compaction between serial batches, epoch-fenced — see
-        // indexedDedupStream; autoCompact = the measured trigger
-        if (!stats.replayed) {
-          // ≤1-batch takedown propagation + scrub-before-purge by
-          // construction — see indexedDedupStream
-          val pending =
-            graft.operators.Dedup.pendingTombstoneFiles(spark, indexPath)
-          if (pending.nonEmpty && pending != scrubbedTombs) {
-            graft.operators.Dedup.scrubOutputs(spark, indexPath, outPath,
-              idCol)
-            graft.operators.Dedup.scrubQuarantined(spark, indexPath, idCol)
-            scrubbedTombs = pending
-          }
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-            graft.operators.Dedup.compactSrpIndex(spark, indexPath)
-            scrubbedTombs = Set.empty
-          } else if (autoCompact) {
-            if (graft.operators.Dedup
-                .autoCompactSrpIndex(spark, indexPath).isDefined)
-              scrubbedTombs = Set.empty
-          }
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-  }
-
-  /** [[indexedDedupStream]]'s twin for EXACT dedup over a persisted
-    * digest index — the governed media-ingest loop (content digests,
-    * URLs, checksums): same ledger-governed `foreachBatch` core
-    * (`graft.operators.Dedup.ingestBatchWithDigestIndex` — exactly-once
-    * under crash/replay, quarantine divert, ≤1-batch takedown scrub
-    * latency, in-loop compaction), with the exact family's screen
-    * semantics (within-batch min-id representative per digest,
-    * committed-index digest anti-join). The index stores (id, digest)
-    * rows only, so a 100 TB media stream carries ~72 bytes of index
-    * per object regardless of payload size.
-    */
-  def indexedDigestDedupStream(spark: SparkSession, inPath: String,
-                               schema: org.apache.spark.sql.types.StructType,
-                               idCol: String, digCol: String,
-                               indexPath: String, outPath: String,
-                               checkpoint: String,
-                               trigger: Trigger = Trigger.AvailableNow(),
-                               compactEvery: Int = 0,
-                               autoCompact: Boolean = false,
-                               quarantine: Boolean = false)
-      : StreamingQuery = {
-    graft.operators.Dedup.initDigestIngestLedger(spark, indexPath)
-    // last-scrubbed tombstone set — see indexedDedupStream
-    var scrubbedTombs = Set.empty[String]
-    spark.readStream.schema(schema).parquet(inPath)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val stats = graft.operators.Dedup.ingestBatchWithDigestIndex(
-          batch, idCol, digCol, indexPath, outPath, batchId, quarantine)
-        graft.operators.Dedup.appendIngestStats(spark, indexPath, stats)
-        if (!stats.replayed) {
-          // ≤1-batch takedown propagation + scrub-before-purge by
-          // construction — see indexedDedupStream
-          val pending =
-            graft.operators.Dedup.pendingTombstoneFiles(spark, indexPath)
-          if (pending.nonEmpty && pending != scrubbedTombs) {
-            graft.operators.Dedup.scrubOutputs(spark, indexPath, outPath,
-              idCol)
-            graft.operators.Dedup.scrubQuarantined(spark, indexPath, idCol)
-            scrubbedTombs = pending
-          }
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-            graft.operators.Dedup.compactDigestIndex(spark, indexPath)
-            scrubbedTombs = Set.empty
-          } else if (autoCompact) {
-            if (graft.operators.Dedup
-                .autoCompactDigestIndex(spark, indexPath).isDefined)
-              scrubbedTombs = Set.empty
-          }
+          if (autoCompact && compact()) scrubbedTombs = Set.empty
         }
         ()
       }

@@ -1,0 +1,159 @@
+package graft.operators
+
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.SparkSpec
+
+/** Fixed cost of one governed micro-batch, per index family: the Spark
+  * jobs a clean batch submits are pinned, so a change that adds a job to
+  * any family's path fails here. Jobs are counted through the batch's
+  * job group (`statusTracker.getJobIdsForGroup`) and cross-checked
+  * against a listener that sees every job, so a job that escapes the
+  * group — a lane thread tagged with an earlier batch's properties —
+  * fails too.
+  */
+class GovernedBatchJobsSpec extends SparkSpec {
+  import GovernedBatchJobsSpec.Family
+  import spark.implicits._
+
+  private val sc = spark.sparkContext
+
+  /** (job id, job group) of every job the scheduler starts. */
+  private object Jobs extends SparkListener {
+    val seen = new ConcurrentLinkedQueue[(Int, String)]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      seen.add(e.jobId -> Option(e.properties)
+        .map(_.getProperty("spark.jobGroup.id")).orNull)
+  }
+  sc.addSparkListener(Jobs)
+
+  private var settles = 0
+
+  /** Wait until both the listener and the status store have seen every
+    * job submitted so far: a sentinel job is posted after them, and each
+    * listener queue delivers in order. */
+  private def settle(): Unit = {
+    settles += 1
+    val tag = s"settle-$settles"
+    sc.setJobGroup(tag, "settle")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.currentTimeMillis + 30000
+    def done = Jobs.seen.asScala.exists(_._2 == tag) &&
+      sc.statusTracker.getJobIdsForGroup(tag).nonEmpty
+    while (!done && System.currentTimeMillis < deadline) Thread.sleep(20)
+    assert(done, "listener bus did not drain")
+  }
+
+  /** Run `body` under job group `group`; returns (the groups of every job
+    * started meanwhile, the job count the status store files under
+    * `group`). */
+  private def underGroup(group: String)(body: => Any)
+      : (Seq[String], Int) = {
+    settle()
+    val before = Jobs.seen.size
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    settle()
+    val started = Jobs.seen.asScala.toSeq.drop(before)
+      .map(_._2).filterNot(_.startsWith("settle-"))
+    (started, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  private def rmrf(dir: String): Unit = {
+    import scala.reflect.io.Directory
+    new Directory(new java.io.File(dir)).deleteRecursively()
+  }
+
+  private val p = Dedup.MinHashParams(numHashes = 32, bands = 8,
+    shingle = 3, threshold = 0.2)
+  private def fam(i: Long) =
+    "alpha bravo charlie delta echo foxtrot golf hotel india juliet " +
+      s"kilo lima mike november oscar papa quebec romeo sierra tail$i"
+  private def uniq(i: Long) =
+    (0 until 8).map(j => s"unique${i}tok$j").mkString(" ")
+
+  private val dim = 8
+  private def vec(axis: Int, i: Long): Seq[Float] =
+    (0 until dim).map(j => if (j == axis) 1f
+      else if (j == axis + 1) 0.02f * ((i % 7) + 1) else 0f)
+  private def vecs(rows: (Long, Seq[Float])*): DataFrame =
+    rows.toDF("vec_id", "embedding")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+
+  private def objs(rows: (Long, String)*): DataFrame =
+    rows.toDF("id", "dig").withColumn("payload", concat(lit("o-"), col("dig")))
+
+  private val families = Seq(
+    Family("minhash", jobs = 21,
+      ix => {
+        Dedup.writeSignatureIndex(Seq(0L -> fam(0), 1L -> uniq(1))
+          .toDF("doc_id", "text"), "doc_id", "text", ix, p)
+        Dedup.initIngestLedger(spark, ix)
+      },
+      (b, ix, out, id) =>
+        Dedup.ingestBatchWithIndex(b, "doc_id", "text", ix, out, id),
+      () => Seq(10L -> uniq(10), 11L -> uniq(11)).toDF("doc_id", "text"),
+      () => Seq(20L -> fam(20), 21L -> uniq(21), 22L -> uniq(21),
+        23L -> uniq(23)).toDF("doc_id", "text")),
+    Family("srp", jobs = 24,
+      ix => {
+        Dedup.writeSrpIndex(vecs(0L -> vec(0, 0), 1L -> vec(2, 1)),
+          "vec_id", "embedding", ix, dim)
+        Dedup.initSrpIngestLedger(spark, ix)
+      },
+      (b, ix, out, id) => Dedup.ingestBatchWithSrpIndex(b, "vec_id",
+        "embedding", ix, out, id, threshold = 0.4),
+      () => vecs(10L -> vec(4, 10), 11L -> vec(6, 11)),
+      () => vecs(20L -> vec(0, 20), 21L -> vec(5, 21), 22L -> vec(5, 22),
+        23L -> vec(7, 23))),
+    Family("digest", jobs = 13,
+      ix => {
+        Dedup.writeDigestIndex(objs((0L, "d0"), (1L, "d1")), "id", "dig", ix)
+        Dedup.initDigestIngestLedger(spark, ix)
+      },
+      (b, ix, out, id) =>
+        Dedup.ingestBatchWithDigestIndex(b, "id", "dig", ix, out, id),
+      () => objs((10L, "e10"), (11L, "e11")),
+      () => objs((20L, "d0"), (21L, "e21"), (22L, "e21"), (23L, "e23"))))
+
+  families.foreach { f =>
+    test(s"${f.name}: a clean governed batch runs a pinned number of " +
+        "Spark jobs, every one under the batch's job group") {
+      val base = Files.createTempDirectory(s"graft-jobs-${f.name}").toString
+      val ix = s"$base/ix"; val out = s"$base/out"
+      try {
+        f.build(ix)
+        // batch 0 runs under its own group first: any lane thread it
+        // leaves behind carries that group, not batch 1's
+        underGroup(s"${f.name}-0")(f.ingest(f.batch0(), ix, out, 0L))
+        val (started, grouped) =
+          underGroup(s"${f.name}-1")(f.ingest(f.batch1(), ix, out, 1L))
+        assert(started.forall(_ == s"${f.name}-1"),
+          s"jobs of batch 1 ran under other groups: ${started.mkString(", ")}")
+        assert(grouped == f.jobs,
+          s"${f.name}: a clean governed batch ran $grouped Spark jobs, " +
+            s"pinned ${f.jobs}")
+      } finally rmrf(base)
+    }
+  }
+}
+
+object GovernedBatchJobsSpec {
+
+  /** One index family: how to build its index and ledger, how to ingest
+    * one governed batch, two clean batches (the second has within-batch
+    * and cross-index duplicates), and its pinned jobs per clean batch. */
+  final case class Family(name: String, jobs: Int,
+                          build: String => Unit,
+                          ingest: (DataFrame, String, String, Long) =>
+                            Dedup.IngestBatchStats,
+                          batch0: () => DataFrame,
+                          batch1: () => DataFrame)
+}

@@ -456,8 +456,9 @@ class ZOrderSpec extends SparkSpec {
         "append manifest not folded")
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$lay/_zappend_stage")),
         "append stage not dropped")
-      val wantC = (want.keySet ++ bag(sliceC).keySet).map(k =>
-        k -> (want.getOrElse(k, 0) + bag(sliceC).getOrElse(k, 0))).toMap
+      val bagC = bag(sliceC) // collected once, not once per key
+      val wantC = (want.keySet ++ bagC.keySet).map(k =>
+        k -> (want.getOrElse(k, 0) + bagC.getOrElse(k, 0))).toMap
       assert(bag(spark.read.parquet(lay)) == wantC,
         "rolled-forward batch rows missing or duplicated")
       // and batch 7 is now committed: a replay is a no-op

@@ -120,8 +120,7 @@ class IndexedDedupStreamSpec extends SparkSpec {
   }
 
   test("a takedown reaches the served corpus on the NEXT committed " +
-      "batch — bounded latency, no compaction needed (compactEvery " +
-      "never fires)") {
+      "batch — bounded latency, no compaction needed") {
     val base = Files.createTempDirectory("graft-ixscrub-latency").toString
     val in = s"$base/in"; val out = s"$base/out"; val cp = s"$base/cp"
     val ix = s"$base/ix"
@@ -130,16 +129,16 @@ class IndexedDedupStreamSpec extends SparkSpec {
       Seq(100L -> uniq(100), 101L -> uniq(101)).toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(in)
       StreamOps.indexedDedupStream(spark, in, schema, "doc_id", "text",
-        ix, out, cp, compactEvery = 100).awaitTermination(120000)
+        ix, out, cp).awaitTermination(120000)
       assert(outIds(out) == Set(100L, 101L))
 
-      // takedown while the stream is down; the compaction dial is far
-      // from firing, so only the pending-set scrub gate can propagate it
+      // takedown while the stream is down; the stream never compacts, so
+      // only the pending-set scrub gate can propagate it
       Dedup.deleteFromSignatureIndex(spark, ix, Seq(100L))
       Seq(200L -> uniq(200)).toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(in)
       StreamOps.indexedDedupStream(spark, in, schema, "doc_id", "text",
-        ix, out, cp, compactEvery = 100).awaitTermination(120000)
+        ix, out, cp).awaitTermination(120000)
       assert(outIds(out) == Set(101L, 200L),
         "the takedown'd doc must leave the SERVED corpus on the next " +
           "committed batch, not wait for a compaction")
@@ -395,7 +394,7 @@ class IndexedDedupStreamSpec extends SparkSpec {
     } finally rmrf(base)
   }
 
-  test("in-loop compaction (compactEvery) loses no rows and keeps replay " +
+  test("in-loop compaction (autoCompact) loses no rows and keeps replay " +
       "governance across a restart") {
     val base = Files.createTempDirectory("graft-ixautocpt").toString
     val in = s"$base/in"; val out = s"$base/out"; val cp = s"$base/cp"
@@ -406,33 +405,46 @@ class IndexedDedupStreamSpec extends SparkSpec {
         else Option(f.listFiles()).map(_.map(rec).sum).getOrElse(0)
       rec(new java.io.File(s"$ix/$sub"))
     }
+    // corpus plus a second unique doc, so each run can take down a doc
+    // whose family no batch uses
+    val corpus4 = corpus.union(Seq(4L -> uniq(4)).toDF("doc_id", "text"))
     try {
-      Dedup.writeSignatureIndex(corpus, "doc_id", "text", ix, p)
+      Dedup.writeSignatureIndex(corpus4, "doc_id", "text", ix, p)
 
-      // batch 0 through a compacting stream (compactEvery = 1: compaction
-      // fires after EVERY committed batch — the most adversarial cadence)
+      // batch 0 through a compacting stream. A pending takedown forces
+      // the measured trigger, so compaction fires after EVERY committed
+      // batch — the most adversarial cadence. The deleted corpus docs
+      // (3 and 4) share no family with either batch.
+      Dedup.deleteFromSignatureIndex(spark, ix, Seq(3L))
       batch1.coalesce(1).write.mode("append").parquet(in)
       val q1 = StreamOps.indexedDedupStream(spark, in, schema, "doc_id",
-        "text", ix, out, cp, compactEvery = 1)
+        "text", ix, out, cp, autoCompact = true)
       q1.awaitTermination(120000)
+      assert(Dedup.listTombstoneFiles(spark, ix).isEmpty,
+        "the pending takedown did not trigger the in-loop compaction")
       val sigFilesAfterCpt = files("signatures")
 
       // batch 1 through a RESTARTED stream on the same checkpoint — the
       // restart must read the POST-compaction index generation cleanly
+      Dedup.deleteFromSignatureIndex(spark, ix, Seq(4L))
       batch2.coalesce(1).write.mode("append").parquet(in)
       val q2 = StreamOps.indexedDedupStream(spark, in, schema, "doc_id",
-        "text", ix, out, cp, compactEvery = 1)
+        "text", ix, out, cp, autoCompact = true)
       q2.awaitTermination(120000)
+      assert(Dedup.listTombstoneFiles(spark, ix).isEmpty,
+        "the second takedown did not trigger the in-loop compaction")
 
       // identical accepted set to the non-compacting stream test
       assert(outIds(out) == Set(11L, 13L, 21L),
         "mid-stream compaction changed the accepted set")
-      // index content equals a rebuild over corpus + accepted — nothing
-      // lost, nothing duplicated by the compaction rewrites
+      // index content equals a rebuild over the retained corpus +
+      // accepted — nothing lost, nothing duplicated by the compaction
+      // rewrites
       val accepted = batch1.filter($"doc_id".isin(11L, 13L))
         .union(batch2.filter($"doc_id" === 21L))
-      Dedup.writeSignatureIndex(corpus.union(accepted), "doc_id", "text",
-        ixR, p)
+      Dedup.writeSignatureIndex(
+        corpus4.filter(!$"doc_id".isin(3L, 4L)).union(accepted), "doc_id",
+        "text", ixR, p)
       assert(sigSet(ix) == sigSet(ixR),
         "signature tables diverge after in-loop compaction")
       assert(bandSet(ix) == bandSet(ixR),
@@ -513,6 +525,45 @@ class IndexedDedupStreamSpec extends SparkSpec {
           s"$base/out", batchId = 0L)
       }
       assert(e.getMessage.contains("monotone"))
+    } finally rmrf(base)
+  }
+
+  test("ledger init heals a ledger directory holding only a crashed " +
+      "bootstrap's hidden temp file") {
+    val base = Files.createTempDirectory("graft-ixledgerheal").toString
+    val ix = s"$base/ix"; val out = s"$base/out"
+    try {
+      Dedup.writeSignatureIndex(corpus, "doc_id", "text", ix, p)
+      // the crash window of the driver-side bootstrap write: the hidden
+      // temp exists, the rename into place never happened
+      val dir = new java.io.File(s"$ix/ingest_ledger")
+      assert(dir.mkdirs())
+      val tmp = new java.io.File(dir,
+        s".ledger-bootstrap-${java.util.UUID.randomUUID()}.parquet.tmp")
+      java.nio.file.Files.write(tmp.toPath, Array[Byte](1, 2, 3))
+      Dedup.initIngestLedger(spark, ix)
+      assert(!tmp.exists(), "the stale bootstrap temp was not removed")
+      val ledger = spark.read.parquet(s"$ix/ingest_ledger").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      assert(ledger.toSeq == Seq((-1L, 3L, 3L, 0L)))
+      val s = Dedup.ingestBatchWithIndex(batch1, "doc_id", "text", ix, out,
+        batchId = 0L)
+      assert(!s.replayed && s.novelRows == 2L && s.watermarkAfter == 13L)
+    } finally rmrf(base)
+  }
+
+  test("ledger init over a signature index written from 32-bit ids") {
+    val base = Files.createTempDirectory("graft-ixintid").toString
+    val ix = s"$base/ix"
+    try {
+      Dedup.writeSignatureIndex(
+        corpus.withColumn("doc_id", $"doc_id".cast("int")), "doc_id",
+        "text", ix, p)
+      Dedup.initIngestLedger(spark, ix)
+      val ledger = spark.read.parquet(s"$ix/ingest_ledger").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      assert(ledger.toSeq == Seq((-1L, 3L, 3L, 0L)),
+        "the base watermark must be the max int id")
     } finally rmrf(base)
   }
 }
