@@ -46,188 +46,6 @@ object SparkEntry {
   private val QualityMixRates: Seq[Double] =
     Seq(0.02, 0.05, 0.1, 0.15, 0.2, 0.3, 0.4, 0.6, 0.8, 1.0)
 
-  /** Version key of the [[cachedBuild]] deployment caches. BUMP THIS
-    * whenever any cached build recipe changes (deployment builders,
-    * index formats, slice cuts) — the cache lives in the JVM tmpdir
-    * and persists across runs, so an unbumped recipe change would
-    * silently serve the previous recipe's artifacts. */
-  private val DeploymentCacheVersion = "v1"
-
-  /** Build-once, copy-per-run scaffolding cache for the heavy
-    * lifecycle bench entries (p9/p10/q64d): their in-entry deployment
-    * CONSTRUCTION is ~80% of the recorded seconds and identical on
-    * every timed run, drowning the operator the entry exists to price.
-    * The build is deterministic, so it runs once per (kind, recipe
-    * version, sf dir) into a cache directory (completion-marked,
-    * torn builds rebuilt, concurrent builders race safely through a
-    * tmp+rename publish) and each invocation COPIES the cache into the
-    * work directory — a file copy instead of index writes + governed
-    * batches — then runs only the MEASURED operator against the fresh
-    * copy. Results stay byte-identical to an uncached build: every run
-    * still mutates its own pristine copy of the same deterministic
-    * artifacts. Returns the work directory. */
-  private[graft] def cachedBuild(s: SparkSession, kind: String, dir: String)
-                                (build: String => Unit): String = {
-    import org.apache.hadoop.fs.Path
-    val tmp = System.getProperty("java.io.tmpdir")
-    val conf = s.sparkContext.hadoopConfiguration
-    // the key carries a fingerprint of the SOURCE DATA, not just the
-    // path: the cache outlives JVMs, and a regenerated dataset at the
-    // same path must invalidate it — a stale deployment would silently
-    // serve artifacts built from the old corpus against oracles over
-    // the new. The fingerprint recurses ONE level into table
-    // subdirectories (r18): a directory entry's own (len, mtime) does
-    // not track child rewrites on every FS, so an in-place regeneration
-    // of part files under an unchanged table dir must still miss.
-    val fp = {
-      val dfs = new Path(dir).getFileSystem(conf)
-      val sig = dfs.listStatus(new Path(dir)).toSeq.flatMap { st =>
-        val self =
-          s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
-        if (st.isDirectory)
-          self +: dfs.listStatus(st.getPath).toSeq.map(c =>
-            s"${st.getPath.getName}/${c.getPath.getName}:" +
-              s"${c.getLen}:${c.getModificationTime}")
-        else Seq(self)
-      }.sorted.mkString("|")
-      java.lang.Integer.toHexString(sig.hashCode)
-    }
-    val key = s"${kind}_${DeploymentCacheVersion}_" +
-      java.lang.Integer.toHexString(dir.hashCode) + s"_$fp"
-    val cache = new Path(s"$tmp/graft_cache_$key")
-    val fs = cache.getFileSystem(conf)
-    val done = new Path(cache, "_BUILD_COMPLETE")
-    // reclaim debris (r18): crashed builders leak *.build-* dirs, raced
-    // debris moves leak *.aside-*, and per-run work copies (below) are
-    // left for the reader's lazy frames — anything of ours older than
-    // 30 min is provably idle (an entry's build+copy+run completes in
-    // well under a minute) and is swept here instead of accumulating
-    // until tmpdir disk pressure perturbs the bench itself.
-    locally {
-      val now = System.currentTimeMillis()
-      val pfx = Seq(s"graft_cache_$key.build-", s"graft_cache_$key.aside-",
-        s"graft_work_${key}_")
-      try fs.listStatus(new Path(tmp)).foreach { st =>
-        val n = st.getPath.getName
-        if (pfx.exists(n.startsWith) &&
-            now - st.getModificationTime > 30L * 60 * 1000)
-          fs.delete(st.getPath, true)
-      } catch { case _: java.io.FileNotFoundException => () }
-    }
-    var source = cache
-    if (!fs.exists(done)) {
-      val uuid = java.util.UUID.randomUUID
-      val tmpBuild = new Path(s"$cache.build-$uuid")
-      build(tmpBuild.toString)
-      fs.create(new Path(tmpBuild, "_BUILD_COMPLETE"), true).close()
-      // markerless debris at the cache path (torn legacy copy) blocks
-      // the publish: move it ASIDE by atomic rename and inspect — never
-      // delete the cache path in place, because a concurrent builder
-      // may publish a COMPLETE cache between any check and a delete
-      // (check-then-delete is the race; rename-then-inspect is not).
-      if (fs.exists(cache) && !fs.exists(done)) {
-        val aside = new Path(s"$cache.aside-$uuid")
-        // re-check the marker IMMEDIATELY before the rename: a publisher
-        // completing between the outer check and here would have its
-        // just-published COMPLETE cache yanked aside mid-copy for any
-        // concurrent reader (restored below, but the reader's
-        // FileUtil.copy would see a missing source in the window). The
-        // window can't be closed from this side — the copy path's
-        // missing-source retry (below) covers the residue.
-        if (!fs.exists(done) && fs.rename(cache, aside)) {
-          if (fs.exists(new Path(aside, "_BUILD_COMPLETE"))) {
-            // raced a publisher and moved a COMPLETE cache aside:
-            // restore it (or drop the duplicate if a third builder
-            // refilled the slot meanwhile)
-            if (!fs.rename(aside, cache)) fs.delete(aside, true)
-          } else fs.delete(aside, true)
-        }
-      }
-      // publish ONLY into an absent destination: LocalFileSystem's
-      // rename onto an existing directory falls back to FileUtil.copy
-      // INTO it (returning true), silently nesting a duplicate
-      // deployment every later run would re-copy. Rename failure (or an
-      // occupied slot) means a winner exists — use theirs.
-      var published = !fs.exists(cache) && fs.rename(tmpBuild, cache)
-      if (published) {
-        // TOCTOU guard: a publisher landing between the exists check and
-        // the rename makes LocalFileSystem's rename fall back to
-        // FileUtil.copy INTO the existing cache (returning true),
-        // nesting a .build-* duplicate under the winner's cache. The
-        // signature is unambiguous — a clean rename leaves no child
-        // named after tmpBuild — so detect, drop the nested copy, and
-        // serve the winner's cache like any other lost race.
-        val nested = new Path(cache, tmpBuild.getName)
-        if (fs.exists(nested)) {
-          fs.delete(nested, true)
-          published = false
-        }
-      }
-      if (published) require(fs.exists(done),
-        s"deployment cache publish at $cache left no complete marker")
-      if (fs.exists(done)) { if (!published) fs.delete(tmpBuild, true) }
-      else source = tmpBuild // unremovable debris holds the slot: serve
-      // this run from its own complete build (deleted after the copy)
-    }
-    // per-run work dir (r18): a UUID suffix so concurrent JVMs against
-    // the same sf dir never share — or delete from under — each other's
-    // copy. The returned frames read it lazily, so it outlives this
-    // call; the age sweep above reclaims it.
-    val work = new Path(s"$tmp/graft_work_${key}_${java.util.UUID.randomUUID}")
-    // one retry on missing-source: a concurrent builder's aside-move can
-    // displace a COMPLETE cache for an instant (restored immediately —
-    // see the aside-inspect above); a copy caught inside that window
-    // fails with FileNotFoundException on a path that is back by the
-    // time we retry. Same discipline as the layout reads' retry
-    // contract: heal the thrown transient, never a silent one.
-    //
-    // PARALLEL copy (r19): a deployment is hundreds of KB-scale files
-    // (shard dirs, per-batch outputs, metadata tables) and
-    // FileUtil.copy walks them serially — measured ~2 s of driver-only
-    // wall at the head of every p9/p10/q64d run. The tree walk stays
-    // serial (cheap metadata); the per-file byte copies fan out over a
-    // bounded pool. Failure mapping preserves the retry contract above
-    // (the ExecutionException unwrap keeps FileNotFoundException
-    // visible to the catch).
-    def copyToWork(): Unit = {
-      val toCopy = Seq.newBuilder[(Path, Path)]
-      def walk(sp: Path, dp: Path): Unit = {
-        if (!fs.mkdirs(dp))
-          throw new java.io.IOException(s"could not create $dp")
-        fs.listStatus(sp).foreach { st =>
-          val child = new Path(dp, st.getPath.getName)
-          if (st.isDirectory) walk(st.getPath, child)
-          else toCopy += ((st.getPath, child))
-        }
-      }
-      walk(source, work)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
-      try {
-        val futs = toCopy.result().map { case (sp, dp) =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = require(
-              org.apache.hadoop.fs.FileUtil.copy(fs, sp, fs, dp, false, conf),
-              s"deployment cache copy $sp -> $dp failed")
-          })
-        }
-        try futs.foreach(_.get())
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-        }
-      } finally pool.shutdownNow()
-    }
-    try copyToWork()
-    catch {
-      case _: java.io.FileNotFoundException if source == cache =>
-        fs.delete(work, true)
-        Thread.sleep(50)
-        copyToWork()
-    }
-    if (source != cache) fs.delete(source, true)
-    work.toString
-  }
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q7_flagship_nation_avg")(spark, "/root/testdata/sf0.001")
@@ -1546,22 +1364,23 @@ object SparkEntry {
     // merged against O(categories) reference rows — nothing rescans
     // the corpus behind the reference at any scale.
     "q56b_drift_monitor_stream" -> ((s, dir) => {
-      val work = cachedBuild(s, "driftmon", dir) { cache =>
-        val docs = T(s, dir, "documents")
-        docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-          .groupBy(col("source")).agg(count(lit(1)).as("cnt"))
-          .coalesce(1).write.parquet(s"$cache/ref")
-        val odd = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-          .select(col("doc_id"), col("source"))
-        val mid = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-        odd.filter(col("doc_id") <= mid).coalesce(1)
-          .write.parquet(s"$cache/b0")
-        odd.filter(col("doc_id") > mid).coalesce(1)
-          .write.parquet(s"$cache/b1")
-      }
-      val in = s"$work/in"; val out = s"$work/out"; val cp = s"$work/cp"
+      val work = s"${System.getProperty("java.io.tmpdir")}/graft_driftmon_" +
+        java.lang.Integer.toHexString(dir.hashCode)
       val fs = new org.apache.hadoop.fs.Path(work)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(work), true)
+      val docs = T(s, dir, "documents")
+      docs.filter(pmod(col("doc_id"), lit(2)) === 0)
+        .groupBy(col("source")).agg(count(lit(1)).as("cnt"))
+        .coalesce(1).write.parquet(s"$work/ref")
+      val odd = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
+        .select(col("doc_id"), col("source"))
+      val mid = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
+      odd.filter(col("doc_id") <= mid).coalesce(1)
+        .write.parquet(s"$work/b0")
+      odd.filter(col("doc_id") > mid).coalesce(1)
+        .write.parquet(s"$work/b1")
+      val in = s"$work/in"; val out = s"$work/out"; val cp = s"$work/cp"
       val schema = s.read.parquet(s"$work/b0").schema
       val ref = s.read.parquet(s"$work/ref")
       def feed(stage: String): Unit = {
@@ -2211,21 +2030,19 @@ object SparkEntry {
     // corpora after convergence; the oracle replays the whole
     // deployment's retained set in SQL (per-shard screens + the
     // cross-shard greedy star).
-    // r17: the deployment CONSTRUCTION (index writes + governed
-    // batches, identical every run) comes from the build-once cache;
-    // each run copies it fresh and times the RECONCILE — the operator
-    // this entry exists to price. Results byte-identical either way.
     "p9_cross_shard_reconcile" -> ((s, dir) => {
-      val work = cachedBuild(s, "reconcile_mh", dir) { cache =>
-        val all = T(s, dir, "documents")
-        val c0 = all.agg(max(col("doc_id"))).head().getLong(0) / 2
-        val docs = all.filter(col("doc_id") <= c0).select("doc_id", "text")
-        val p = Dedup.MinHashParams(numHashes = 32, bands = 8,
-          shingle = 3, threshold = 0.2)
-        Dedup.buildTwoShardDeployment(docs, "doc_id", "text", c0 * 3 / 5,
-          p, cache)
-        ()
-      }
+      val work = s"${System.getProperty("java.io.tmpdir")}/graft_reconcile_mh_" +
+        java.lang.Integer.toHexString(dir.hashCode)
+      new org.apache.hadoop.fs.Path(work)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(work), true)
+      val all = T(s, dir, "documents")
+      val c0 = all.agg(max(col("doc_id"))).head().getLong(0) / 2
+      val docs = all.filter(col("doc_id") <= c0).select("doc_id", "text")
+      val p = Dedup.MinHashParams(numHashes = 32, bands = 8,
+        shingle = 3, threshold = 0.2)
+      Dedup.buildTwoShardDeployment(docs, "doc_id", "text", c0 * 3 / 5,
+        p, work)
       GraftFunctions.register(s)
       val shards = (0 to 1).map(i =>
         Dedup.GovernedShardPaths(s"$work/ix$i", s"$work/out$i"))
@@ -2244,18 +2061,18 @@ object SparkEntry {
     // shard's tombstone + scrub machinery. Full corpus (the exact
     // screen is cheap — no signature computation); oracle replays the
     // per-shard screens and the cross-shard min-id star in SQL.
-    // r17: build-once cached deployment (see p9) — the timed work is
-    // the digest reconcile itself.
     "p10_cross_shard_reconcile_digest" -> ((s, dir) => {
-      val work = cachedBuild(s, "reconcile_dig", dir) { cache =>
-        val docs = T(s, dir, "documents").withColumn("dig",
-            sha2(substring(col("text"), 1, 30).cast("binary"), 256))
-          .select("doc_id", "dig")
-        val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-        Dedup.buildTwoShardDigestDeployment(docs, "doc_id", "dig",
-          maxId * 3 / 5, cache)
-        ()
-      }
+      val work = s"${System.getProperty("java.io.tmpdir")}/graft_reconcile_dig_" +
+        java.lang.Integer.toHexString(dir.hashCode)
+      new org.apache.hadoop.fs.Path(work)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(work), true)
+      val docs = T(s, dir, "documents").withColumn("dig",
+          sha2(substring(col("text"), 1, 30).cast("binary"), 256))
+        .select("doc_id", "dig")
+      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
+      Dedup.buildTwoShardDigestDeployment(docs, "doc_id", "dig",
+        maxId * 3 / 5, work)
       GraftFunctions.register(s)
       val shards = (0 to 1).map(i =>
         Dedup.GovernedShardPaths(s"$work/ix$i", s"$work/out$i"))
@@ -2455,24 +2272,23 @@ object SparkEntry {
     // lifecycle state, batch or streaming, is an execution artifact
     // invisible to the result (oracle = q64c's, the same filter on the
     // original table)
-    // r17: the clustered BOOTSTRAP write and the micro-batch input
-    // files come from the build-once cache (identical every run); the
-    // timed work is the STREAMING LIFECYCLE itself — two exactly-once
-    // appends, the in-stream measured recluster — plus the pruned read.
     "q64d_zorder_stream_ingest_read" -> ((s, dir) => {
-      val work = cachedBuild(s, "zstream", dir) { cache =>
-        val li = T(s, dir, "lineitem")
-          .select("l_orderkey", "l_partkey", "l_linenumber", "l_quantity")
-        val maxK = li.agg(max(col("l_orderkey"))).head().getLong(0)
-        val (cut, cut2) = (maxK * 3 / 5, maxK * 4 / 5)
-        Layouts.writeZOrderedMaintained(
-          li.filter(col("l_orderkey") <= cut), s"$cache/lay",
-          Seq("l_orderkey", "l_partkey"), maxRecordsPerFile = 2000L)
-        li.filter(col("l_orderkey") > cut && col("l_orderkey") <= cut2)
-          .coalesce(1).write.parquet(s"$cache/in")
-        li.filter(col("l_orderkey") > cut2)
-          .coalesce(1).write.mode("append").parquet(s"$cache/in")
-      }
+      val work = s"${System.getProperty("java.io.tmpdir")}/graft_zstream_" +
+        java.lang.Integer.toHexString(dir.hashCode)
+      new org.apache.hadoop.fs.Path(work)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(work), true)
+      val li = T(s, dir, "lineitem")
+        .select("l_orderkey", "l_partkey", "l_linenumber", "l_quantity")
+      val maxK = li.agg(max(col("l_orderkey"))).head().getLong(0)
+      val (cut, cut2) = (maxK * 3 / 5, maxK * 4 / 5)
+      Layouts.writeZOrderedMaintained(
+        li.filter(col("l_orderkey") <= cut), s"$work/lay",
+        Seq("l_orderkey", "l_partkey"), maxRecordsPerFile = 2000L)
+      li.filter(col("l_orderkey") > cut && col("l_orderkey") <= cut2)
+        .coalesce(1).write.parquet(s"$work/in")
+      li.filter(col("l_orderkey") > cut2)
+        .coalesce(1).write.mode("append").parquet(s"$work/in")
       GraftFunctions.register(s)
       val in = s"$work/in"; val lay = s"$work/lay"; val cp = s"$work/cp"
       val schema = s.read.parquet(in).schema

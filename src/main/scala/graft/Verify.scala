@@ -15,8 +15,8 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Dev-loop subset (same contract as Bench): comma-separated names.
-    // The driver never sets this, so the round gate always runs everything.
+    // Dev-loop subset: comma-separated query names. Unset, every query
+    // runs.
     val picked = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = picked match {
@@ -29,9 +29,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Release checkpoint blocks operators can't free in-operator (see
-      // Bench.sweepStorage) — 134 queries of accumulated leaked blocks
-      // is avoidable memory pressure on the correctness gate too.
+      // Release checkpoint blocks operators can't free in-operator —
+      // 134 queries of accumulated leaked blocks is avoidable memory
+      // pressure on the correctness gate.
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       spark.catalog.clearCache()

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * usable both from SQL (`SELECT graft_cosine(a, b)`) and from the DataFrame
   * DSL via `call_function`. Registration is idempotent and cheap; every
   * graft operator calls [[register]] defensively so driver-created sessions
-  * (Verify/Bench) need no special setup.
+  * (e.g. `graft.Verify`'s) need no special setup.
   */
 object GraftFunctions {
 

@@ -998,14 +998,13 @@ object Dedup {
               s"(maintenance rename churn) — transient, retry re-reads: " +
               e.getMessage)
       }
-    // PLANNED-SET completeness check (r19): Spark's file index treats a
+    // PLANNED-SET completeness check: Spark's file index treats a
     // path that vanishes between its existence check and its listing as
     // "deleted very recently" and plans WITHOUT it — no error for the
-    // catch above to map (reproduced in ZSnapStress for the z-order
-    // twin; Layouts.readMaintained carries the file-level version of
-    // this check). A registered dir is non-empty by the registry's
-    // maintenance discipline (ADD after data lands, REMOVE before the
-    // drop, compaction re-syncs), so every requested dir must
+    // catch above to map (Layouts.readMaintained carries the file-level
+    // version of this check). A registered dir is non-empty by the
+    // registry's maintenance discipline (ADD after data lands, REMOVE
+    // before the drop, compaction re-syncs), so every requested dir must
     // contribute at least one planned file; a dir mid-rename-swap that
     // slipped past the open throws retryable here instead of silently
     // narrowing the probe's view. df.inputFiles is driver-side metadata
@@ -2677,8 +2676,8 @@ object Dedup {
     // The OUTER cap below evaluates its input up to 3× (count/semi/
     // anti); `capped` was checkpointed above exactly when that nesting
     // would compound (inner hot path). When a checkpoint was taken, its
-    // blocks cannot be freed inside a lazy operator — harness-side,
-    // Bench/Verify release them after materialization via
+    // blocks cannot be freed inside a lazy operator — caller-side,
+    // Verify releases them after materialization via
     // [[graft.plans.Checkpoints.free]] on the result plan (it unpersists
     // every LogicalRDD leaf, nested checkpoints included).
     val rRows =
@@ -5392,13 +5391,10 @@ object Dedup {
     ShardReconcileStats(crossPairs, perShard.sum, perShard, scrubbed)
   }
 
-  /** Two-shard even/odd governed MinHash deployment builder — the
-    * SHARED scaffolding behind the p9 bench entry and
-    * `tools.ReconcileScale` (one recipe, so the bench entry and the
-    * scale audit can never silently measure different deployments).
-    * Routes `docs` by `pmod(id, 2)`, bootstraps each shard's index from
-    * its `id <= c1` slice, governs one batch over the rest. Dev/bench
-    * scaffolding, not a production operator.
+  /** Two-shard even/odd governed MinHash deployment builder behind the
+    * p9 entry. Routes `docs` by `pmod(id, 2)`, bootstraps each shard's
+    * index from its `id <= c1` slice, governs one batch over the rest.
+    * Oracle-entry scaffolding, not a production operator.
     */
   private[graft] def buildTwoShardDeployment(
       docs: DataFrame, idCol: String, textCol: String, c1: Long,
@@ -5416,31 +5412,9 @@ object Dedup {
     }
   }
 
-  /** [[buildTwoShardDeployment]]'s SRP-family twin — the shared recipe
-    * behind the SRP reconcile scale audit (same even/odd router,
-    * bootstrap slice and single governed batch). Dev/bench scaffolding,
-    * not a production operator.
-    */
-  private[graft] def buildTwoShardSrpDeployment(
-      vecs: DataFrame, idCol: String, vecCol: String, c1: Long, dim: Int,
-      threshold: Double, base: String): Seq[GovernedShardPaths] = {
-    val spark = vecs.sparkSession
-    (0 to 1).map { sh =>
-      val ix = s"$base/ix$sh"; val out = s"$base/out$sh"
-      val mine = vecs.filter(pmod(col(idCol), lit(2)) === sh)
-      writeSrpIndex(mine.filter(col(idCol) <= c1), idCol, vecCol, ix, dim)
-      initSrpIngestLedger(spark, ix)
-      ingestBatchWithSrpIndex(mine.filter(col(idCol) > c1), idCol, vecCol,
-        ix, out, batchId = 0L, threshold = threshold)
-      GovernedShardPaths(ix, out)
-    }
-  }
-
-  /** [[buildTwoShardDeployment]]'s digest-family twin — the shared
-    * recipe behind the p10 bench entry and any digest reconcile scale
-    * audit (same even/odd router, bootstrap slice and single governed
-    * batch, so every consumer measures the same deployment). Dev/bench
-    * scaffolding, not a production operator.
+  /** [[buildTwoShardDeployment]]'s digest-family twin behind the p10
+    * entry (same even/odd router, bootstrap slice and single governed
+    * batch). Oracle-entry scaffolding, not a production operator.
     */
   private[graft] def buildTwoShardDigestDeployment(
       docs: DataFrame, idCol: String, digCol: String, c1: Long,

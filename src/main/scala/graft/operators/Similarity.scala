@@ -330,11 +330,9 @@ object Similarity {
     * [[Dedup.semDeDupAuto]] and [[writeIvfLayoutAuto]]). A FROZEN
     * quantizer makes the graph build quadratic again: pair work is
     * n²·nprobe/cells, so cells must grow with the corpus for the
-    * n^1.5 shape to hold — the d5b/d5d lesson applied to graphs,
-    * decade-audited in BENCH_SF10 `ann_layout_audit` (tools.
-    * AnnLayoutScale `knn_graph` phase). The frozen-quantizer s11 entry
-    * stays for the oracle (static centroid literals); this is what
-    * production calls.
+    * n^1.5 shape to hold — the d5b/d5d lesson applied to graphs. The
+    * frozen-quantizer s11 entry stays for the oracle (static centroid
+    * literals); this is what production calls.
     */
   def knnGraphAuto(corpus: DataFrame, idCol: String, vecCol: String,
                    k: Int, nprobe: Int = 2, mult: Int = 4,

@@ -1203,20 +1203,17 @@ object Layouts {
               s"commit race) — transient, retry re-snapshots: " +
               e.getMessage)
     }
-    // PLANNED-SET completeness check (r19). Spark's file index does NOT
+    // PLANNED-SET completeness check. Spark's file index does NOT
     // throw for a path that vanishes between the reader's own existence
     // check and its listing pass: InMemoryFileIndex logs "was deleted
     // very recently" and plans WITHOUT the file — so a snapshot racing
     // a commit's deletes could return a silently-short frame that no
-    // retry contract ever sees (reproduced deterministically by
-    // graft.tools.ZSnapStress: count()s of 1602-1686 rows over a
-    // 3400-row layout with df.inputFiles showing 17-19 of 36 snapshot
-    // files planned — and the likely true mechanism behind the r18
-    // '1687-row view', then attributed to readdir races). df.inputFiles
-    // is driver-side metadata of the already-built index (zero jobs);
-    // any shortfall throws the retryable class. Files vanishing AFTER
-    // planning fail the task loudly (FAILED_READ_FILE), which
-    // retryingRead already heals.
+    // retry contract ever sees (observed: count()s of 1602-1686 rows
+    // over a 3400-row layout with df.inputFiles showing 17-19 of 36
+    // snapshot files planned). df.inputFiles is driver-side metadata
+    // of the already-built index (zero jobs); any shortfall throws the
+    // retryable class. Files vanishing AFTER planning fail the task
+    // loudly (FAILED_READ_FILE), which retryingRead already heals.
     val plannedNames = df.inputFiles
       .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
     val missingPlanned = files

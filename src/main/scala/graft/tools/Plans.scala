@@ -672,11 +672,7 @@ object Plans {
         |nothing (the dropped side is physically gone from the union).
         |At 100 TB the pass costs one LSH sweep of the served corpora
         |per reconcile cadence — the same order as one governed
-        |compaction, and independent of shard count. r17: the two-shard
-        |deployment construction comes from the build-once cache
-        |(SparkEntry.cachedBuild — copy-per-run, byte-identical, oracle
-        |re-verified); the entry's seconds now price the reconcile
-        |itself: 15.4 s -> 4.6 s quiet at sf0.1.""".stripMargin,
+        |compaction, and independent of shard count.""".stripMargin,
 
     "q64d_zorder_stream_ingest_read" ->
       """q64c's lifecycle driven as a STREAM (zOrderedIngestStream):
@@ -695,16 +691,9 @@ object Plans {
         |crash/replay safety needs no external transaction log — the
         |layout's own generation record is the log.
         |
-        |r17: the clustered BOOTSTRAP write and the micro-batch input
-        |files now come from the build-once deployment cache
-        |(SparkEntry.cachedBuild — copy-per-run, results byte-identical,
-        |oracle re-verified), so the entry's seconds price the streaming
-        |lifecycle itself: two exactly-once appends, two trigger probes,
-        |the in-stream bounded reclusters, and the pruned read (now
-        |through readMaintained — the snapshot contract's production
-        |read entry; identical plan shape over an explicit file list).
-        |The entry stays lifecycle-dominated BY DESIGN — the streaming
-        |loop is the operator it exists to price.""".stripMargin,
+        |The pruned read goes through readMaintained — the snapshot
+        |contract's production read entry; identical plan shape over an
+        |explicit file list.""".stripMargin,
 
     "p10_cross_shard_reconcile_digest" ->
       """p9's exact-dedup twin over the governed digest deployment
@@ -724,11 +713,7 @@ object Plans {
         |pruned scans. At 100 TB: one digest-keyed shuffle of (id, dig)
         |pairs per reconcile cadence — cheaper than p9's LSH sweep by
         |the width of a signature, the natural cadence pass for the
-        |exact family. r17: the two-shard deployment construction comes
-        |from the build-once cache (SparkEntry.cachedBuild — copy-per-
-        |run, byte-identical, oracle re-verified); the entry's seconds
-        |now price the reconcile itself: 7.8 s -> 3.9 s quiet at
-        |sf0.1.""".stripMargin)
+        |exact family.""".stripMargin)
 
   /** Prose-only sections appended after the plan dumps (deployment
     * patterns with no single query plan to show). Regeneration keeps
@@ -819,10 +804,7 @@ object Plans {
       |Round-over-round drift adjudications (the r14/r16/r17 A/B tables,
       |suspect-list dispositions, calibration findings) are append-only
       |history, not plan documentation — they live in NOTES.md so this
-      |regenerated file's diff stays plan-sized. From r18 the
-      |box-vs-code attribution is also a harness output: BENCH_DETAIL's
-      |`comparison` object (BASELINE.md §7) carries common_ratio,
-      |calibration ratios and their quotient.
+      |regenerated file's diff stays plan-sized.
       |""".stripMargin
 
   def main(args: Array[String]): Unit = {

@@ -17,7 +17,8 @@ import graft.SparkSpec
   * job group (`statusTracker.getJobIdsForGroup`) and cross-checked
   * against a listener that sees every job, so a job that escapes the
   * group — a lane thread tagged with an earlier batch's properties —
-  * fails too.
+  * fails too. Each direct batch call must also leave the session confs
+  * it tunes as it found them.
   */
 class GovernedBatchJobsSpec extends SparkSpec {
   import GovernedBatchJobsSpec.Family
@@ -64,6 +65,23 @@ class GovernedBatchJobsSpec extends SparkSpec {
     val started = Jobs.seen.asScala.toSeq.drop(before)
       .map(_._2).filterNot(_.startsWith("settle-"))
     (started, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  /** The confs a governed batch tunes for its own plan
+    * (`Dedup.withPinnedPlan`); a direct batch call must leave the
+    * caller's session reading the same values afterwards.
+    * `shuffle.partitions` is set by [[SparkSpec]], `adaptive.enabled`
+    * is not. */
+  private val pinnedConfs =
+    Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+  /** Run one direct batch call and assert it restored [[pinnedConfs]]. */
+  private def restoresConfs[A](call: String)(body: => A): A = {
+    val before = pinnedConfs.map(spark.conf.getOption)
+    val r = body
+    assert(pinnedConfs.map(spark.conf.getOption) == before,
+      s"$call changed the caller's session confs")
+    r
   }
 
   private def rmrf(dir: String): Unit = {
@@ -132,9 +150,11 @@ class GovernedBatchJobsSpec extends SparkSpec {
         f.build(ix)
         // batch 0 runs under its own group first: any lane thread it
         // leaves behind carries that group, not batch 1's
-        underGroup(s"${f.name}-0")(f.ingest(f.batch0(), ix, out, 0L))
+        underGroup(s"${f.name}-0")(restoresConfs(s"${f.name} batch 0")(
+          f.ingest(f.batch0(), ix, out, 0L)))
         val (started, grouped) =
-          underGroup(s"${f.name}-1")(f.ingest(f.batch1(), ix, out, 1L))
+          underGroup(s"${f.name}-1")(restoresConfs(s"${f.name} batch 1")(
+            f.ingest(f.batch1(), ix, out, 1L)))
         assert(started.forall(_ == s"${f.name}-1"),
           s"jobs of batch 1 ran under other groups: ${started.mkString(", ")}")
         assert(grouped == f.jobs,

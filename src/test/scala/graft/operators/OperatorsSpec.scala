@@ -970,9 +970,9 @@ class EntrySpec extends SparkSpec {
   }
 
   test("every registered query executes end-to-end at sf0.001") {
-    // the bench warmup swallows exceptions, and Verify only runs
-    // per-round — this makes plain `sbt test` catch a query that breaks
-    // at runtime (analysis errors surface lazily)
+    // Verify logs a failing query and moves on — this makes plain
+    // `sbt test` catch a query that breaks at runtime (analysis errors
+    // surface lazily)
     GraftFunctions.register(spark)
     graft.SparkEntry.queries.foreach { case (name, fn) =>
       try {
