@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftFunctions, MinHashCoeffs}
 import graft.functions.TextFunctions._
+import graft.plans.BatchConstants
 
 /** Deduplication operators for large-scale training-data pipelines
   * (north-star tier, SURVEY.md §2.3): exact, MinHash+LSH, SimHash,
@@ -644,12 +645,11 @@ object Dedup {
       .agg(collect_set(col("__shard"))).head()
       .getSeq[Int](0)
 
-  /** Literal partition predicate for the touched-shard set. `isin` with
-    * an empty list is a degenerate always-false in Spark — make that
-    * explicit instead of relying on it. */
+  /** Partition predicate for the touched-shard set; an empty set is an
+    * explicit `false`. The set changes from batch to batch, so it stays
+    * out of generated code (see [[graft.plans.BatchConstants]]). */
   private def shardFilter(shardsTouched: Seq[Int]): Column =
-    if (shardsTouched.isEmpty) lit(false)
-    else col("shard").isin(shardsTouched.map(Int.box): _*)
+    BatchConstants.isIn(col("shard"), shardsTouched)
 
   // ---- index epoch: concurrency fencing for persisted indexes ----
   //
@@ -1154,7 +1154,7 @@ object Dedup {
   /** The committed cap view of raw occupancy rows at a watermark. */
   private def occupancyAt(occRaw: DataFrame, keyCols: Seq[String],
                           watermark: Long): DataFrame =
-    occRaw.filter(col("wm") <= lit(watermark))
+    occRaw.filter(col("wm") <= BatchConstants.long(watermark))
       .groupBy(keyCols.map(col): _*)
       .agg(sum(col("occ")).as("__occ"))
 
@@ -1181,7 +1181,7 @@ object Dedup {
     appended.withColumn("shard", shardCol(keyCols.map(col), shards))
       .groupBy((col("shard") +: keyCols.map(col)): _*)
       .agg(count(lit(1)).as("occ"))
-      .withColumn("wm", lit(wm))
+      .withColumn("wm", BatchConstants.long(wm))
       .write.partitionBy("shard").mode("append").parquet(s"$path/occupancy")
     syncMemberDirs(spark, path, "occupancy", replace = false)
   }
@@ -3705,15 +3705,20 @@ object Dedup {
     // Replay-idempotence by FILENAME: the stats file carries its batch id
     // (stats-<id>-...), so the presence probe is one metadata list — no
     // Spark read job per batch. Compaction rewrites the table with
-    // spark part-* names; those legacy-named files fall back to a one-off
-    // read-based check so a replay after compaction stays a no-op.
+    // spark part-* names; while those are present, every batch falls
+    // back to a read-based check so a replay after compaction stays a
+    // no-op. The check compiles once per stream, not per batch: the
+    // batch id is a batch constant, and `isEmpty` takes its one row at
+    // the driver — a `limit(1).count()` would put a limit into
+    // generated code, whose counter Spark names uniquely per plan.
     if (fs.exists(dir)) {
       val names = fs.listStatus(dir).map(_.getPath.getName)
         .filterNot(n => n.startsWith("_") || n.startsWith("."))
       if (names.exists(_.startsWith(s"stats-${s.batchId}-"))) return
       if (names.exists(!_.startsWith("stats-"))) {
-        val present = spark.read.parquet(dir.toString)
-          .filter(col("batch_id") === lit(s.batchId)).limit(1).count() > 0
+        val present = !spark.read.parquet(dir.toString)
+          .filter(col("batch_id") === BatchConstants.long(s.batchId))
+          .isEmpty
         if (present) return
       }
     }
@@ -3888,16 +3893,17 @@ object Dedup {
     */
   private def withPinnedPlan[A](
       spark: org.apache.spark.sql.SparkSession)(f: => A): A = {
-    val kA = "spark.sql.adaptive.enabled"
-    val kS = "spark.sql.shuffle.partitions"
-    val prevA = spark.conf.getOption(kA)
-    val prevS = spark.conf.getOption(kS)
-    def restore(k: String, v: Option[String]): Unit = v match {
-      case Some(x) => spark.conf.set(k, x)
-      case None    => spark.conf.unset(k)
-    }
+    // getOption answers the registered default for a key the caller never
+    // set; only getAll tells set from unset, so an unset key is unset
+    // again instead of being left explicitly set to its default
+    val set = spark.conf.getAll
+    val saved = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.shuffle.partitions").map(k => k -> set.get(k))
     try f
-    finally { restore(kA, prevA); restore(kS, prevS) }
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 
   /** Expanded-row ceiling below which a governed batch pins its plan
@@ -4132,10 +4138,10 @@ object Dedup {
         min(col(idCol).try_cast("long")).as("g_min"),
         count(when(col(idCol).isNull ||
           col(idCol).try_cast("long").isNull, 1)).as("g_bad"))
-      .crossJoin(physTail.filter(col("id") > lit(w))
+      .crossJoin(physTail.filter(pastCommitted(w))
         .agg(count(lit(1)).as("t_cnt")))
     val front1 = physTail2.fold(front0)(t2 =>
-      front0.crossJoin(t2.filter(col("id") > lit(w))
+      front0.crossJoin(t2.filter(pastCommitted(w))
         .agg(count(lit(1)).as("t2_cnt"))))
     val front = touchedAgg.fold(front1)(front1.crossJoin(_)).head()
     val batchRows = front.getAs[Long]("g_cnt")
@@ -4408,7 +4414,8 @@ object Dedup {
            // probe correct against them, and against historical negative
            // rows written by earlier stamp schemes.
            lateBase.crossJoin(occRaw.agg(
-             count(when(col("wm") === lit(wAfter) && col("occ") > 0, 1))
+             count(when(col("wm") === BatchConstants.long(wAfter) &&
+               col("occ") > 0, 1))
                .as("n_replay")))
          else lateBase).head()
       val deltaPresent = f.shards > 0 && front.torn && late.getLong(1) > 0
@@ -4456,6 +4463,16 @@ object Dedup {
       primaryRows: DataFrame => DataFrame,
       buckets: Option[GovernedBuckets])
 
+  /** The committed view of an index table at watermark `w`: rows with
+    * `id <= w` (see [[governedBatch]]). */
+  private def committedAt(w: Long): Column =
+    col("id") <= BatchConstants.long(w)
+
+  /** The rest of a physical index table: rows a crashed attempt appended
+    * past watermark `w` (the torn tail, see [[governedBatch]]). */
+  private def pastCommitted(w: Long): Column =
+    col("id") > BatchConstants.long(w)
+
   /** A family's capped bucket table, kept in step with `occupancy/`:
     * `view` is the tombstone-filtered table (the occupancy source of a
     * legacy unsharded index), `rows` derives (id, keyCols...) from
@@ -4486,8 +4503,8 @@ object Dedup {
       touched = b => bandRows(signed(b).select(col(idCol).as("id"),
         col("minhash"))),
       screens = (b, w, touched) => {
-        val committed = MinHashIndex(ix.signatures.filter(col("id") <= lit(w)),
-          ix.bands.filter(col("id") <= lit(w)), p, ix.shards)
+        val committed = MinHashIndex(ix.signatures.filter(committedAt(w)),
+          ix.bands.filter(committedAt(w)), p, ix.shards)
         // Within-batch screen: greedy star rule — drop any doc with a
         // SMALLER-id near-duplicate in the same batch (pairs carry
         // id_a < id_b, so the drop set is exactly the distinct id_b side).
@@ -4650,9 +4667,10 @@ object Dedup {
     // shape.
     val occF = f.buckets.map(s => laneSubmit {
       (if (f.shards > 0) readOccupancyRaw(spark, indexPath, Some(touched))
-       else s.view.filter(col("id") <= lit(w))
+       else s.view.filter(committedAt(w))
          .groupBy(f.keyCols.map(col): _*)
-         .agg(count(lit(1)).as("occ")).withColumn("wm", lit(w)))
+         .agg(count(lit(1)).as("occ"))
+         .withColumn("wm", BatchConstants.long(w)))
         .localCheckpoint()
     })
     var primaryF: java.util.concurrent.Future[Unit] = null
@@ -4687,7 +4705,7 @@ object Dedup {
       val newPrimary = f.primaryRows(novel)
       val primaryAppend =
         if (torn)
-          newPrimary.join(physPrimary.filter(col("id") > lit(w)).select("id"),
+          newPrimary.join(physPrimary.filter(pastCommitted(w)).select("id"),
             Seq("id"), "left_anti")
         else newPrimary
       def appendPrimary(): Unit =
@@ -4720,7 +4738,7 @@ object Dedup {
         val bucketAppend =
           if (torn) {
             // physical bucket tail, same reason as the primary heal
-            val tail = physBuckets.get.filter(col("id") > lit(w))
+            val tail = physBuckets.get.filter(pastCommitted(w))
             val tailPruned =
               if (f.shards > 0) tail.filter(shardFilter(touched)) else tail
             capped.join(tailPruned.select(keyed.map(col): _*), keyed,
@@ -4859,8 +4877,8 @@ object Dedup {
           .select(col("tbl"), explode(array(flips: _*)).as("bkt"))
       },
       screens = (b, w, touched) => {
-        val committed = SrpIndex(ix.vectors.filter(col("id") <= lit(w)),
-          ix.buckets.filter(col("id") <= lit(w)),
+        val committed = SrpIndex(ix.vectors.filter(committedAt(w)),
+          ix.buckets.filter(committedAt(w)),
           ix.tables, ix.planes, ix.dim, ix.maxBucket, ix.shards)
         // Greedy star within-batch screen (see minHashFamily). eagerCap
         // stays TRUE here, unlike the MinHash family: the SRP screen's
@@ -4899,7 +4917,7 @@ object Dedup {
   //
   // Scale shape (100 TB of media): the index stores (id, dig) only —
   // 8 + ~64 bytes per object regardless of payload size; probes prune
-  // the scan to the batch's touched digest shards (same literal INSET →
+  // the scan to the batch's touched digest shards (same INSET →
   // PartitionFilters mechanism as the band shards, PLANS.md b3b) and
   // anti-join — per-batch work tracks the batch. NULL digests are never
   // dup candidates: they pass the screens untouched and are not indexed
@@ -5116,7 +5134,7 @@ object Dedup {
            .filter(col(idCol) =!= col("__min_id")).select(col(idCol)),
          // Committed screen: shard-pruned digest semi-join against the
          // tombstone- and watermark-filtered index.
-         bd.join(ix.digests.filter(col("id") <= lit(w))
+         bd.join(ix.digests.filter(committedAt(w))
              .filter(shardFilter(touched)).select(col("dig")),
            Seq("dig"), "left_semi")
            .select(col(idCol)))

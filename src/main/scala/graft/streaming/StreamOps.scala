@@ -181,6 +181,14 @@ object StreamOps {
     * within-shard screening contract). Near-dup screening is WITHIN a shard; route by a
     * content-stable key or run the periodic cross-shard batch dedup
     * operators when cross-shard duplicates are in contract.
+    *
+    * SESSION: every batch reuses the generated code the first batch
+    * compiled only if the codegen cache holds it. `GraftSession.builder`
+    * sizes the cache; a session built any other way must set
+    * `spark.sql.codegen.cache.maxEntries` to at least
+    * `GraftSession.CodegenCacheEntries` when it is built (a static conf),
+    * or each batch recompiles its classes. The stream logs a WARN at
+    * open when the conf is lower.
     */
   def indexedDedupStream(spark: SparkSession, inPath: String,
                          schema: org.apache.spark.sql.types.StructType,
@@ -267,6 +275,9 @@ object StreamOps {
                             (ingest: (DataFrame, Long) =>
                                graft.operators.Dedup.IngestBatchStats,
                              compact: () => Boolean): StreamingQuery = {
+    graft.GraftSession.codegenCacheWarning(
+      spark.conf.get(graft.GraftSession.CodegenCacheConf).toInt)
+      .foreach(org.slf4j.LoggerFactory.getLogger(getClass).warn(_))
     // The tombstone file set the last in-loop scrub propagated (stream
     // closure state; lost on restart = one redundant idempotent scrub).
     var scrubbedTombs = Set.empty[String]

@@ -21,6 +21,9 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the engine's codegen cache, so suites compile what it ships with
+      .config(GraftSession.CodegenCacheConf,
+        GraftSession.CodegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

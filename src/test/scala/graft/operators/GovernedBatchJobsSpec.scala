@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -18,7 +19,9 @@ import graft.SparkSpec
   * against a listener that sees every job, so a job that escapes the
   * group — a lane thread tagged with an earlier batch's properties —
   * fails too. Each direct batch call must also leave the session confs
-  * it tunes as it found them.
+  * it tunes as it found them, set or unset. And a steady batch must
+  * reuse the generated code of the batches before it instead of
+  * compiling its own.
   */
 class GovernedBatchJobsSpec extends SparkSpec {
   import GovernedBatchJobsSpec.Family
@@ -69,18 +72,24 @@ class GovernedBatchJobsSpec extends SparkSpec {
 
   /** The confs a governed batch tunes for its own plan
     * (`Dedup.withPinnedPlan`); a direct batch call must leave the
-    * caller's session reading the same values afterwards.
-    * `shuffle.partitions` is set by [[SparkSpec]], `adaptive.enabled`
-    * is not. */
+    * caller's session reading the same values afterwards, and holding
+    * the same keys as explicitly set (`getAll`): `getOption` reads a
+    * registered default for an unset key, so values alone cannot tell a
+    * key left set from one left unset. `shuffle.partitions` is set by
+    * [[SparkSpec]], `adaptive.enabled` is not. */
   private val pinnedConfs =
     Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
 
+  private def confState =
+    pinnedConfs.map(k => (k, spark.conf.getOption(k),
+      spark.conf.getAll.contains(k)))
+
   /** Run one direct batch call and assert it restored [[pinnedConfs]]. */
   private def restoresConfs[A](call: String)(body: => A): A = {
-    val before = pinnedConfs.map(spark.conf.getOption)
+    val before = confState
     val r = body
-    assert(pinnedConfs.map(spark.conf.getOption) == before,
-      s"$call changed the caller's session confs")
+    assert(confState == before,
+      s"$call changed the caller's session confs (key, value, set)")
     r
   }
 
@@ -119,7 +128,10 @@ class GovernedBatchJobsSpec extends SparkSpec {
         Dedup.ingestBatchWithIndex(b, "doc_id", "text", ix, out, id),
       () => Seq(10L -> uniq(10), 11L -> uniq(11)).toDF("doc_id", "text"),
       () => Seq(20L -> fam(20), 21L -> uniq(21), 22L -> uniq(21),
-        23L -> uniq(23)).toDF("doc_id", "text")),
+        23L -> uniq(23)).toDF("doc_id", "text"),
+      i => Seq(i -> fam(i), (i + 1) -> uniq(i + 1), (i + 2) -> uniq(i + 1),
+        (i + 3) -> uniq(i + 3)).toDF("doc_id", "text"),
+      ix => Dedup.compactSignatureIndex(spark, ix)),
     Family("srp", jobs = 24,
       ix => {
         Dedup.writeSrpIndex(vecs(0L -> vec(0, 0), 1L -> vec(2, 1)),
@@ -130,7 +142,10 @@ class GovernedBatchJobsSpec extends SparkSpec {
         "embedding", ix, out, id, threshold = 0.4),
       () => vecs(10L -> vec(4, 10), 11L -> vec(6, 11)),
       () => vecs(20L -> vec(0, 20), 21L -> vec(5, 21), 22L -> vec(5, 22),
-        23L -> vec(7, 23))),
+        23L -> vec(7, 23)),
+      i => vecs(i -> vec(0, i), (i + 1) -> vec(5, i + 1),
+        (i + 2) -> vec(5, i + 2), (i + 3) -> vec(7, i + 3)),
+      ix => Dedup.compactSrpIndex(spark, ix)),
     Family("digest", jobs = 13,
       ix => {
         Dedup.writeDigestIndex(objs((0L, "d0"), (1L, "d1")), "id", "dig", ix)
@@ -139,7 +154,10 @@ class GovernedBatchJobsSpec extends SparkSpec {
       (b, ix, out, id) =>
         Dedup.ingestBatchWithDigestIndex(b, "id", "dig", ix, out, id),
       () => objs((10L, "e10"), (11L, "e11")),
-      () => objs((20L, "d0"), (21L, "e21"), (22L, "e21"), (23L, "e23"))))
+      () => objs((20L, "d0"), (21L, "e21"), (22L, "e21"), (23L, "e23")),
+      i => objs((i, "d0"), (i + 1, s"e${i + 1}"), (i + 2, s"e${i + 1}"),
+        (i + 3, s"e${i + 3}")),
+      ix => Dedup.compactDigestIndex(spark, ix)))
 
   families.foreach { f =>
     test(s"${f.name}: a clean governed batch runs a pinned number of " +
@@ -163,17 +181,52 @@ class GovernedBatchJobsSpec extends SparkSpec {
       } finally rmrf(base)
     }
   }
+
+  families.foreach { f =>
+    test(s"${f.name}: a steady governed batch reuses the generated code " +
+        "of the batches before it") {
+      val base = Files.createTempDirectory(s"graft-codegen-${f.name}")
+        .toString
+      val ix = s"$base/ix"; val out = s"$base/out"
+      def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      def batch(k: Int): Long = {
+        val before = compiles
+        val stats = f.ingest(f.steady(100L * (k + 1)), ix, out, k.toLong)
+        Dedup.appendIngestStats(spark, ix, stats) // as the stream loop does
+        compiles - before
+      }
+      try {
+        f.build(ix)
+        // batches of one shape (ids, watermarks and touched shards
+        // differ), three before a compaction and two after it: a
+        // compacted index plans new code once. The third and the fifth
+        // may still compile Spark's own runtime predicates, e.g. dynamic
+        // partition pruning's over a shard set no earlier batch touched
+        // (one on MinHash)
+        val perBatch = (0 until 3).map(batch) ++ {
+          f.compact(ix); (3 until 5).map(batch)
+        }
+        assert(perBatch(2) <= 3 && perBatch(4) <= 3,
+          s"${f.name}: compiles per batch ${perBatch.mkString(", ")} " +
+            "(compaction after the third)")
+      } finally rmrf(base)
+    }
+  }
 }
 
 object GovernedBatchJobsSpec {
 
   /** One index family: how to build its index and ledger, how to ingest
     * one governed batch, two clean batches (the second has within-batch
-    * and cross-index duplicates), and its pinned jobs per clean batch. */
+    * and cross-index duplicates), its pinned jobs per clean batch, and
+    * `steady(i)`: a clean batch of the second one's shape with ids from
+    * `i` up, and how to compact the index. */
   final case class Family(name: String, jobs: Int,
                           build: String => Unit,
                           ingest: (DataFrame, String, String, Long) =>
                             Dedup.IngestBatchStats,
                           batch0: () => DataFrame,
-                          batch1: () => DataFrame)
+                          batch1: () => DataFrame,
+                          steady: Long => DataFrame,
+                          compact: String => Unit)
 }

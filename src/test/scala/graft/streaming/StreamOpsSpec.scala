@@ -125,6 +125,18 @@ class StreamOpsSpec extends SparkSpec {
     graft.GraftSession.s3aBuilder() // applying the preset must not throw
   }
 
+  test("a codegen cache below the engine's size draws the stream-open " +
+      "warning, naming the conf and both sizes") {
+    import graft.GraftSession._
+    val w = codegenCacheWarning(100)
+    assert(w.exists(m => m.contains(CodegenCacheConf) &&
+      m.contains("100") && m.contains(CodegenCacheEntries.toString)), w)
+    assert(codegenCacheWarning(CodegenCacheEntries).isEmpty)
+    // the suites' session is sized like GraftSession.builder's
+    assert(codegenCacheWarning(spark.conf.get(CodegenCacheConf).toInt)
+      .isEmpty)
+  }
+
   test("text-tier quality filter composes on a stream (ingest-time filtering)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
