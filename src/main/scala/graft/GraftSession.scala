@@ -48,7 +48,7 @@ object GraftSession {
     *
     * The codegen cache holds [[CodegenCacheEntries]] classes, not Spark's
     * default 100. A governed micro-batch
-    * (`graft.streaming.StreamOps.indexedDedupStream` and its siblings)
+    * (`graft.streaming.StreamOps.governedDedupStream`)
     * plans the same queries every batch, but more distinct classes than
     * 100: with the default, each batch evicts classes the next batch
     * needs, and Janino compiles them again, ~20 ms each on the driver of

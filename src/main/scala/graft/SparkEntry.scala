@@ -1725,7 +1725,7 @@ object SparkEntry {
         java.lang.Integer.toHexString(dir.hashCode)
       Dedup.writeSignatureIndex(
         docs.filter(col("doc_id") % 5 =!= 4), "doc_id", "text", ixPath, p)
-      Dedup.deleteFromSignatureIndex(s, ixPath,
+      Dedup.deleteFromIndex(s, ixPath,
         docs.filter(col("doc_id") % 5 =!= 4 && col("doc_id") % 7 === 3),
         "doc_id")
       Dedup.minHashNearDupPairsIncremental(
@@ -1761,10 +1761,10 @@ object SparkEntry {
         java.lang.Integer.toHexString(dir.hashCode)
       Dedup.writeSrpIndex(emb.filter(col("vec_id") % 5 =!= 4), "vec_id",
         "embedding", ixPath, dim = 64)
-      Dedup.deleteFromSrpIndex(s, ixPath,
+      Dedup.deleteFromIndex(s, ixPath,
         emb.filter(col("vec_id") % 5 =!= 4 && col("vec_id") % 7 === 3),
         "vec_id")
-      Dedup.compactSrpIndex(s, ixPath)
+      Dedup.compactIndex(s, ixPath)
       Dedup.embeddingNearDupLshIncremental(emb.filter(col("vec_id") % 5 === 4),
         Dedup.readSrpIndex(s, ixPath), "vec_id", "embedding", threshold = 0.4)
     }),
@@ -1866,9 +1866,9 @@ object SparkEntry {
     }),
 
     // the GOVERNED ingest loop (the streaming foreachBatch body of
-    // StreamOps.indexedDedupStream) as a batch query: fresh signature
+    // StreamOps.governedDedupStream) as a batch query: fresh signature
     // index from the id-low corpus, then two monotone batches through
-    // ingestBatchWithIndex — greedy-star within-batch screen +
+    // ingestBatch — greedy-star within-batch screen +
     // committed-index screen, novel docs to the per-batch output dirs,
     // signatures appended between batches (batch B IS screened against
     // batch A's survivors, which only works if the append landed). The
@@ -1890,11 +1890,11 @@ object SparkEntry {
       Dedup.writeSignatureIndex(docs.filter(col("doc_id") <= c1),
         "doc_id", "text", ix, p)
       Dedup.initIngestLedger(s, ix)
-      Dedup.ingestBatchWithIndex(
+      Dedup.ingestBatch(
         docs.filter(col("doc_id") > c1 && col("doc_id") <= c2),
-        "doc_id", "text", ix, out, batchId = 0L)
-      Dedup.ingestBatchWithIndex(docs.filter(col("doc_id") > c2),
-        "doc_id", "text", ix, out, batchId = 1L)
+        "doc_id", Dedup.MinHashText("text"), ix, out, batchId = 0L)
+      Dedup.ingestBatch(docs.filter(col("doc_id") > c2),
+        "doc_id", Dedup.MinHashText("text"), ix, out, batchId = 1L)
       s.read.parquet(s"$out/batch_id=0").withColumn("batch_id", lit(0L))
         .union(s.read.parquet(s"$out/batch_id=1")
           .withColumn("batch_id", lit(1L)))
@@ -1919,12 +1919,12 @@ object SparkEntry {
       val ix = s"$base/ix"; val out = s"$base/out"
       Dedup.writeSrpIndex(emb.filter(col("vec_id") <= c1), "vec_id",
         "embedding", ix, dim = 64)
-      Dedup.initSrpIngestLedger(s, ix)
-      Dedup.ingestBatchWithSrpIndex(
+      Dedup.initIngestLedger(s, ix)
+      Dedup.ingestBatch(
         emb.filter(col("vec_id") > c1 && col("vec_id") <= c2),
-        "vec_id", "embedding", ix, out, batchId = 0L, threshold = 0.4)
-      Dedup.ingestBatchWithSrpIndex(emb.filter(col("vec_id") > c2),
-        "vec_id", "embedding", ix, out, batchId = 1L, threshold = 0.4)
+        "vec_id", Dedup.SrpVectors("embedding", 0.4), ix, out, batchId = 0L)
+      Dedup.ingestBatch(emb.filter(col("vec_id") > c2),
+        "vec_id", Dedup.SrpVectors("embedding", 0.4), ix, out, batchId = 1L)
       s.read.parquet(s"$out/batch_id=0").withColumn("batch_id", lit(0L))
         .union(s.read.parquet(s"$out/batch_id=1")
           .withColumn("batch_id", lit(1L)))
@@ -1953,12 +1953,12 @@ object SparkEntry {
       Dedup.writeSignatureIndex(docs.filter(col("doc_id") <= c1),
         "doc_id", "text", ix, p)
       Dedup.initIngestLedger(s, ix)
-      Dedup.ingestBatchWithIndex(
+      Dedup.ingestBatch(
         docs.filter(col("doc_id") > c1 && col("doc_id") <= c2),
-        "doc_id", "text", ix, out, batchId = 0L)
-      Dedup.ingestBatchWithIndex(docs.filter(col("doc_id") > c2),
-        "doc_id", "text", ix, out, batchId = 1L)
-      Dedup.deleteFromSignatureIndex(s, ix,
+        "doc_id", Dedup.MinHashText("text"), ix, out, batchId = 0L)
+      Dedup.ingestBatch(docs.filter(col("doc_id") > c2),
+        "doc_id", Dedup.MinHashText("text"), ix, out, batchId = 1L)
+      Dedup.deleteFromIndex(s, ix,
         docs.filter(col("doc_id") % 7 === 0).select(col("doc_id")),
         "doc_id")
       Dedup.scrubOutputs(s, ix, out, "doc_id")
@@ -2006,12 +2006,12 @@ object SparkEntry {
       val ix = s"$base/ix"; val out = s"$base/out"
       Dedup.writeDigestIndex(docs.filter(col("doc_id") <= c1),
         "doc_id", "dig", ix)
-      Dedup.initDigestIngestLedger(s, ix)
-      Dedup.ingestBatchWithDigestIndex(
+      Dedup.initIngestLedger(s, ix)
+      Dedup.ingestBatch(
         docs.filter(col("doc_id") > c1 && col("doc_id") <= c2),
-        "doc_id", "dig", ix, out, batchId = 0L)
-      Dedup.ingestBatchWithDigestIndex(docs.filter(col("doc_id") > c2),
-        "doc_id", "dig", ix, out, batchId = 1L)
+        "doc_id", Dedup.Digests("dig"), ix, out, batchId = 0L)
+      Dedup.ingestBatch(docs.filter(col("doc_id") > c2),
+        "doc_id", Dedup.Digests("dig"), ix, out, batchId = 1L)
       s.read.parquet(s"$out/batch_id=0").withColumn("batch_id", lit(0L))
         .union(s.read.parquet(s"$out/batch_id=1")
           .withColumn("batch_id", lit(1L)))
@@ -2041,12 +2041,14 @@ object SparkEntry {
       val docs = all.filter(col("doc_id") <= c0).select("doc_id", "text")
       val p = Dedup.MinHashParams(numHashes = 32, bands = 8,
         shingle = 3, threshold = 0.2)
-      Dedup.buildTwoShardDeployment(docs, "doc_id", "text", c0 * 3 / 5,
-        p, work)
+      Dedup.buildTwoShardDeployment(docs, "doc_id",
+          Dedup.MinHashText("text"), c0 * 3 / 5, work)((d, ix) =>
+        Dedup.writeSignatureIndex(d, "doc_id", "text", ix, p))
       GraftFunctions.register(s)
       val shards = (0 to 1).map(i =>
         Dedup.GovernedShardPaths(s"$work/ix$i", s"$work/out$i"))
-      Dedup.reconcileShardOutputs(s, shards, "doc_id", "text")
+      Dedup.reconcileShardOutputs(s, shards, "doc_id",
+        Dedup.MinHashText("text"))
       shards.zipWithIndex.map { case (sh, i) =>
           s.read.parquet(sh.outPath).select(col("doc_id"))
             .withColumn("shard", lit(i.toLong))
@@ -2056,7 +2058,7 @@ object SparkEntry {
 
     // p9's digest-family twin: the same even/odd two-shard deployment
     // under the governed EXACT-dedup loop (p8's family), reconciled by
-    // reconcileShardOutputsDigest — one digest equi-join star over the
+    // reconcileShardOutputs — one digest equi-join star over the
     // union of the served corpora, drops fed back through each owning
     // shard's tombstone + scrub machinery. Full corpus (the exact
     // screen is cheap — no signature computation); oracle replays the
@@ -2071,12 +2073,13 @@ object SparkEntry {
           sha2(substring(col("text"), 1, 30).cast("binary"), 256))
         .select("doc_id", "dig")
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      Dedup.buildTwoShardDigestDeployment(docs, "doc_id", "dig",
-        maxId * 3 / 5, work)
+      Dedup.buildTwoShardDeployment(docs, "doc_id", Dedup.Digests("dig"),
+          maxId * 3 / 5, work)((d, ix) =>
+        Dedup.writeDigestIndex(d, "doc_id", "dig", ix))
       GraftFunctions.register(s)
       val shards = (0 to 1).map(i =>
         Dedup.GovernedShardPaths(s"$work/ix$i", s"$work/out$i"))
-      Dedup.reconcileShardOutputsDigest(s, shards, "doc_id", "dig")
+      Dedup.reconcileShardOutputs(s, shards, "doc_id", Dedup.Digests("dig"))
       shards.zipWithIndex.map { case (sh, i) =>
           s.read.parquet(sh.outPath).select(col("doc_id"))
             .withColumn("shard", lit(i.toLong))
@@ -4611,7 +4614,7 @@ object SparkEntry {
     // (within-batch min-id representative per digest + bootstrap-corpus
     // digest anti-join, both parity-local) followed by the cross-shard
     // min-id star over the union of the shards' novel outputs — exactly
-    // what reconcileShardOutputsDigest leaves in the serving corpora.
+    // what reconcileShardOutputs (Digests) leaves in the serving corpora.
     // Each (digest, shard) admits at most one novel row, so a union
     // group has at most two members and the star is the pairwise join.
     "p10_cross_shard_reconcile_digest" ->

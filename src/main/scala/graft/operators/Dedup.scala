@@ -219,6 +219,147 @@ object Dedup {
     }
   }
 
+  // ---- governed index families ----
+  //
+  // One lifecycle serves the three persisted index families. Operations
+  // that read a payload column (governed ingest, quarantine redrive,
+  // cross-shard reconcile, the governed stream) take an [[IndexFamily]]
+  // value naming it; the payload-free ones (delete, compaction, ledger
+  // init) take only the path and read the family from the index's own
+  // params row. Either way a family that does not match the index, or a
+  // path that holds no governed index, is refused before any write.
+
+  /** The payload a governed operation screens, and so which index
+    * family it expects at the path. */
+  sealed trait IndexFamily {
+    def payloadCol: String
+    private[Dedup] def kind: IndexKind
+  }
+
+  /** MinHash text near-dup over a [[writeSignatureIndex]] index. */
+  final case class MinHashText(textCol: String) extends IndexFamily {
+    def payloadCol: String = textCol
+    private[Dedup] def kind: IndexKind = MinHashKind
+  }
+
+  /** SRP embedding near-dup over a [[writeSrpIndex]] index, pairs
+    * verified at exact cosine >= `threshold`. */
+  final case class SrpVectors(vecCol: String, threshold: Double)
+      extends IndexFamily {
+    def payloadCol: String = vecCol
+    private[Dedup] def kind: IndexKind = SrpKind
+  }
+
+  /** Exact dedup on a content digest over a [[writeDigestIndex]] index. */
+  final case class Digests(digCol: String) extends IndexFamily {
+    def payloadCol: String = digCol
+    private[Dedup] def kind: IndexKind = DigestKind
+  }
+
+  /** What the payload-free lifecycle knows of a family: the
+    * append-accreting primary row table, the key columns of its sharded
+    * table (the bucket table when it has one, else the primary), the
+    * bucket table, and `open`, the validating index open, which answers
+    * the index's shard count (0 = legacy unsharded). */
+  private sealed abstract class IndexKind(val name: String,
+                                          val primary: String,
+                                          val keyCols: Seq[String],
+                                          val buckets: Option[String]) {
+    def open(spark: org.apache.spark.sql.SparkSession, path: String): Int
+  }
+
+  private case object MinHashKind extends IndexKind("MinHash signature",
+      "signatures", Seq("band", "bkey"), Some("bands")) {
+    def open(spark: org.apache.spark.sql.SparkSession, path: String): Int =
+      readSignatureIndex(spark, path).shards
+  }
+
+  private case object SrpKind extends IndexKind("SRP embedding", "vectors",
+      Seq("tbl", "bkt"), Some("buckets")) {
+    def open(spark: org.apache.spark.sql.SparkSession, path: String): Int =
+      readSrpIndex(spark, path).shards
+  }
+
+  private case object DigestKind extends IndexKind("digest", "digests",
+      Seq("dig"), None) {
+    def open(spark: org.apache.spark.sql.SparkSession, path: String): Int =
+      readDigestIndex(spark, path).shards
+  }
+
+  /** The family a params row records: MinHash rows carry `num_hashes`,
+    * SRP rows `planes`, digest rows only `shards` beside the format
+    * stamp. None for any other params table (an IVF layout's). */
+  private def kindOfParams(pr: org.apache.spark.sql.Row): Option[IndexKind] = {
+    val f = pr.schema.fieldNames.toSet
+    if (f("num_hashes")) Some(MinHashKind)
+    else if (f("planes")) Some(SrpKind)
+    else if (f("shards")) Some(DigestKind)
+    else None
+  }
+
+  /** The params row at `path`, format-checked; refuses a path without a
+    * readable params table. */
+  private def supportedParams(spark: org.apache.spark.sql.SparkSession,
+                              path: String): org.apache.spark.sql.Row = {
+    val pr =
+      try readParamsRow(spark, s"$path/params")
+      catch {
+        case e: Exception => throw new IllegalArgumentException(
+          s"no governed index at $path: no readable params table — was it " +
+            "written by writeSignatureIndex / writeSrpIndex / " +
+            "writeDigestIndex?", e)
+      }
+    requireSupportedFormat(pr, path)
+    pr
+  }
+
+  private def noGovernedIndex(path: String) = new IllegalArgumentException(
+    s"no governed index at $path: its params table records no MinHash, " +
+      "SRP or digest index geometry")
+
+  /** The params row of every governed index open: format-checked and
+    * refused unless the index at `path` is of family `kind`. */
+  private def governedParams(spark: org.apache.spark.sql.SparkSession,
+                             path: String,
+                             kind: IndexKind): org.apache.spark.sql.Row = {
+    val pr = supportedParams(spark, path)
+    kindOfParams(pr) match {
+      case Some(k) if k == kind => pr
+      case Some(k) => throw new IllegalArgumentException(
+        s"the index at $path is of the ${k.name} family, not ${kind.name}")
+      case None => throw noGovernedIndex(path)
+    }
+  }
+
+  /** The family of the governed index at `path`, read from its params
+    * row — the dispatch of the payload-free lifecycle operations, which
+    * call it before any write. A params table parked under a swap marker
+    * by a crashed [[stampIndexFormatVersion]] is healed first. */
+  private def indexKindAt(spark: org.apache.spark.sql.SparkSession,
+                          path: String): IndexKind = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val pr =
+      try supportedParams(spark, path)
+      catch {
+        case _: IllegalArgumentException if swapLeftoverSubs(
+            root.getFileSystem(spark.sparkContext.hadoopConfiguration),
+            root).contains("params") =>
+          recoverCompaction(spark, path)
+          supportedParams(spark, path)
+      }
+    kindOfParams(pr).getOrElse(throw noGovernedIndex(path))
+  }
+
+  /** The family of the index at `path`, refused unless it is `family`'s. */
+  private def requireFamily(spark: org.apache.spark.sql.SparkSession,
+                            path: String, family: IndexFamily): IndexKind = {
+    val kind = indexKindAt(spark, path)
+    require(kind == family.kind,
+      s"the index at $path is of the ${kind.name} family, not " +
+        s"${family.kind.name} ($family)")
+    kind
+  }
+
   /** Drop cached schemas under an index root — called by the overwrite
     * builds (writeSignatureIndex/writeSrpIndex), which are the only
     * operations allowed to change a table's schema (e.g. rebuilding a
@@ -1196,10 +1337,10 @@ object Dedup {
   // governed ingest loops and maintenance appends all see the retained
   // corpus immediately, O(tombstones) extra work per open (broadcast
   // when small, absent ⇒ zero cost). Physical reclamation is
-  // compaction's job: compactSignatureIndex / compactSrpIndex drop
-  // tombstoned rows from every table, append NEGATIVE occupancy deltas
-  // for the dropped bucket rows (so the write-time caps re-open for
-  // future ingest), and fold the tombstone table away.
+  // compaction's job: compactIndex drops tombstoned rows from every
+  // table, appends NEGATIVE occupancy deltas for the dropped bucket
+  // rows (so the write-time caps re-open for future ingest), and folds
+  // the tombstone table away.
   //
   // Contract: deleted ids are never re-ingested (takedown ids are
   // retired, not recycled — while a tombstone is pending, a re-ingested
@@ -1316,7 +1457,7 @@ object Dedup {
     val t = ids.select(col(idCol).try_cast("long").as("id")).distinct()
       .localCheckpoint()
     require(t.filter(col("id").isNull).limit(1).isEmpty,
-      s"deleteFrom*Index: '$idCol' values must cast to long (the index " +
+      s"deleteFromIndex: '$idCol' values must cast to long (the index " +
         "id contract)")
     // one file per delete op: tombstone sets are id-only longs (a
     // million ids ≈ 8 MB), and the table is folded away at compaction
@@ -1324,43 +1465,26 @@ object Dedup {
     graft.plans.Checkpoints.free(t)
   }
 
-  /** Delete (retract) ids from a persisted signature index. Takes
-    * effect on the NEXT index open: probes and the governed ingest loop
-    * stop matching the deleted docs immediately; their bytes are
-    * reclaimed — and their bucket-cap slots re-opened — by the next
-    * [[compactSignatureIndex]]. Deleting ids the index does not contain
-    * is a harmless no-op. Counts as a mutation under the epoch fence:
-    * a governed batch in flight aborts (and replays) rather than
+  /** Delete (retract) ids from the persisted index at `path`, of any
+    * family. Takes effect on the NEXT index open: probes and the
+    * governed ingest loop stop matching the deleted docs immediately;
+    * their bytes are reclaimed — and their bucket-cap slots re-opened —
+    * by the next [[compactIndex]]. Deleting ids the index does not
+    * contain is a harmless no-op. Counts as a mutation under the epoch
+    * fence: a governed batch in flight aborts (and replays) rather than
     * committing over the changed index.
     */
-  def deleteFromSignatureIndex(spark: org.apache.spark.sql.SparkSession,
-                               path: String, ids: DataFrame,
-                               idCol: String): Unit = {
-    readSignatureIndex(spark, path) // validates the index + params
+  def deleteFromIndex(spark: org.apache.spark.sql.SparkSession,
+                      path: String, ids: DataFrame, idCol: String): Unit = {
+    indexKindAt(spark, path).open(spark, path) // validates index + params
     appendTombstones(spark, path, ids, idCol)
   }
 
-  /** [[deleteFromSignatureIndex]] for a driver-side id list. */
-  def deleteFromSignatureIndex(spark: org.apache.spark.sql.SparkSession,
-                               path: String, ids: Seq[Long]): Unit = {
+  /** [[deleteFromIndex]] for a driver-side id list. */
+  def deleteFromIndex(spark: org.apache.spark.sql.SparkSession,
+                      path: String, ids: Seq[Long]): Unit = {
     import spark.implicits._
-    deleteFromSignatureIndex(spark, path, ids.toDF("id"), "id")
-  }
-
-  /** [[deleteFromSignatureIndex]]'s twin for a persisted SRP embedding
-    * index — same visibility, reclamation, and epoch semantics. */
-  def deleteFromSrpIndex(spark: org.apache.spark.sql.SparkSession,
-                         path: String, ids: DataFrame,
-                         idCol: String): Unit = {
-    readSrpIndex(spark, path) // validates the index + params
-    appendTombstones(spark, path, ids, idCol)
-  }
-
-  /** [[deleteFromSrpIndex]] for a driver-side id list. */
-  def deleteFromSrpIndex(spark: org.apache.spark.sql.SparkSession,
-                         path: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    deleteFromSrpIndex(spark, path, ids.toDF("id"), "id")
+    deleteFromIndex(spark, path, ids.toDF("id"), "id")
   }
 
   /** The per-compactor pieces of a pending tombstone purge, prepared
@@ -1379,23 +1503,22 @@ object Dedup {
     def force: Boolean = tomb.isDefined
   }
 
-  /** Shared tombstone prologue of [[compactSignatureIndex]] /
-    * [[compactSrpIndex]] — parameterized only by the bucket table's name
-    * and key columns, so a purge-semantics fix can never diverge between
-    * the two index families. */
+  /** Tombstone prologue of [[compactIndex]]. Only a sharded index with a
+    * bucket table keeps occupancy, so only there are negative occupancy
+    * deltas counted. */
   private def preparePurge(spark: org.apache.spark.sql.SparkSession,
-                           path: String, bucketSub: String,
-                           keyCols: Seq[String],
+                           path: String, kind: IndexKind,
                            shards: Int): PendingPurge = {
     val files = listTombstoneFiles(spark, path)
     val tomb = readTombstones(spark, path).map(_.localCheckpoint())
-    val negOcc = if (shards > 0) tomb.map { t =>
-      readIndexTable(spark, s"$path/$bucketSub")
-        .join(t, Seq("id"), "left_semi")
-        .groupBy((col("shard") +: keyCols.map(col)): _*)
-        .agg((-count(lit(1))).as("occ"))
-        .localCheckpoint()
-    } else None
+    val negOcc = for {
+      bucketSub <- kind.buckets if shards > 0
+      t <- tomb
+    } yield readIndexTable(spark, s"$path/$bucketSub")
+      .join(t, Seq("id"), "left_semi")
+      .groupBy((col("shard") +: kind.keyCols.map(col)): _*)
+      .agg((-count(lit(1))).as("occ"))
+      .localCheckpoint()
     PendingPurge(tomb, files, negOcc)
   }
 
@@ -1485,7 +1608,7 @@ object Dedup {
   //
   // The governed loops WRITE data, not just index rows: every committed
   // batch lands its novel docs under `out/batch_id=N/` — the corpus a
-  // downstream consumer actually serves. deleteFrom*Index retracts index
+  // downstream consumer actually serves. deleteFromIndex retracts index
   // rows (probes stop matching, compaction reclaims bytes), but for the
   // privacy-delete story the served data matters more than the index:
   // scrubOutputs anti-joins every batch output directory against the
@@ -1801,18 +1924,12 @@ object Dedup {
 
   /** Open a persisted signature index written by [[writeSignatureIndex]].
     * Fails loudly on an index without a params table — probing a
-    * params-less index would bypass the geometry check.
+    * params-less index would bypass the geometry check — and on another
+    * family's index.
     */
   def readSignatureIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String): MinHashIndex = {
-    val pr =
-      try readParamsRow(spark, s"$path/params")
-      catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"signature index at $path has no readable params table — " +
-            "was it written by writeSignatureIndex?", e)
-      }
-    requireSupportedFormat(pr, path)
+    val pr = governedParams(spark, path, MinHashKind)
     val p = MinHashParams(numHashes = pr.getAs[Int]("num_hashes"),
       bands = pr.getAs[Int]("bands"), shingle = pr.getAs[Int]("shingle"),
       threshold = pr.getAs[Double]("threshold"),
@@ -1931,15 +2048,20 @@ object Dedup {
     graft.plans.Checkpoints.free(capped)
   }
 
-  /** Compact a persisted signature index in place. Every
-    * [[appendSignatureIndex]] lands one batch-sized file set per table,
-    * so a daily-ingest index accumulates hundreds of small files — each
-    * probe then pays per-file open/footer costs and tiny row groups
-    * defeat min/max pruning. Compaction rewrites the two tables with
-    * IDENTICAL content into right-sized, probe-friendly layouts:
-    * signatures range-partitioned by id (the verify join prunes on id
-    * min/max), bands hash-clustered by (band, bkey) (the probe join's
-    * key — co-located row groups). Params are untouched.
+  /** Compact the persisted index at `path` in place, whatever its
+    * family (read from its params row). Every append lands one
+    * batch-sized file set per table, so a daily-ingest index accumulates
+    * hundreds of small files — each probe then pays per-file
+    * open/footer costs and tiny row groups defeat min/max pruning.
+    * Compaction rewrites the family's tables with IDENTICAL content into
+    * right-sized, probe-friendly layouts: a bucket-table family's
+    * primary rows (`signatures` / `vectors`) range-partitioned by id
+    * (the verify join prunes on id min/max), its bucket table (`bands` /
+    * `buckets`) hash-clustered by the probe join's key; a digest index's
+    * `digests` clustered by (shard, dig). Sharded tables keep their
+    * partitionBy(shard) layout. The occupancy, ledger and stats tables
+    * fold too, and pending tombstones are physically purged. Params are
+    * untouched.
     *
     * Swap is write-to-temp → rename-aside → rename per table: the old
     * directory is moved to `__old_<sub>` BEFORE the temp renames into
@@ -1954,82 +2076,64 @@ object Dedup {
     *
     * @return per-table (files before, files after), for observability
     */
+  def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+                   targetFileBytes: Long = TargetFileBytes)
+      : Map[String, (Int, Int)] =
+    compactAs(spark, path, indexKindAt(spark, path), targetFileBytes)
+
+  /** [[compactIndex]] under its MinHash-era name, kept for source
+    * compatibility with existing callers. */
   def compactSignatureIndex(spark: org.apache.spark.sql.SparkSession,
-                            path: String,
-                            targetFileBytes: Long = 128L << 20)
-      : Map[String, (Int, Int)] = {
+                            path: String): Map[String, (Int, Int)] =
+    compactIndex(spark, path)
+
+  /** Default compaction target: ~128 MB per rewritten file. */
+  private val TargetFileBytes = 128L << 20
+
+  private def compactAs(spark: org.apache.spark.sql.SparkSession,
+                        path: String, kind: IndexKind,
+                        targetFileBytes: Long): Map[String, (Int, Int)] = {
     // Heal a torn previous compaction BEFORE anything reads the tables:
-    // readSignatureIndex / preparePurge materialize eagerly, and a table
+    // the open and preparePurge materialize eagerly, and a table
     // stranded in a swap-marker directory would fail them before
     // compactIndexTables' own (now redundant) in-flight heal could run.
     recoverCompaction(spark, path)
-    val ix = readSignatureIndex(spark, path) // validates index + params
-    val sharded = if (ix.shards > 0) Seq("shard") else Nil
-    // Pending tombstones — prologue/epilogue shared with the SRP twin
-    // (see preparePurge/purgeTombstones for the crash-window and
-    // negative-delta semantics)
-    val purge = preparePurge(spark, path, "bands", Seq("band", "bkey"),
-      ix.shards)
-    val res = compactIndexTables(spark, path, targetFileBytes, Seq(
-      IndexTableLayout("signatures",
-        (df, n) => purge.live(df).repartitionByRange(n, col("id")),
-        force = purge.force),
-      // sharded tables cluster by (shard, key...) and keep their
-      // partitionBy("shard") layout — flattening shard to a data column
-      // would disable the storage-level pruning sharding exists for
-      IndexTableLayout("bands",
-        (df, n) => purge.live(df).repartition(n,
-          (sharded.map(col) ++ Seq(col("band"), col("bkey"))): _*),
-        partitionCols = sharded, force = purge.force),
-      occupancyLayout(sharded, Seq("band", "bkey")),
-      // the ingest ledger / stats tables accrete one tiny file per
-      // committed batch — same small-files decay, same cure (rows
-      // preserved verbatim); absent tables skip as (0, 0). Epoch claim
-      // FILES are pruned separately (compactIndexTables keeps only the
-      // current claim).
-      IndexTableLayout("ingest_ledger",
-        (df, n) => df.repartitionByRange(n, col("batch_id"))),
-      IndexTableLayout("ingest_stats",
-        (df, n) => df.repartitionByRange(n, col("batch_id")))))
+    val shards = kind.open(spark, path) // validates index + params
+    val sharded = if (shards > 0) Seq("shard") else Nil
+    // see preparePurge/purgeTombstones for the crash-window and
+    // negative-delta semantics
+    val purge = preparePurge(spark, path, kind, shards)
+    // sharded tables cluster by (shard, key...) and keep their
+    // partitionBy("shard") layout — flattening shard to a data column
+    // would disable the storage-level pruning sharding exists for
+    def clustered(sub: String) = IndexTableLayout(sub,
+      (df, n) => purge.live(df).repartition(n,
+        (sharded ++ kind.keyCols).map(col): _*),
+      partitionCols = sharded, force = purge.force)
+    val rowTables = kind.buckets match {
+      case Some(bucketSub) => Seq(
+        IndexTableLayout(kind.primary,
+          (df, n) => purge.live(df).repartitionByRange(n, col("id")),
+          force = purge.force),
+        clustered(bucketSub),
+        occupancyLayout(sharded, kind.keyCols))
+      case None => Seq(clustered(kind.primary))
+    }
+    // the ingest ledger / stats tables accrete one tiny file per
+    // committed batch — same small-files decay, same cure (rows
+    // preserved verbatim); absent tables skip as (0, 0). Epoch claim
+    // FILES are pruned separately (compactIndexTables keeps only the
+    // current claim).
+    val res = compactIndexTables(spark, path, targetFileBytes,
+      rowTables ++ Seq("ingest_ledger", "ingest_stats").map(sub =>
+        IndexTableLayout(sub,
+          (df, n) => df.repartitionByRange(n, col("batch_id")))))
     finishPurge(spark, path, purge)
     res
   }
 
-  /** [[compactSignatureIndex]]'s twin for the persisted SRP embedding
-    * index ([[writeSrpIndex]] / [[appendSrpIndex]]): vectors
-    * range-partitioned by id (candidate verification joins prune on id),
-    * buckets hash-clustered by (tbl, bkt) (the probe join's key).
-    */
-  def compactSrpIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String,
-                      targetFileBytes: Long = 128L << 20)
-      : Map[String, (Int, Int)] = {
-    // pre-read heal — see compactSignatureIndex
-    recoverCompaction(spark, path)
-    val ix = readSrpIndex(spark, path) // validates the index + params
-    val sharded = if (ix.shards > 0) Seq("shard") else Nil
-    // tombstone purge — shared core, see compactSignatureIndex
-    val purge = preparePurge(spark, path, "buckets", Seq("tbl", "bkt"),
-      ix.shards)
-    val res = compactIndexTables(spark, path, targetFileBytes, Seq(
-      IndexTableLayout("vectors",
-        (df, n) => purge.live(df).repartitionByRange(n, col("id")),
-        force = purge.force),
-      IndexTableLayout("buckets",
-        (df, n) => purge.live(df).repartition(n,
-          (sharded.map(col) ++ Seq(col("tbl"), col("bkt"))): _*),
-        partitionCols = sharded, force = purge.force),
-      occupancyLayout(sharded, Seq("tbl", "bkt")),
-      IndexTableLayout("ingest_ledger",
-        (df, n) => df.repartitionByRange(n, col("batch_id"))),
-      IndexTableLayout("ingest_stats",
-        (df, n) => df.repartitionByRange(n, col("batch_id")))))
-    finishPurge(spark, path, purge)
-    res
-  }
-
-  /** The occupancy table's compaction recipe, shared by both index
-    * families. The replay-duplicate fold (`dropDuplicates` — a replayed
+  /** The occupancy table's compaction recipe, shared by the two
+    * bucket-table families. The replay-duplicate fold (`dropDuplicates` — a replayed
     * governed attempt can append a byte-identical positive delta)
     * applies to POSITIVE rows only: a purge's negative rows are written
     * exactly once per purge by construction (a crashed epilogue re-run
@@ -2060,72 +2164,65 @@ object Dedup {
         .repartition(n, (sharded.map(col) ++ keyCols.map(col)): _*),
       partitionCols = sharded)
 
-  /** Fragmentation-measured compaction trigger: compact ONLY when the
-    * index has measurably decayed — the governed streams' in-loop
-    * compaction (`autoCompact = true`). The measure is the
-    * append-accreting primary row table
-    * (`signatures` / `vectors` — every committed batch lands exactly one
+  /** Fragmentation-measured compaction trigger: compact the index at
+    * `path` ONLY when it has measurably decayed — the governed streams'
+    * in-loop compaction (`autoCompact = true`). The measure is the
+    * family's append-accreting primary row table (`signatures` /
+    * `vectors` / `digests` — every committed batch lands exactly one
     * file set there): the index is fragmented when that table holds at
-    * least `fragmentFactor` × the file count a compaction would rewrite
-    * it to (ceil(bytes / targetFileBytes)), i.e. when a compaction
-    * would fold ≥ factor× — anything less is churn. Pending tombstones
-    * also trigger (compaction is what physically reclaims deletes).
+    * least [[FragmentFactor]] × the file count a default compaction
+    * would rewrite it to (ceil(bytes / 128 MB)), i.e. when a
+    * compaction would fold ≥ factor× — anything less is churn. Pending
+    * tombstones also trigger (compaction is what physically reclaims
+    * deletes).
     *
-    * Cost per call: ONE driver-side listing of one flat directory —
-    * O(files) names, and self-limiting, because compaction fires before
-    * the listing can grow past ~factor × the byte-implied file count.
+    * Cost per call: the family read from the params row (a listing of
+    * `params/`; the row itself comes from the generation-keyed cache),
+    * then a driver-side listing of the primary table's directory tree
+    * and one of `tombstones/`. The primary listing is O(files) names,
+    * and self-limiting, because compaction fires before it can grow
+    * past ~factor × the byte-implied file count. The governed stream
+    * resolves the family once at open, so its per-batch trigger skips
+    * the params read.
     * Note a freshly built small index is often "fragmented" by this
     * measure (a parallel build writes one file per task); the first
     * trigger folds that too, then the index stays quiet until real
     * append decay accrues.
     */
-  def autoCompactSignatureIndex(spark: org.apache.spark.sql.SparkSession,
-                                path: String,
-                                targetFileBytes: Long = 128L << 20,
-                                fragmentFactor: Int = 8,
-                                preCompact: () => Unit = () => ())
+  def autoCompactIndex(spark: org.apache.spark.sql.SparkSession,
+                       path: String, preCompact: () => Unit = () => ())
       : Option[Map[String, (Int, Int)]] =
-    if (indexFragmented(spark, path, "signatures", targetFileBytes,
-        fragmentFactor) || listTombstoneFiles(spark, path).nonEmpty) {
+    autoCompactAs(spark, path, indexKindAt(spark, path), preCompact)
+
+  /** The fold a primary table must reach before [[autoCompactIndex]]
+    * fires: 8× the file count a compaction would leave. */
+  private val FragmentFactor = 8
+
+  private def autoCompactAs(spark: org.apache.spark.sql.SparkSession,
+                            path: String, kind: IndexKind,
+                            preCompact: () => Unit)
+      : Option[Map[String, (Int, Int)]] =
+    if (indexFragmented(spark, path, kind.primary) ||
+        listTombstoneFiles(spark, path).nonEmpty) {
       // fires only when the compaction will: an external maintenance
       // loop hangs its scrub-before-purge pass here and pays it exactly
       // once per compaction (the governed streams gate their in-loop
       // scrubs on the pending-tombstone-set change instead — see
       // StreamOps — so takedown serving latency stays ≤1 batch)
       preCompact()
-      Some(compactSignatureIndex(spark, path, targetFileBytes))
+      Some(compactAs(spark, path, kind, TargetFileBytes))
     } else None
 
-  /** [[autoCompactSignatureIndex]]'s twin for the SRP embedding index
-    * (measured on the `vectors` table). */
-  def autoCompactSrpIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String,
-                          targetFileBytes: Long = 128L << 20,
-                          fragmentFactor: Int = 8,
-                          preCompact: () => Unit = () => ())
-      : Option[Map[String, (Int, Int)]] =
-    if (indexFragmented(spark, path, "vectors", targetFileBytes,
-        fragmentFactor) || listTombstoneFiles(spark, path).nonEmpty) {
-      preCompact()
-      Some(compactSrpIndex(spark, path, targetFileBytes))
-    } else None
-
-  /** The fragmentation measure of one table — see
-    * [[autoCompactSignatureIndex]]. */
+  /** The fragmentation measure of one table — see [[autoCompactIndex]]. */
   private def indexFragmented(spark: org.apache.spark.sql.SparkSession,
-                              path: String, sub: String,
-                              targetFileBytes: Long,
-                              fragmentFactor: Int): Boolean = {
-    require(fragmentFactor >= 2,
-      s"fragmentFactor must be >= 2 (got $fragmentFactor): 1 would " +
-        "re-trigger on every file-count above the byte-implied minimum")
+                              path: String, sub: String): Boolean = {
     val dir = new org.apache.hadoop.fs.Path(s"$path/$sub")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) false
     else {
       val files = listParquetFilesRec(fs, dir)
       val parts = math.max(1L, math.ceil(
-        files.map(_.getLen).sum.toDouble / targetFileBytes).toLong)
+        files.map(_.getLen).sum.toDouble / TargetFileBytes).toLong)
       // Fragmentation is measured against the ACHIEVABLE floor: a
       // partitionBy table cannot have fewer files than its occupied
       // partition directories, so a byte-implied minimum below that
@@ -2137,7 +2234,7 @@ object Dedup {
       // parent dir, so their floor stays 1.
       val dirFloor = files.iterator.map(_.getPath.getParent).toSet.size
       files.length >=
-        fragmentFactor.toLong * math.max(parts, dirFloor.toLong)
+        FragmentFactor.toLong * math.max(parts, dirFloor.toLong)
     }
   }
 
@@ -2146,7 +2243,7 @@ object Dedup {
     * (`__compacting_<sub>` — the rewritten temp — and/or `__old_<sub>` —
     * the moved-aside original) with the table dir itself possibly
     * absent; every subsequent index open then fails loudly, and with
-    * in-loop compaction ([[graft.streaming.StreamOps.indexedDedupStream]]'s
+    * in-loop compaction ([[graft.streaming.StreamOps.governedDedupStream]]'s
     * `autoCompact`) that means a restarted stream fails on every batch
     * until someone repairs the directory by hand. This runs the repair
     * automatically: at compaction start and at governed-stream open
@@ -2927,14 +3024,7 @@ object Dedup {
   /** Open a persisted SRP index written by [[writeSrpIndex]]. */
   def readSrpIndex(spark: org.apache.spark.sql.SparkSession,
                    path: String): SrpIndex = {
-    val pr =
-      try readParamsRow(spark, s"$path/params")
-      catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"SRP index at $path has no readable params table — was it " +
-            "written by writeSrpIndex?", e)
-      }
-    requireSupportedFormat(pr, path)
+    val pr = governedParams(spark, path, SrpKind)
     // shards absent on a pre-sharding index: 0 disables partition pruning
     val shards = if (pr.schema.fieldNames.contains("shards"))
       pr.getAs[Int]("shards") else 0
@@ -3679,7 +3769,7 @@ object Dedup {
       .orderBy(col(idCol))
   }
 
-  /** Per-batch outcome of [[ingestBatchWithIndex]], for observability and
+  /** Per-batch outcome of [[ingestBatch]], for observability and
     * for the specs that assert replay idempotence.
     */
   final case class IngestBatchStats(batchId: Long, batchRows: Long,
@@ -3732,46 +3822,43 @@ object Dedup {
         "watermark_after" -> s.watermarkAfter))
   }
 
-  /** Bootstrap the ingest ledger of a signature index — the committed-
-    * watermark record [[ingestBatchWithIndex]] is governed by. Must run
-    * while the index is CONSISTENT (right after [[writeSignatureIndex]] /
-    * [[appendSignatureIndex]], or at stream setup before any governed
-    * batch): the current signature max becomes the base watermark, below
-    * which every row is treated as committed corpus. Idempotent — a
-    * ledger that already exists is left untouched.
+  /** Bootstrap the ingest ledger of the index at `indexPath`, of any
+    * family — the committed-watermark record [[ingestBatch]] is governed
+    * by. Must run while the index is CONSISTENT (right after its build
+    * or maintenance append, or at stream setup before any governed
+    * batch): the max id of the family's primary row table becomes the
+    * base watermark, below which every row is treated as committed
+    * corpus. Idempotent — a ledger that already exists is left
+    * untouched.
     */
   def initIngestLedger(spark: org.apache.spark.sql.SparkSession,
                        indexPath: String): Unit =
-    initLedger(spark, indexPath, "signatures")(
-      readSignatureIndex(spark, indexPath))
+    initLedger(spark, indexPath, indexKindAt(spark, indexPath))
 
-  /** [[initIngestLedger]] for a persisted SRP embedding index — the base
-    * watermark comes from the index's vector table. */
-  def initSrpIngestLedger(spark: org.apache.spark.sql.SparkSession,
-                          indexPath: String): Unit =
-    initLedger(spark, indexPath, "vectors")(readSrpIndex(spark, indexPath))
-
-  /** [[initIngestLedger]] for a persisted digest index — the base
-    * watermark comes from the physical digest table. */
-  def initDigestIngestLedger(spark: org.apache.spark.sql.SparkSession,
-                             indexPath: String): Unit =
-    initLedger(spark, indexPath, "digests")(
-      readDigestIndex(spark, indexPath))
-
-  /** Ledger init shared by the three index families: `open` validates
-    * the index + params; `primary` is the row table whose physical max
-    * id becomes the base watermark. */
   private def initLedger(spark: org.apache.spark.sql.SparkSession,
-                         indexPath: String, primary: String)
-                        (open: => Any): Unit = {
+                         indexPath: String, kind: IndexKind): Unit = {
     // stream-open healing: a crash mid-in-loop-compaction must not leave
     // the restarted stream failing on an absent table dir
     recoverCompaction(spark, indexPath)
-    open
+    kind.open(spark, indexPath) // validates index + params
     // base watermark from the PHYSICAL table, not the tombstone-filtered
     // view: deleted ids stay retired, so the watermark must clear every
     // id ever written (id reuse would collide with pending tombstones)
-    bootstrapLedger(spark, indexPath, primary)
+    bootstrapLedger(spark, indexPath, kind.primary)
+  }
+
+  /** Stream open of the governed loop
+    * ([[graft.streaming.StreamOps.governedDedupStream]]): refuses a
+    * `family` the index at `indexPath` is not of, bootstraps the ledger,
+    * and returns the in-loop compaction trigger (true = compacted), bound
+    * to the family resolved here so a batch adds no params read. */
+  private[graft] def openGovernedIndex(spark: org.apache.spark.sql.SparkSession,
+                                       indexPath: String,
+                                       family: IndexFamily): () => Boolean = {
+    val kind = requireFamily(spark, indexPath, family)
+    initLedger(spark, indexPath, kind)
+    () => autoCompactAs(spark, indexPath, kind, () => ())
+      .isDefined
   }
 
   /** Physical max id of an index row table — the monotone-id
@@ -3981,35 +4068,49 @@ object Dedup {
     math.max(1, math.min(prev, (expandedRows / 65536L + 1).toInt))
 
   /** One micro-batch of the production incremental-dedup loop, EXACTLY
-    * ONCE under crash/replay — the piece that turns the persisted
-    * signature index into a streaming ingest pipeline
-    * (`StreamOps.indexedDedupStream` wraps this in `foreachBatch`).
+    * ONCE under crash/replay — the piece that turns a persisted index
+    * into a streaming ingest pipeline
+    * (`StreamOps.governedDedupStream` wraps this in `foreachBatch`).
     *
-    * Per batch: within-batch near-dups collapse to their cluster
-    * representative (min id, the same policy as `Pipelines.trainingCorpus`),
-    * survivors are screened against the COMMITTED corpus index, novel docs
-    * land in `outPath/batch_id=<id>/` and their signatures/bands append to
-    * the index; finally one ledger row commits the batch. The
-    * exactly-once mechanics are the governed core shared by every index
+    * Per batch: within-batch duplicates collapse to their representative
+    * (min id, the same policy as `Pipelines.trainingCorpus`), survivors
+    * are screened against the COMMITTED corpus index, novel docs land in
+    * `outPath/batch_id=<id>/` and their rows append to the index;
+    * finally one ledger row commits the batch. `family` picks the
+    * screens and must match the index at `indexPath`:
+    *  - [[MinHashText]]: MinHash near-dup, exact-Jaccard verified at the
+    *    index's threshold;
+    *  - [[SrpVectors]]: SRP-LSH under the index's own geometry
+    *    (multi-probe on), exact-cosine verified at the family's
+    *    threshold;
+    *  - [[Digests]]: exact dedup on the digest (NULL digests pass and are
+    *    not indexed), no caps or occupancy.
+    * The exactly-once mechanics are the governed core shared by every
     * family — see [[governedBatch]].
     *
     * CONTRACT: batch ids are strictly greater than the committed
-    * watermark (monotone ingest ids, same as [[appendSignatureIndex]]),
+    * watermark (monotone ingest ids, same as the maintenance appends),
     * and batches arrive through one governed stream (Structured
     * Streaming's serial foreachBatch — no concurrent writers).
     *
     * Scale shape: the committed-corpus side is the indexed probe
-    * (zero corpus text reads); everything else is batch-sized — the
+    * (zero corpus payload reads); everything else is batch-sized — the
     * ledger is one row per batch and only ≤ 1 row of it is ever
     * collected.
     */
-  def ingestBatchWithIndex(batch: DataFrame, idCol: String, textCol: String,
-                           indexPath: String, outPath: String,
-                           batchId: Long,
-                           quarantine: Boolean = false): IngestBatchStats =
-    withPinnedPlan(batch.sparkSession)(governedBatch(batch, idCol, indexPath,
-      outPath, batchId, quarantine,
-      minHashFamily(batch.sparkSession, indexPath, idCol, textCol)))
+  def ingestBatch(batch: DataFrame, idCol: String, family: IndexFamily,
+                  indexPath: String, outPath: String, batchId: Long,
+                  quarantine: Boolean = false): IngestBatchStats = {
+    val spark = batch.sparkSession
+    withPinnedPlan(spark)(governedBatch(batch, idCol, indexPath, outPath,
+      batchId, quarantine, family match {
+        case MinHashText(textCol) =>
+          minHashFamily(spark, indexPath, idCol, textCol)
+        case SrpVectors(vecCol, threshold) =>
+          srpFamily(spark, indexPath, idCol, vecCol, threshold)
+        case Digests(digCol) => digestFamily(spark, indexPath, idCol, digCol)
+      }))
+  }
 
   /** Per-batch governance scalars a governed batch resolves up front:
     * replay flag, committed watermark `w`, the batch geometry, the
@@ -4046,8 +4147,8 @@ object Dedup {
         spark.sparkContext.hadoopConfiguration, s"$indexPath/ingest_ledger")
       catch {
         case e: Exception => throw new IllegalArgumentException(
-          s"signature index at $indexPath has no ingest ledger — call " +
-            "initIngestLedger (or indexedDedupStream, which does) before " +
+          s"index at $indexPath has no ingest ledger — call " +
+            "initIngestLedger (or governedDedupStream, which does) before " +
             "governed batch ingest", e)
       }
     def l(m: Map[String, Any], k: String): Long = m(k) match {
@@ -4096,7 +4197,7 @@ object Dedup {
     * head, tail isEmpty, touched collect) and the ledger aggregate ran
     * as a fourth stage inside the first — the ledger now resolves
     * driver-side ([[ledgerFront]]), which is what lets the tail count
-    * (needs `w`) fold in. `opName` only labels the contract errors.
+    * (needs `w`) fold in.
     *
     * `physTail2` (r20): the two-table families pass their SECOND
     * physical table (bands / buckets) so the torn flag covers EITHER
@@ -4121,8 +4222,7 @@ object Dedup {
     */
   private def resolveBatchFront(b: DataFrame,
                                 idCol: String, batchId: Long,
-                                indexPath: String, opName: String,
-                                quarantine: Boolean,
+                                indexPath: String, quarantine: Boolean,
                                 physTail: DataFrame,
                                 touchedAgg: Option[DataFrame],
                                 physTail2: Option[DataFrame])
@@ -4164,7 +4264,7 @@ object Dedup {
           "out-of-order backfill should rebuild the index)")
       else None
     if (!quarantine) violation.foreach(v =>
-      throw new IllegalArgumentException(s"$opName: $v"))
+      throw new IllegalArgumentException(s"ingestBatch: $v"))
     // g_max is NULL for an EMPTY batch — never read it there (wAfter
     // stays w by the batchRows == 0 branch anyway); same for a
     // violating batch (g_max may be NULL or untrustworthy)
@@ -4268,7 +4368,7 @@ object Dedup {
         "divert, then triage")
   }
 
-  /** Re-drive a quarantined batch through the governed MinHash loop
+  /** Re-drive a quarantined batch through the governed loop of `family`
     * after repair: reads the diverted raw rows, applies `repair` (which
     * must yield trustworthy monotone ids — e.g. re-key past the current
     * watermark), ingests them fail-loud under the SAME batch id, and
@@ -4287,44 +4387,11 @@ object Dedup {
     */
   def redriveQuarantined(spark: org.apache.spark.sql.SparkSession,
                          indexPath: String, outPath: String, batchId: Long,
-                         idCol: String, textCol: String,
+                         idCol: String, family: IndexFamily,
                          repair: DataFrame => DataFrame = identity)
-      : IngestBatchStats =
-    redriveGoverned(spark, indexPath, batchId, idCol, repair,
-      "redriveQuarantined")(
-      ingestBatchWithIndex(_, idCol, textCol, indexPath, outPath, batchId))
-
-  /** [[redriveQuarantined]] for the governed SRP embedding loop. */
-  def redriveQuarantinedSrp(spark: org.apache.spark.sql.SparkSession,
-                            indexPath: String, outPath: String,
-                            batchId: Long, idCol: String, vecCol: String,
-                            threshold: Double,
-                            repair: DataFrame => DataFrame = identity)
-      : IngestBatchStats =
-    redriveGoverned(spark, indexPath, batchId, idCol, repair,
-      "redriveQuarantinedSrp")(ingestBatchWithSrpIndex(_, idCol, vecCol,
-      indexPath, outPath, batchId, threshold))
-
-  /** [[redriveQuarantined]] for the governed digest loop. */
-  def redriveQuarantinedDigest(spark: org.apache.spark.sql.SparkSession,
-                               indexPath: String, outPath: String,
-                               batchId: Long, idCol: String,
-                               digCol: String,
-                               repair: DataFrame => DataFrame = identity)
-      : IngestBatchStats =
-    redriveGoverned(spark, indexPath, batchId, idCol, repair,
-      "redriveQuarantinedDigest")(ingestBatchWithDigestIndex(_, idCol,
-      digCol, indexPath, outPath, batchId))
-
-  /** The redrive shared by the three families: `ingest` runs the
-    * family's governed batch fail-loud under the quarantined batch id;
-    * `op` labels the errors. */
-  private def redriveGoverned(spark: org.apache.spark.sql.SparkSession,
-                              indexPath: String, batchId: Long,
-                              idCol: String,
-                              repair: DataFrame => DataFrame, op: String)
-                             (ingest: DataFrame => IngestBatchStats)
       : IngestBatchStats = {
+    requireFamily(spark, indexPath, family)
+    val op = "redriveQuarantined"
     val dir = quarantinedBatchDir(indexPath, batchId)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a scrub crash mid-swap parks the batch under __scrub_old_… —
@@ -4332,8 +4399,10 @@ object Dedup {
     recoverScrubLeftovers(fs, quarantineDir(indexPath))
     require(fs.exists(dir), s"$op: no quarantined batch $batchId at $dir")
     requireQuarantineLedgerRow(spark, indexPath, batchId, op)
-    val stats =
-      ingest(repair(liveQuarantinedRows(spark, indexPath, dir, idCol)))
+    // fail-loud under the quarantined batch id
+    val stats = ingestBatch(
+      repair(liveQuarantinedRows(spark, indexPath, dir, idCol)), idCol,
+      family, indexPath, outPath, batchId)
     require(fs.delete(dir, true),
       s"$op: could not remove $dir after the commit")
     stats
@@ -4442,9 +4511,9 @@ object Dedup {
   /** What one index family contributes to a governed micro-batch
     * ([[governedBatch]]); the exactly-once protocol itself is shared.
     *
-    * `keyCols` key the SHARDED table the cross-index probe reads — the
-    * bucket table when the family has one, else the primary table — and
-    * `shards` is its shard count (0 = legacy unsharded index).
+    * `kind` names its tables and the key columns of the SHARDED table
+    * the cross-index probe reads ([[IndexKind]]); `shards` is that
+    * table's shard count (0 = legacy unsharded index).
     * `primaryShards` is the primary table's own shard count (0 when a
     * bucket table carries the sharding).
     * `expansion` is the expanded rows per batch row the screens' shuffles
@@ -4457,11 +4526,15 @@ object Dedup {
     * primary-table rows.
     */
   private final case class GovernedFamily(
-      opName: String, primary: String, keyCols: Seq[String], shards: Int,
+      kind: IndexKind, shards: Int,
       primaryShards: Int, expansion: Long, touched: DataFrame => DataFrame,
       screens: (DataFrame, Long, Seq[Int]) => (DataFrame, DataFrame),
       primaryRows: DataFrame => DataFrame,
-      buckets: Option[GovernedBuckets])
+      buckets: Option[GovernedBuckets]) {
+    require(buckets.isDefined == kind.buckets.isDefined)
+    def primary: String = kind.primary
+    def keyCols: Seq[String] = kind.keyCols
+  }
 
   /** The committed view of an index table at watermark `w`: rows with
     * `id <= w` (see [[governedBatch]]). */
@@ -4473,12 +4546,12 @@ object Dedup {
   private def pastCommitted(w: Long): Column =
     col("id") > BatchConstants.long(w)
 
-  /** A family's capped bucket table, kept in step with `occupancy/`:
-    * `view` is the tombstone-filtered table (the occupancy source of a
-    * legacy unsharded index), `rows` derives (id, keyCols...) from
-    * primary rows, `cap` is the write-time per-bucket cap. */
-  private final case class GovernedBuckets(table: String, cap: Int,
-                                           view: DataFrame,
+  /** A family's capped bucket table (`kind.buckets`), kept in step
+    * with `occupancy/`: `view` is the tombstone-filtered table (the
+    * occupancy source of a legacy unsharded index), `rows` derives (id,
+    * keyCols...) from primary rows, `cap` is the write-time per-bucket
+    * cap. */
+  private final case class GovernedBuckets(cap: Int, view: DataFrame,
                                            rows: DataFrame => DataFrame)
 
   /** The MinHash family: signatures + capped band table. */
@@ -4498,8 +4571,7 @@ object Dedup {
       sigs.select(col("id"), explode(bandStructs).as("bk"))
         .select(col("id"), col("bk.band").as("band"),
           col("bk.bkey").as("bkey"))
-    GovernedFamily("ingestBatchWithIndex", "signatures", Seq("band", "bkey"),
-      ix.shards, primaryShards = 0, p.bands,
+    GovernedFamily(MinHashKind, ix.shards, primaryShards = 0, p.bands,
       touched = b => bandRows(signed(b).select(col(idCol).as("id"),
         col("minhash"))),
       screens = (b, w, touched) => {
@@ -4528,7 +4600,7 @@ object Dedup {
       },
       primaryRows = novel => signed(novel).select(col(idCol).as("id"),
         col("shingles"), size(col("shingles")).as("sz"), col("minhash")),
-      buckets = Some(GovernedBuckets("bands", p.maxBucket, ix.bands,
+      buckets = Some(GovernedBuckets(p.maxBucket, ix.bands,
         bandRows)))
   }
 
@@ -4575,7 +4647,7 @@ object Dedup {
     val b = batch.localCheckpoint()
     val physPrimary = readIndexTable(spark, s"$indexPath/${f.primary}")
     val physBuckets =
-      f.buckets.map(s => readIndexTable(spark, s"$indexPath/${s.table}"))
+      f.kind.buckets.map(t => readIndexTable(spark, s"$indexPath/$t"))
     // FRONT FOLD — see resolveBatchFront: ledger driver-side, then ONE
     // job for batch geometry × every physical torn-tail count × touched
     // shards.
@@ -4602,8 +4674,8 @@ object Dedup {
     // over-admit). Replay/monotonicity machinery reads physical tables
     // (the same invariant as the max-id and ledger bootstraps); the
     // filtered views serve probe/committed semantics only.
-    val front = resolveBatchFront(b, idCol, batchId, indexPath, f.opName,
-      quarantine, physPrimary,
+    val front = resolveBatchFront(b, idCol, batchId, indexPath, quarantine,
+      physPrimary,
       if (f.shards > 0)
         Some(touchedShardsAgg(f.touched(b), f.keyCols, f.shards))
       else None,
@@ -4630,7 +4702,7 @@ object Dedup {
     // (sentinel = assume over-ceiling): AQE stays on and the byte-based
     // partition floor saturates, both the right calls for an unprunable
     // full-index probe join.
-    val probed = f.buckets.fold(f.primary)(_.table)
+    val probed = f.kind.buckets.getOrElse(f.primary)
     tuneBatchExecution(spark, front.batchRows * f.expansion,
       if (f.shards > 0)
         dirBytes(spark, s"$indexPath/$probed", touched.map(k => s"shard=$k"))
@@ -4744,8 +4816,8 @@ object Dedup {
             capped.join(tailPruned.select(keyed.map(col): _*), keyed,
               "left_anti")
           } else capped
-        appendBucketRows(bucketAppend, indexPath, s.table, f.keyCols,
-          f.shards)
+        appendBucketRows(bucketAppend, indexPath, f.kind.buckets.get,
+          f.keyCols, f.shards)
         (capped, bucketAppend, occRaw)
       }
       // BOTH appends durable before the occupancy delta and the ledger
@@ -4838,33 +4910,14 @@ object Dedup {
       s"could not commit $tmp -> $file (rename refused)")
   }
 
-  /** [[ingestBatchWithIndex]] for the persisted SRP EMBEDDING index: one
-    * governed micro-batch of embedding near-dup ingest, exactly once
-    * under crash/replay (the shared protocol — see [[governedBatch]]);
-    * the dedup semantics are the embedding family's: within-batch pairs
-    * via SRP-LSH UNDER THE INDEX'S OWN GEOMETRY (multi-probe on),
-    * cluster representative kept, survivors screened by the incremental
-    * index probe, exact-cosine verification everywhere.
-    * `StreamOps.indexedEmbeddingDedupStream` wraps this in
-    * `foreachBatch`.
-    */
-  def ingestBatchWithSrpIndex(batch: DataFrame, idCol: String,
-                              vecCol: String, indexPath: String,
-                              outPath: String, batchId: Long,
-                              threshold: Double,
-                              quarantine: Boolean = false): IngestBatchStats =
-    withPinnedPlan(batch.sparkSession)(governedBatch(batch, idCol, indexPath,
-      outPath, batchId, quarantine,
-      srpFamily(batch.sparkSession, indexPath, idCol, vecCol, threshold)))
-
   /** The SRP family: vectors + capped multi-table bucket table. */
   private def srpFamily(spark: org.apache.spark.sql.SparkSession,
                         indexPath: String, idCol: String, vecCol: String,
                         threshold: Double): GovernedFamily = {
     GraftFunctions.register(spark)
     val ix = readSrpIndex(spark, indexPath)
-    GovernedFamily("ingestBatchWithSrpIndex", "vectors", Seq("tbl", "bkt"),
-      ix.shards, primaryShards = 0, ix.tables * (1L + ix.planes),
+    GovernedFamily(SrpKind, ix.shards, primaryShards = 0,
+      ix.tables * (1L + ix.planes),
       // the batch's MULTI-PROBE bucket set (base + every Hamming-1 flip)
       // — a superset of the novel rows' base buckets, so pruning stays
       // correct
@@ -4897,7 +4950,7 @@ object Dedup {
       },
       primaryRows = novel => novel.select(col(idCol).as("id"),
         col(vecCol).cast("array<float>").as("v")),
-      buckets = Some(GovernedBuckets("buckets", ix.maxBucket, ix.buckets,
+      buckets = Some(GovernedBuckets(ix.maxBucket, ix.buckets,
         v => v.select(col("id"), posexplode(GraftFunctions.srpBuckets(
           col("v"), ix.tables, ix.planes, ix.dim)).as(Seq("tbl", "bkt"))))))
   }
@@ -4966,14 +5019,7 @@ object Dedup {
     * tombstone-filtered like every index open. */
   def readDigestIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String): DigestIndex = {
-    val pr =
-      try readParamsRow(spark, s"$path/params")
-      catch {
-        case e: Exception => throw new IllegalArgumentException(
-          s"digest index at $path has no readable params table — was it " +
-            "written by writeDigestIndex?", e)
-      }
-    requireSupportedFormat(pr, path)
+    val pr = governedParams(spark, path, DigestKind)
     val raw = readIndexTable(spark, s"$path/digests")
       .select("id", "dig", "shard")
     DigestIndex(liveRows(raw, readTombstones(spark, path)),
@@ -5033,85 +5079,6 @@ object Dedup {
     graft.plans.Checkpoints.free(rows)
   }
 
-  /** [[deleteFromSignatureIndex]]'s twin for the digest index — same
-    * visibility (next open), reclamation (next compaction) and epoch
-    * semantics. */
-  def deleteFromDigestIndex(spark: org.apache.spark.sql.SparkSession,
-                            path: String, ids: DataFrame,
-                            idCol: String): Unit = {
-    readDigestIndex(spark, path) // validates the index + params
-    appendTombstones(spark, path, ids, idCol)
-  }
-
-  /** [[deleteFromDigestIndex]] for a driver-side id list. */
-  def deleteFromDigestIndex(spark: org.apache.spark.sql.SparkSession,
-                            path: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    deleteFromDigestIndex(spark, path, ids.toDF("id"), "id")
-  }
-
-  /** Compact the digest index: digests rewritten clustered by
-    * (shard, dig) under the preserved partitionBy(shard) layout, ledger
-    * and stats folded, pending tombstones physically purged (no
-    * occupancy table in this family — the purge prologue runs with the
-    * no-occupancy recipe, so the epilogue only folds the tombstone
-    * table away). Same swap/heal/epoch discipline as the other
-    * families ([[compactIndexTables]]).
-    */
-  def compactDigestIndex(spark: org.apache.spark.sql.SparkSession,
-                         path: String,
-                         targetFileBytes: Long = 128L << 20)
-      : Map[String, (Int, Int)] = {
-    recoverCompaction(spark, path)
-    readDigestIndex(spark, path) // validates the index + params
-    // shards = 0 here means "no occupancy side table", the purge
-    // prologue's only use of the parameter — the digest table itself
-    // stays sharded
-    val purge = preparePurge(spark, path, "digests", Nil, 0)
-    val res = compactIndexTables(spark, path, targetFileBytes, Seq(
-      IndexTableLayout("digests",
-        (df, n) => purge.live(df).repartition(n, col("shard"), col("dig")),
-        partitionCols = Seq("shard"), force = purge.force),
-      IndexTableLayout("ingest_ledger",
-        (df, n) => df.repartitionByRange(n, col("batch_id"))),
-      IndexTableLayout("ingest_stats",
-        (df, n) => df.repartitionByRange(n, col("batch_id")))))
-    finishPurge(spark, path, purge)
-    res
-  }
-
-  /** [[autoCompactSignatureIndex]]'s twin for the digest index
-    * (measured on the `digests` table). */
-  def autoCompactDigestIndex(spark: org.apache.spark.sql.SparkSession,
-                             path: String,
-                             targetFileBytes: Long = 128L << 20,
-                             fragmentFactor: Int = 8,
-                             preCompact: () => Unit = () => ())
-      : Option[Map[String, (Int, Int)]] =
-    if (indexFragmented(spark, path, "digests", targetFileBytes,
-        fragmentFactor) || listTombstoneFiles(spark, path).nonEmpty) {
-      preCompact()
-      Some(compactDigestIndex(spark, path, targetFileBytes))
-    } else None
-
-  /** One micro-batch of the governed EXACT-dedup loop — the digest
-    * family's [[ingestBatchWithIndex]]: the shared exactly-once protocol
-    * ([[governedBatch]] — committed-watermark reads, per-batch output
-    * overwrite, self-healing appends against the PHYSICAL tail, ledger
-    * row commits last, quarantine divert on contract violations), with
-    * the family's screen semantics — within-batch min-id representative
-    * per digest, committed-index digest anti-join (shard-pruned). No
-    * occupancy or caps: exact dedup admits every novel digest.
-    */
-  def ingestBatchWithDigestIndex(batch: DataFrame, idCol: String,
-                                 digCol: String, indexPath: String,
-                                 outPath: String, batchId: Long,
-                                 quarantine: Boolean = false)
-      : IngestBatchStats =
-    withPinnedPlan(batch.sparkSession)(governedBatch(batch, idCol, indexPath,
-      outPath, batchId, quarantine,
-      digestFamily(batch.sparkSession, indexPath, idCol, digCol)))
-
   /** The digest family: one sharded (id, dig) table, no bucket table. */
   private def digestFamily(spark: org.apache.spark.sql.SparkSession,
                            indexPath: String, idCol: String,
@@ -5122,8 +5089,7 @@ object Dedup {
         .filter(col("dig").isNotNull)
     // digest indexes are always sharded (writeDigestIndex requires it),
     // so the core always prunes the probe and measures its slice
-    GovernedFamily("ingestBatchWithDigestIndex", "digests", Seq("dig"),
-      ix.shards, primaryShards = ix.shards, 1L,
+    GovernedFamily(DigestKind, ix.shards, primaryShards = ix.shards, 1L,
       touched = digests,
       screens = (b, w, touched) => {
         val bd = digests(b)
@@ -5194,104 +5160,78 @@ object Dedup {
                                        droppedPerShard: Seq[Long],
                                        scrubbedRows: Long)
 
-  /** Cross-shard near-dup reconciliation over N governed MinHash shard
-    * deployments — see the section note above. All shards must share
-    * one [[MinHashParams]] geometry (one logical deployment) and
-    * globally unique ids (the id-preserving router contract); both are
-    * checked loudly. Within-shard pairs the union pass surfaces are
-    * ignored — in-shard semantics (including the documented cap
-    * conservatism) stay the shard's own.
+  /** Cross-shard duplicate reconciliation over N governed shard
+    * deployments of one `family` — see the section note above. Ids must
+    * be globally unique across shards (the id-preserving router
+    * contract), checked loudly. Within-shard pairs the union pass
+    * surfaces are ignored — in-shard semantics (including the documented
+    * cap conservatism) stay the shard's own. The union pass per family:
+    *  - [[MinHashText]]: one banded LSH pass under the shards' shared
+    *    [[MinHashParams]] geometry (a mismatch refuses);
+    *  - [[SrpVectors]]: [[embeddingNearDupLshAuto]] at the family's
+    *    threshold, plane density sized from the UNION (the reconcile
+    *    corpus is N shards big, so a shard-sized plane count would
+    *    over-pack its buckets) and 16 hash tables; the shards must
+    *    agree on the vector dimension;
+    *  - [[Digests]]: a digest equi-join STAR pairing each duplicate
+    *    group's global min id with every other member — exact duplicates
+    *    form an equivalence class, so the min-id star is a sufficient
+    *    pair set for greedy-star convergence AND linear in the group
+    *    size (an all-pairs self-join would go quadratic on a
+    *    pathological hot digest). NULL digests are never paired.
     */
   def reconcileShardOutputs(spark: org.apache.spark.sql.SparkSession,
                             shards: Seq[GovernedShardPaths],
-                            idCol: String, textCol: String)
+                            idCol: String, family: IndexFamily)
       : ShardReconcileStats = {
-    val params = shards.map(s => readSignatureIndex(spark, s.indexPath).params)
-    require(params.distinct.size == 1,
-      "reconcileShardOutputs: all shards must share one MinHashParams " +
-        s"geometry; found ${params.distinct.mkString(" vs ")}")
-    val p = params.head
-    reconcileCore(spark, shards, idCol, textCol,
-      union => minHashNearDupPairs(union, idCol, textCol, p),
-      (path, ids) => deleteFromSignatureIndex(spark, path, ids, "id"))
+    val pairsOf: DataFrame => DataFrame = family match {
+      case MinHashText(textCol) =>
+        val params =
+          shards.map(s => readSignatureIndex(spark, s.indexPath).params)
+        require(params.distinct.size == 1,
+          "reconcileShardOutputs: all shards must share one MinHashParams " +
+            s"geometry; found ${params.distinct.mkString(" vs ")}")
+        union => minHashNearDupPairs(union, idCol, textCol, params.head)
+      case SrpVectors(vecCol, threshold) =>
+        val dims = shards.map(s => readSrpIndex(spark, s.indexPath).dim)
+        require(dims.distinct.size == 1,
+          "reconcileShardOutputs: all shards must index one vector " +
+            s"dimension; found ${dims.distinct.mkString(" vs ")}")
+        union => embeddingNearDupLshAuto(union, idCol, vecCol, threshold,
+          dims.head, ReconcileSrpTables)
+      case Digests(digCol) =>
+        shards.foreach(s => readDigestIndex(spark, s.indexPath)) // validates
+        union => {
+          val d = union.select(col(idCol).as("__did"),
+              col(digCol).cast("string").as("__dig"))
+            .filter(col("__dig").isNotNull)
+          val reps = d.groupBy(col("__dig"))
+            .agg(min(col("__did")).as("id_a"), count(lit(1)).as("__n"))
+            .filter(col("__n") > 1)
+          d.join(reps, Seq("__dig"))
+            .filter(col("__did") =!= col("id_a"))
+            .select(col("id_a"), col("__did").as("id_b"))
+        }
+    }
+    reconcileCore(spark, shards, idCol, family.payloadCol, pairsOf)
   }
 
-  /** [[reconcileShardOutputs]]' embedding twin for N governed SRP shard
-    * deployments: the union pass is [[embeddingNearDupLshAuto]] (plane
-    * density sized from the UNION — the reconcile corpus is N shards
-    * big, so a shard-sized plane count would over-pack its buckets) +
-    * exact-cosine verification, and drops feed back through
-    * [[deleteFromSrpIndex]] + the same scrubs. Shards must agree on the
-    * vector dimension (each index's own params row); tables/threshold
-    * are the pass's own recall dials, deliberately NOT read from the
-    * shard indexes — cross-shard reconciliation is a separate screen
-    * with its own operating point.
-    */
-  def reconcileShardOutputsSrp(spark: org.apache.spark.sql.SparkSession,
-                               shards: Seq[GovernedShardPaths],
-                               idCol: String, vecCol: String,
-                               threshold: Double,
-                               tables: Int = 16)
-      : ShardReconcileStats = {
-    val dims = shards.map(s => readSrpIndex(spark, s.indexPath).dim)
-    require(dims.distinct.size == 1,
-      "reconcileShardOutputsSrp: all shards must index one vector " +
-        s"dimension; found ${dims.distinct.mkString(" vs ")}")
-    val dim = dims.head
-    reconcileCore(spark, shards, idCol, vecCol,
-      union => embeddingNearDupLshAuto(union, idCol, vecCol, threshold,
-        dim, tables),
-      (path, ids) => deleteFromSrpIndex(spark, path, ids, "id"))
-  }
+  /** SRP tables of the cross-shard reconcile pass — its own recall dial,
+    * deliberately not read from the shard indexes: reconciliation is a
+    * separate screen with its own operating point. */
+  private val ReconcileSrpTables = 16
 
-  /** [[reconcileShardOutputs]]' exact twin for N governed digest shard
-    * deployments (the family matrix's third member): the union pass is
-    * a digest equi-join STAR — group the served corpora by digest and
-    * pair each duplicate group's global min id with every other member.
-    * Exact duplicates form an equivalence class, so the min-id star is
-    * a sufficient pair set for greedy-star convergence AND linear in
-    * the group size (an all-pairs self-join would go quadratic on a
-    * pathological hot digest); cross-shard filtering and the drop
-    * feedback (tombstone via [[deleteFromDigestIndex]] + served-output
-    * and quarantine scrubs) are [[reconcileCore]]'s, shared verbatim
-    * with the MinHash/SRP twins. NULL digests are never paired — they
-    * are not indexed and not comparable, the in-shard screen's own
-    * contract. No geometry precondition beyond each index opening
-    * (digest equality is parameter-free); ids must satisfy the same
-    * router contract, checked loudly in the core.
-    */
-  def reconcileShardOutputsDigest(spark: org.apache.spark.sql.SparkSession,
-                                  shards: Seq[GovernedShardPaths],
-                                  idCol: String, digCol: String)
-      : ShardReconcileStats = {
-    shards.foreach(s => readDigestIndex(spark, s.indexPath)) // validates
-    reconcileCore(spark, shards, idCol, digCol,
-      union => {
-        val d = union.select(col(idCol).as("__did"),
-            col(digCol).cast("string").as("__dig"))
-          .filter(col("__dig").isNotNull)
-        val reps = d.groupBy(col("__dig"))
-          .agg(min(col("__did")).as("id_a"), count(lit(1)).as("__n"))
-          .filter(col("__n") > 1)
-        d.join(reps, Seq("__dig"))
-          .filter(col("__did") =!= col("id_a"))
-          .select(col("id_a"), col("__did").as("id_b"))
-      },
-      (path, ids) => deleteFromDigestIndex(spark, path, ids, "id"))
-  }
-
-  /** Shared core of the cross-shard reconcile family: union the served
+  /** Shared core of the cross-shard reconcile: union the served
     * corpora, run the family's pair finder ONCE union-wide, keep
     * cross-shard pairs, greedy-star drop the larger ids through each
     * owning shard's takedown machinery. Parameterized only by the pair
-    * finder and the index-delete hook, so a reconciliation-semantics
-    * fix can never diverge between families.
+    * finder, so a reconciliation-semantics fix can never diverge between
+    * families.
     */
   private def reconcileCore(spark: org.apache.spark.sql.SparkSession,
                             shards: Seq[GovernedShardPaths],
                             idCol: String, payloadCol: String,
-                            pairsOf: DataFrame => DataFrame,
-                            deleteFn: (String, DataFrame) => Unit)
+                            pairsOf: DataFrame => DataFrame)
       : ShardReconcileStats = {
     require(shards.size >= 2,
       s"cross-shard reconcile needs >= 2 shards, got ${shards.size}")
@@ -5321,7 +5261,7 @@ object Dedup {
           .parquet(dirs.map(_.toString): _*)
           .select(col(idCol), col(payloadCol))
         // RETAINED view only: a takedown whose scrub hasn't landed yet
-        // (deleteFrom*Index takes effect at index opens; the output
+        // (deleteFromIndex takes effect at index opens; the output
         // rewrite is scrubOutputs' separate pass) leaves the row on
         // disk, and letting it into the union would let a DEAD row win
         // greedy-star and drop its surviving duplicate from the other
@@ -5398,7 +5338,7 @@ object Dedup {
     shards.zipWithIndex.foreach { case (s, i) =>
       if (perShard(i) > 0) {
         val ids = drops.filter(col("__rshard") === lit(i)).select(col("id"))
-        deleteFn(s.indexPath, ids)
+        deleteFromIndex(spark, s.indexPath, ids, "id")
         scrubbed += scrubOutputs(spark, s.indexPath, s.outPath, idCol)
         scrubbed += scrubQuarantined(spark, s.indexPath, idCol)
       }
@@ -5409,42 +5349,24 @@ object Dedup {
     ShardReconcileStats(crossPairs, perShard.sum, perShard, scrubbed)
   }
 
-  /** Two-shard even/odd governed MinHash deployment builder behind the
-    * p9 entry. Routes `docs` by `pmod(id, 2)`, bootstraps each shard's
-    * index from its `id <= c1` slice, governs one batch over the rest.
-    * Oracle-entry scaffolding, not a production operator.
+  /** Two-shard even/odd governed deployment builder behind the p9 and
+    * p10 entries. Routes `docs` by `pmod(id, 2)`, builds each shard's
+    * index from its `id <= c1` slice with `writeIndex(slice, indexPath)`,
+    * governs one `family` batch over the rest. Oracle-entry scaffolding,
+    * not a production operator.
     */
   private[graft] def buildTwoShardDeployment(
-      docs: DataFrame, idCol: String, textCol: String, c1: Long,
-      p: MinHashParams, base: String): Seq[GovernedShardPaths] = {
+      docs: DataFrame, idCol: String, family: IndexFamily, c1: Long,
+      base: String)(writeIndex: (DataFrame, String) => Unit)
+      : Seq[GovernedShardPaths] = {
     val spark = docs.sparkSession
     (0 to 1).map { sh =>
       val ix = s"$base/ix$sh"; val out = s"$base/out$sh"
       val mine = docs.filter(pmod(col(idCol), lit(2)) === sh)
-      writeSignatureIndex(mine.filter(col(idCol) <= c1), idCol, textCol,
-        ix, p)
+      writeIndex(mine.filter(col(idCol) <= c1), ix)
       initIngestLedger(spark, ix)
-      ingestBatchWithIndex(mine.filter(col(idCol) > c1), idCol, textCol,
-        ix, out, batchId = 0L)
-      GovernedShardPaths(ix, out)
-    }
-  }
-
-  /** [[buildTwoShardDeployment]]'s digest-family twin behind the p10
-    * entry (same even/odd router, bootstrap slice and single governed
-    * batch). Oracle-entry scaffolding, not a production operator.
-    */
-  private[graft] def buildTwoShardDigestDeployment(
-      docs: DataFrame, idCol: String, digCol: String, c1: Long,
-      base: String): Seq[GovernedShardPaths] = {
-    val spark = docs.sparkSession
-    (0 to 1).map { sh =>
-      val ix = s"$base/ix$sh"; val out = s"$base/out$sh"
-      val mine = docs.filter(pmod(col(idCol), lit(2)) === sh)
-      writeDigestIndex(mine.filter(col(idCol) <= c1), idCol, digCol, ix)
-      initDigestIngestLedger(spark, ix)
-      ingestBatchWithDigestIndex(mine.filter(col(idCol) > c1), idCol,
-        digCol, ix, out, batchId = 0L)
+      ingestBatch(mine.filter(col(idCol) > c1), idCol, family, ix, out,
+        batchId = 0L)
       GovernedShardPaths(ix, out)
     }
   }

@@ -129,32 +129,40 @@ object StreamOps {
       .filter(!col("maybe_dup")).drop("maybe_dup")
 
   /** The streaming production incremental-dedup loop over a persisted
-    * MinHash signature index: new document files land in `inPath`, each
-    * micro-batch is deduped within itself (cluster representative) and
+    * index of any family: new document files land in `inPath`, each
+    * micro-batch is deduped within itself (representative kept) and
     * against the committed index, novel docs are written to
     * `outPath/batch_id=<n>/` and appended to the index — exactly once
     * under crash/restart, governed by the index's ingest ledger (the full
-    * mechanics are on [[graft.operators.Dedup.ingestBatchWithIndex]],
-    * which this wraps in `foreachBatch`; the stream checkpoint replays an
+    * mechanics are on [[graft.operators.Dedup.ingestBatch]], which this
+    * wraps in `foreachBatch`; the stream checkpoint replays an
     * unfinished batch with the same id and data, and the ledger makes
-    * that replay bit-identical and append-idempotent).
+    * that replay bit-identical and append-idempotent). `family` names
+    * the payload column and the dedup semantics — MinHash text near-dup,
+    * SRP embedding near-dup at a cosine threshold, or exact digest dedup
+    * — and must match the index at `indexPath`: the stream resolves it
+    * once, at open, and refuses a mismatch before touching the index.
     *
-    * This is the loop [[graft.operators.Dedup.writeSignatureIndex]]'s
-    * docs promise: build the index once, then every arriving batch pays
-    * its own size — zero corpus text reads — and the index grows with
-    * the accepted stream.
+    * This is the loop the index builders' docs promise: build the index
+    * once, then every arriving batch pays its own size — zero corpus
+    * payload reads — and the index grows with the accepted stream.
     *
     * `quarantine = true`: a contract-violating batch (non-monotone /
     * non-castable ids) diverts whole to `<indexPath>/quarantine/batch_id=N`
     * and the stream CONTINUES (its ledger row carries `novel_rows = -1`);
     * the default stays fail-loud.
     *
+    * Takedowns: after each committed batch, a pending tombstone set that
+    * changed since the last scrub is scrubbed out of the served outputs
+    * and the quarantined batches (≤1-batch serving latency, no per-batch
+    * corpus re-scan).
+    *
     * FILE-COUNT HYGIENE: every committed batch appends one file set per
     * table plus a ledger row, an occupancy delta and epoch claims — an
     * unattended long-running stream decays into a small-files swamp.
     * `autoCompact = true` folds the index in-loop with the MEASURED
-    * trigger ([[graft.operators.Dedup.autoCompactSignatureIndex]]): one
-    * flat directory listing per committed batch, compaction only when
+    * trigger ([[graft.operators.Dedup.autoCompactIndex]]): one
+    * directory listing per committed batch, compaction only when
     * the index has actually decayed ≥ the fragmentation factor (or
     * pending deletes await physical reclamation) — a fragmented stream
     * self-compacts, an un-fragmented one never churns. Safe exactly
@@ -178,103 +186,35 @@ object StreamOps {
     * every fence (epoch, ledger, tombstones, quarantine) is per index
     * path, so disjoint shards never collide (`ShardedGovernedIngestSpec`
     * proves concurrent commits, replays, conf isolation and the
-    * within-shard screening contract). Near-dup screening is WITHIN a shard; route by a
-    * content-stable key or run the periodic cross-shard batch dedup
-    * operators when cross-shard duplicates are in contract.
+    * within-shard screening contract). Near-dup screening is WITHIN a
+    * shard; route by a content-stable key or run the periodic
+    * cross-shard reconcile ([[graft.operators.Dedup.reconcileShardOutputs]])
+    * when cross-shard duplicates are in contract.
     *
     * SESSION: every batch reuses the generated code the first batch
-    * compiled only if the codegen cache holds it. `GraftSession.builder`
-    * sizes the cache; a session built any other way must set
-    * `spark.sql.codegen.cache.maxEntries` to at least
-    * `GraftSession.CodegenCacheEntries` when it is built (a static conf),
-    * or each batch recompiles its classes. The stream logs a WARN at
-    * open when the conf is lower.
+    * compiled only if the codegen cache holds it. Spark sizes that cache
+    * ONCE per JVM, from `spark.sql.codegen.cache.maxEntries` as set in
+    * whichever session conf is active when its `CodeGenerator` first
+    * initialises — a static conf, so any codegen that runs before the
+    * session is built (even reflection on `CodeGenerator`) pins the
+    * cache at Spark's default for the JVM's life. `GraftSession.builder`
+    * sets the conf; a session built any other way must set it to at
+    * least `GraftSession.CodegenCacheEntries` when it is built, or each
+    * batch recompiles its classes. The stream logs a WARN at open when
+    * the SESSION conf is lower; it reads the conf, not the cache, so it
+    * cannot see a cache pinned small before the session existed.
     */
-  def indexedDedupStream(spark: SparkSession, inPath: String,
-                         schema: org.apache.spark.sql.types.StructType,
-                         idCol: String, textCol: String,
-                         indexPath: String, outPath: String,
-                         checkpoint: String,
-                         trigger: Trigger = Trigger.AvailableNow(),
-                         autoCompact: Boolean = false,
-                         quarantine: Boolean = false)
-      : StreamingQuery = {
-    graft.operators.Dedup.initIngestLedger(spark, indexPath)
-    governedStream(spark, inPath, schema, idCol, indexPath, outPath,
-      checkpoint, trigger, autoCompact)(
-      graft.operators.Dedup.ingestBatchWithIndex(_, idCol, textCol,
-        indexPath, outPath, _, quarantine),
-      () => graft.operators.Dedup.autoCompactSignatureIndex(spark,
-        indexPath).isDefined)
-  }
-
-  /** [[indexedDedupStream]] for EMBEDDING near-dup over a persisted SRP
-    * index: the same governed loop
-    * (`graft.operators.Dedup.ingestBatchWithSrpIndex` — ledger-governed,
-    * exactly-once, self-healing appends), with the dedup semantics of
-    * the embedding family (SRP-LSH candidates under the index's own
-    * geometry, exact-cosine verification at `threshold`).
-    */
-  def indexedEmbeddingDedupStream(spark: SparkSession, inPath: String,
-                                  schema: org.apache.spark.sql.types.StructType,
-                                  idCol: String, vecCol: String,
-                                  indexPath: String, outPath: String,
-                                  checkpoint: String, threshold: Double,
-                                  trigger: Trigger = Trigger.AvailableNow(),
-                                  autoCompact: Boolean = false,
-                                  quarantine: Boolean = false)
-      : StreamingQuery = {
-    graft.operators.Dedup.initSrpIngestLedger(spark, indexPath)
-    governedStream(spark, inPath, schema, idCol, indexPath, outPath,
-      checkpoint, trigger, autoCompact)(
-      graft.operators.Dedup.ingestBatchWithSrpIndex(_, idCol, vecCol,
-        indexPath, outPath, _, threshold, quarantine),
-      () => graft.operators.Dedup.autoCompactSrpIndex(spark,
-        indexPath).isDefined)
-  }
-
-  /** [[indexedDedupStream]] for EXACT dedup over a persisted digest
-    * index — the governed media-ingest loop (content digests, URLs,
-    * checksums): the same governed loop
-    * (`graft.operators.Dedup.ingestBatchWithDigestIndex` — exactly-once
-    * under crash/replay, quarantine divert, ≤1-batch takedown scrub
-    * latency, in-loop compaction), with the exact family's screen
-    * semantics (within-batch min-id representative per digest,
-    * committed-index digest anti-join). The index stores (id, digest)
-    * rows only, so a 100 TB media stream carries ~72 bytes of index
-    * per object regardless of payload size.
-    */
-  def indexedDigestDedupStream(spark: SparkSession, inPath: String,
-                               schema: org.apache.spark.sql.types.StructType,
-                               idCol: String, digCol: String,
-                               indexPath: String, outPath: String,
-                               checkpoint: String,
-                               trigger: Trigger = Trigger.AvailableNow(),
-                               autoCompact: Boolean = false,
-                               quarantine: Boolean = false)
-      : StreamingQuery = {
-    graft.operators.Dedup.initDigestIngestLedger(spark, indexPath)
-    governedStream(spark, inPath, schema, idCol, indexPath, outPath,
-      checkpoint, trigger, autoCompact)(
-      graft.operators.Dedup.ingestBatchWithDigestIndex(_, idCol, digCol,
-        indexPath, outPath, _, quarantine),
-      () => graft.operators.Dedup.autoCompactDigestIndex(spark,
-        indexPath).isDefined)
-  }
-
-  /** The `foreachBatch` loop shared by the governed dedup streams:
-    * `ingest` runs one family's governed batch, `compact` its measured
-    * compaction trigger (true = the index was compacted). Per batch:
-    * ingest, its audit stats row, then — committed batches only — the
-    * takedown-scrub gate and, with `autoCompact`, compaction. */
-  private def governedStream(spark: SparkSession, inPath: String,
-                             schema: org.apache.spark.sql.types.StructType,
-                             idCol: String, indexPath: String,
-                             outPath: String, checkpoint: String,
-                             trigger: Trigger, autoCompact: Boolean)
-                            (ingest: (DataFrame, Long) =>
-                               graft.operators.Dedup.IngestBatchStats,
-                             compact: () => Boolean): StreamingQuery = {
+  def governedDedupStream(spark: SparkSession, inPath: String,
+                          schema: org.apache.spark.sql.types.StructType,
+                          idCol: String,
+                          family: graft.operators.Dedup.IndexFamily,
+                          indexPath: String, outPath: String,
+                          checkpoint: String,
+                          trigger: Trigger = Trigger.AvailableNow(),
+                          autoCompact: Boolean = false,
+                          quarantine: Boolean = false): StreamingQuery = {
+    import graft.operators.Dedup
+    val compact = Dedup.openGovernedIndex(spark, indexPath, family)
     graft.GraftSession.codegenCacheWarning(
       spark.conf.get(graft.GraftSession.CodegenCacheConf).toInt)
       .foreach(org.slf4j.LoggerFactory.getLogger(getClass).warn(_))
@@ -284,9 +224,10 @@ object StreamOps {
     spark.readStream.schema(schema).parquet(inPath)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val stats = ingest(batch, batchId)
+        val stats = Dedup.ingestBatch(batch, idCol, family, indexPath,
+          outPath, batchId, quarantine)
         // per-batch audit row (novel/dup rates) — idempotent on replay
-        graft.operators.Dedup.appendIngestStats(spark, indexPath, stats)
+        Dedup.appendIngestStats(spark, indexPath, stats)
         if (!stats.replayed) {
           // Takedown propagation to the SERVED output corpus and the
           // quarantined raw batches: scrub on the FIRST committed batch
@@ -295,12 +236,10 @@ object StreamOps {
           // per-batch corpus re-scan that finds nothing. Compaction
           // purges only sets the scrubs have already propagated, so the
           // scrub-before-purge ordering holds by construction.
-          val pending =
-            graft.operators.Dedup.pendingTombstoneFiles(spark, indexPath)
+          val pending = Dedup.pendingTombstoneFiles(spark, indexPath)
           if (pending.nonEmpty && pending != scrubbedTombs) {
-            graft.operators.Dedup.scrubOutputs(spark, indexPath, outPath,
-              idCol)
-            graft.operators.Dedup.scrubQuarantined(spark, indexPath, idCol)
+            Dedup.scrubOutputs(spark, indexPath, outPath, idCol)
+            Dedup.scrubQuarantined(spark, indexPath, idCol)
             scrubbedTombs = pending
           }
           if (autoCompact && compact()) scrubbedTombs = Set.empty
@@ -311,6 +250,19 @@ object StreamOps {
       .trigger(trigger)
       .start()
   }
+
+  /** [[governedDedupStream]] over a MinHash signature index, kept for
+    * source compatibility with existing callers. */
+  def indexedDedupStream(spark: SparkSession, inPath: String,
+                         schema: org.apache.spark.sql.types.StructType,
+                         idCol: String, textCol: String,
+                         indexPath: String, outPath: String,
+                         checkpoint: String,
+                         trigger: Trigger = Trigger.AvailableNow(),
+                         autoCompact: Boolean = false): StreamingQuery =
+    governedDedupStream(spark, inPath, schema, idCol,
+      graft.operators.Dedup.MinHashText(textCol), indexPath, outPath,
+      checkpoint, trigger, autoCompact)
 
   /** Streaming ANN serving over a persisted IVF layout
     * ([[graft.operators.Similarity.writeIvfLayout]]): each micro-batch

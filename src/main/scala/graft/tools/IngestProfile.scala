@@ -76,13 +76,13 @@ object IngestProfile {
       }
       t("initIngestLedger")(Dedup.initIngestLedger(spark, ix))
       t("ingestBatch 0") {
-        Dedup.ingestBatchWithIndex(
+        Dedup.ingestBatch(
           docs.filter(col("doc_id") > c1 && col("doc_id") <= c2),
-          "doc_id", "text", ix, out, batchId = 0L)
+          "doc_id", Dedup.MinHashText("text"), ix, out, batchId = 0L)
       }
       t("ingestBatch 1") {
-        Dedup.ingestBatchWithIndex(docs.filter(col("doc_id") > c2),
-          "doc_id", "text", ix, out, batchId = 1L)
+        Dedup.ingestBatch(docs.filter(col("doc_id") > c2),
+          "doc_id", Dedup.MinHashText("text"), ix, out, batchId = 1L)
       }
       t("read result") {
         spark.read.parquet(s"$out/batch_id=0").count()
@@ -105,15 +105,15 @@ object IngestProfile {
         Dedup.writeSrpIndex(emb.filter(col("vec_id") <= c1), "vec_id",
           "embedding", ix, dim = 64)
       }
-      t("initSrpIngestLedger")(Dedup.initSrpIngestLedger(spark, ix))
+      t("initIngestLedger")(Dedup.initIngestLedger(spark, ix))
       t("srpIngestBatch 0") {
-        Dedup.ingestBatchWithSrpIndex(
+        Dedup.ingestBatch(
           emb.filter(col("vec_id") > c1 && col("vec_id") <= c2),
-          "vec_id", "embedding", ix, out, batchId = 0L, threshold = 0.4)
+          "vec_id", Dedup.SrpVectors("embedding", 0.4), ix, out, batchId = 0L)
       }
       t("srpIngestBatch 1") {
-        Dedup.ingestBatchWithSrpIndex(emb.filter(col("vec_id") > c2),
-          "vec_id", "embedding", ix, out, batchId = 1L, threshold = 0.4)
+        Dedup.ingestBatch(emb.filter(col("vec_id") > c2),
+          "vec_id", Dedup.SrpVectors("embedding", 0.4), ix, out, batchId = 1L)
       }
       t("read result") {
         spark.read.parquet(s"$out/batch_id=0").count()

@@ -697,7 +697,8 @@ object Plans {
 
     "p10_cross_shard_reconcile_digest" ->
       """p9's exact-dedup twin over the governed digest deployment
-        |(reconcileShardOutputsDigest on the shared reconcileCore).
+        |(reconcileShardOutputs with the Digests family, on the shared
+        |reconcileCore).
         |The union pass here is a digest equi-join STAR, not LSH: one
         |groupBy(dig) over the served corpora finds duplicate groups
         |(shuffle keyed on the digest — map-side partial counts, one
@@ -747,10 +748,9 @@ object Plans {
       |are restored). Separate drivers per shard are the natural deployment
       |anyway. Cross-shard duplicates (the documented within-shard screening
       |boundary) are closed by the periodic reconcile family —
-      |`Dedup.reconcileShardOutputs` (MinHash, plan dumped above as
-      |p9_cross_shard_reconcile), `reconcileShardOutputsSrp` (embeddings)
-      |and `reconcileShardOutputsDigest` (exact, p10) on one shared
-      |`reconcileCore`.
+      |`Dedup.reconcileShardOutputs`, one function for the three families:
+      |MinHash (plan dumped above as p9_cross_shard_reconcile), SRP
+      |embeddings and exact digests (p10), on one shared `reconcileCore`.
       |
       |Mixed-family deployments compose per family over the same corpus: a
       |production pipeline may run MinHash text shards and digest shards

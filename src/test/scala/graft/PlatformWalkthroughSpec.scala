@@ -40,24 +40,24 @@ class PlatformWalkthroughSpec extends SparkSpec {
       // 1. base corpus indexed; two governed batches ingest exactly-once
       val base = emb.filter(col("vec_id") < 300)
       Dedup.writeSrpIndex(base, "vec_id", "embedding", ix, dim = 64)
-      Dedup.initSrpIngestLedger(spark, ix)
+      Dedup.initIngestLedger(spark, ix)
       val b1 = emb.filter(col("vec_id") >= 300 && col("vec_id") < 400)
       val b2 = emb.filter(col("vec_id") >= 400)
-      val s1 = Dedup.ingestBatchWithSrpIndex(b1, "vec_id", "embedding",
-        ix, out, batchId = 1L, threshold = 0.4)
-      val s2 = Dedup.ingestBatchWithSrpIndex(b2, "vec_id", "embedding",
-        ix, out, batchId = 2L, threshold = 0.4)
+      val s1 = Dedup.ingestBatch(b1, "vec_id",
+        Dedup.SrpVectors("embedding", 0.4), ix, out, batchId = 1L)
+      val s2 = Dedup.ingestBatch(b2, "vec_id",
+        Dedup.SrpVectors("embedding", 0.4), ix, out, batchId = 2L)
       assert(!s1.replayed && !s2.replayed && s1.novelRows > 0)
-      assert(Dedup.ingestBatchWithSrpIndex(b2, "vec_id", "embedding",
-        ix, out, batchId = 2L, threshold = 0.4).replayed)
+      assert(Dedup.ingestBatch(b2, "vec_id", Dedup.SrpVectors("embedding", 0.4),
+        ix, out, batchId = 2L).replayed)
       def survivors = spark.read.parquet(out)
         .select(col("vec_id"), col("embedding"))
 
       // 2. takedown at the INDEX: one base id + one served survivor
       val v1 = Seq(7L, survivors.agg(max("vec_id")).head().getLong(0))
-      Dedup.deleteFromSrpIndex(spark, ix, v1)
+      Dedup.deleteFromIndex(spark, ix, v1)
       assert(Dedup.scrubOutputs(spark, ix, out, "vec_id") == 1L)
-      Dedup.compactSrpIndex(spark, ix) // physical purge; tombstones fold
+      Dedup.compactIndex(spark, ix) // physical purge; tombstones fold
       assert(survivors.filter(col("vec_id").isin(v1: _*)).isEmpty)
 
       // 3. serving layout over the retained corpus; ITS own takedown

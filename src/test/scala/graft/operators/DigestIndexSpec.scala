@@ -9,7 +9,7 @@ import graft.SparkSpec
 
 /** Persisted digest index — the EXACT-dedup third index family
   * (`Dedup.writeDigestIndex` / `digestNovel` / `appendDigestIndex` /
-  * `ingestBatchWithDigestIndex` + deletion/compaction/quarantine under
+  * `ingestBatch` with `Digests` + deletion/compaction/quarantine under
   * the shared lifecycle core).
   */
 class DigestIndexSpec extends SparkSpec {
@@ -68,11 +68,11 @@ class DigestIndexSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft-digix-gov").toString
     val ix = s"$base/ix"; val out = s"$base/out"
     Dedup.writeDigestIndex(corpusOf(corpus: _*), "id", "dig", ix)
-    Dedup.initDigestIngestLedger(spark, ix)
-    val sA = Dedup.ingestBatchWithDigestIndex(corpusOf(bA: _*), "id",
-      "dig", ix, out, batchId = 0L)
-    val sB = Dedup.ingestBatchWithDigestIndex(corpusOf(bB: _*), "id",
-      "dig", ix, out, batchId = 1L)
+    Dedup.initIngestLedger(spark, ix)
+    val sA = Dedup.ingestBatch(corpusOf(bA: _*), "id",
+      Dedup.Digests("dig"), ix, out, batchId = 0L)
+    val sB = Dedup.ingestBatch(corpusOf(bB: _*), "id",
+      Dedup.Digests("dig"), ix, out, batchId = 1L)
     assert(!sA.replayed && !sB.replayed)
     // oracle by hand: A screens vs corpus; B screens vs corpus ∪ novelA
     val novelA = naiveNovel(bA, corpus)
@@ -87,8 +87,8 @@ class DigestIndexSpec extends SparkSpec {
     // replay of batch 1 (same id, same data): recognized, no changes
     val before = Dedup.readDigestIndex(spark, ix).digests
       .collect().map(_.toSeq).toSet
-    val sB2 = Dedup.ingestBatchWithDigestIndex(corpusOf(bB: _*), "id",
-      "dig", ix, out, batchId = 1L)
+    val sB2 = Dedup.ingestBatch(corpusOf(bB: _*), "id",
+      Dedup.Digests("dig"), ix, out, batchId = 1L)
     assert(sB2.replayed && sB2.novelRows == sB.novelRows)
     assert(served(1L) == novelB)
     assert(Dedup.readDigestIndex(spark, ix).digests
@@ -104,7 +104,7 @@ class DigestIndexSpec extends SparkSpec {
     val ix = s"$base/ix"; val out = s"$base/out"
     val ix2 = s"$base/ix2"; val out2 = s"$base/out2"
     Dedup.writeDigestIndex(corpusOf(corpus: _*), "id", "dig", ix)
-    Dedup.initDigestIngestLedger(spark, ix)
+    Dedup.initIngestLedger(spark, ix)
     // simulate the torn crash: digest rows appended past the watermark,
     // NO ledger row (the append layout the governed path uses)
     val novelA = naiveNovel(bA, corpus)
@@ -114,12 +114,12 @@ class DigestIndexSpec extends SparkSpec {
       .repartition(col("shard"))
     tornRows.write.partitionBy("shard").mode("append").parquet(s"$ix/digests")
     // replay the batch through the governed path
-    Dedup.ingestBatchWithDigestIndex(corpusOf(bA: _*), "id", "dig",
+    Dedup.ingestBatch(corpusOf(bA: _*), "id", Dedup.Digests("dig"),
       ix, out, batchId = 0L)
     // never-crashed twin
     Dedup.writeDigestIndex(corpusOf(corpus: _*), "id", "dig", ix2)
-    Dedup.initDigestIngestLedger(spark, ix2)
-    Dedup.ingestBatchWithDigestIndex(corpusOf(bA: _*), "id", "dig",
+    Dedup.initIngestLedger(spark, ix2)
+    Dedup.ingestBatch(corpusOf(bA: _*), "id", Dedup.Digests("dig"),
       ix2, out2, batchId = 0L)
     def rows(p: String) = spark.read.parquet(s"$p/digests")
       .select("id", "dig").collect().map(_.toSeq).toSeq
@@ -134,7 +134,7 @@ class DigestIndexSpec extends SparkSpec {
     val corpus = (0L until 40L).map(i => (i, s"d$i"))
     val base = Files.createTempDirectory("graft-digix-del").toString
     Dedup.writeDigestIndex(corpusOf(corpus: _*), "id", "dig", base)
-    Dedup.deleteFromDigestIndex(spark, base, Seq(3L, 7L, 11L))
+    Dedup.deleteFromIndex(spark, base, Seq(3L, 7L, 11L))
     // pending path: probe sees the retained corpus — re-offering a
     // deleted digest is NOVEL again
     val probe = corpusOf((100L, "d3"), (101L, "d20"))
@@ -143,7 +143,7 @@ class DigestIndexSpec extends SparkSpec {
       .select("id").as[Long].collect().toSet
     assert(got == Set(100L)) // d20 still indexed; d3 retracted
     // physical purge
-    Dedup.compactDigestIndex(spark, base)
+    Dedup.compactIndex(spark, base)
     val phys = spark.read.parquet(s"$base/digests")
       .select("id").as[Long].collect().toSet
     assert(phys == corpus.map(_._1).toSet -- Set(3L, 7L, 11L))
@@ -155,21 +155,22 @@ class DigestIndexSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft-digix-quar").toString
     val ix = s"$base/ix"; val out = s"$base/out"
     Dedup.writeDigestIndex(corpusOf(corpus: _*), "id", "dig", ix)
-    Dedup.initDigestIngestLedger(spark, ix)
+    Dedup.initIngestLedger(spark, ix)
     // ids below the watermark → contract violation → divert
     val bad = corpusOf((5L, "x1"), (6L, "x2"))
-    val sQ = Dedup.ingestBatchWithDigestIndex(bad, "id", "dig", ix, out,
+    val sQ = Dedup.ingestBatch(bad, "id", Dedup.Digests("dig"), ix, out,
       batchId = 0L, quarantine = true)
     assert(sQ.novelRows == -1)
     assert(new java.io.File(s"$ix/quarantine/batch_id=0").exists())
     // stream continues: a good batch commits normally
     val good = corpusOf((100L, "y1"), (101L, "y2"))
-    val sG = Dedup.ingestBatchWithDigestIndex(good, "id", "dig", ix, out,
+    val sG = Dedup.ingestBatch(good, "id", Dedup.Digests("dig"), ix, out,
       batchId = 1L)
     assert(sG.novelRows == 2)
     // redrive with an id repair past the watermark
-    val sR = Dedup.redriveQuarantinedDigest(spark, ix, out, 0L, "id",
-      "dig", repair = df => df.withColumn("id", col("id") + lit(200L)))
+    val sR = Dedup.redriveQuarantined(spark, ix, out, 0L, "id",
+      Dedup.Digests("dig"), repair = df => df.withColumn("id",
+        col("id") + lit(200L)))
     assert(sR.novelRows == 2)
     assert(!new java.io.File(s"$ix/quarantine/batch_id=0").exists())
     assert(spark.read.parquet(s"$out/batch_id=0")
@@ -181,9 +182,9 @@ class DigestIndexSpec extends SparkSpec {
     val base = Files.createTempDirectory("graft-digix-loud").toString
     val ix = s"$base/ix"; val out = s"$base/out"
     Dedup.writeDigestIndex(corpusOf(corpus: _*), "id", "dig", ix)
-    Dedup.initDigestIngestLedger(spark, ix)
+    Dedup.initIngestLedger(spark, ix)
     val e = intercept[IllegalArgumentException] {
-      Dedup.ingestBatchWithDigestIndex(corpusOf((5L, "x")), "id", "dig",
+      Dedup.ingestBatch(corpusOf((5L, "x")), "id", Dedup.Digests("dig"),
         ix, out, batchId = 0L)
     }
     assert(e.getMessage.contains("monotone"))

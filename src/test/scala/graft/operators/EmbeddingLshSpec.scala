@@ -220,7 +220,7 @@ class EmbeddingLshSpec extends SparkSpec {
         .map(_.getLong(0)).toSet
       val (v0, b0) = (vset(before), bset(before))
       assert(files("vectors") > 1 && files("buckets") > shardDirs("buckets"))
-      val stats = Dedup.compactSrpIndex(spark, dir,
+      val stats = Dedup.compactIndex(spark, dir,
         targetFileBytes = Long.MaxValue)
       assert(stats("vectors")._2 == 1)
       assert(stats("buckets")._2 == shardDirs("buckets"))

@@ -125,39 +125,39 @@ class GovernedBatchJobsSpec extends SparkSpec {
         Dedup.initIngestLedger(spark, ix)
       },
       (b, ix, out, id) =>
-        Dedup.ingestBatchWithIndex(b, "doc_id", "text", ix, out, id),
+        Dedup.ingestBatch(b, "doc_id", Dedup.MinHashText("text"), ix, out, id),
       () => Seq(10L -> uniq(10), 11L -> uniq(11)).toDF("doc_id", "text"),
       () => Seq(20L -> fam(20), 21L -> uniq(21), 22L -> uniq(21),
         23L -> uniq(23)).toDF("doc_id", "text"),
       i => Seq(i -> fam(i), (i + 1) -> uniq(i + 1), (i + 2) -> uniq(i + 1),
         (i + 3) -> uniq(i + 3)).toDF("doc_id", "text"),
-      ix => Dedup.compactSignatureIndex(spark, ix)),
+      ix => Dedup.compactIndex(spark, ix)),
     Family("srp", jobs = 24,
       ix => {
         Dedup.writeSrpIndex(vecs(0L -> vec(0, 0), 1L -> vec(2, 1)),
           "vec_id", "embedding", ix, dim)
-        Dedup.initSrpIngestLedger(spark, ix)
+        Dedup.initIngestLedger(spark, ix)
       },
-      (b, ix, out, id) => Dedup.ingestBatchWithSrpIndex(b, "vec_id",
-        "embedding", ix, out, id, threshold = 0.4),
+      (b, ix, out, id) => Dedup.ingestBatch(b, "vec_id",
+        Dedup.SrpVectors("embedding", 0.4), ix, out, id),
       () => vecs(10L -> vec(4, 10), 11L -> vec(6, 11)),
       () => vecs(20L -> vec(0, 20), 21L -> vec(5, 21), 22L -> vec(5, 22),
         23L -> vec(7, 23)),
       i => vecs(i -> vec(0, i), (i + 1) -> vec(5, i + 1),
         (i + 2) -> vec(5, i + 2), (i + 3) -> vec(7, i + 3)),
-      ix => Dedup.compactSrpIndex(spark, ix)),
+      ix => Dedup.compactIndex(spark, ix)),
     Family("digest", jobs = 13,
       ix => {
         Dedup.writeDigestIndex(objs((0L, "d0"), (1L, "d1")), "id", "dig", ix)
-        Dedup.initDigestIngestLedger(spark, ix)
+        Dedup.initIngestLedger(spark, ix)
       },
       (b, ix, out, id) =>
-        Dedup.ingestBatchWithDigestIndex(b, "id", "dig", ix, out, id),
+        Dedup.ingestBatch(b, "id", Dedup.Digests("dig"), ix, out, id),
       () => objs((10L, "e10"), (11L, "e11")),
       () => objs((20L, "d0"), (21L, "e21"), (22L, "e21"), (23L, "e23")),
       i => objs((i, "d0"), (i + 1, s"e${i + 1}"), (i + 2, s"e${i + 1}"),
         (i + 3, s"e${i + 3}")),
-      ix => Dedup.compactDigestIndex(spark, ix)))
+      ix => Dedup.compactIndex(spark, ix)))
 
   families.foreach { f =>
     test(s"${f.name}: a clean governed batch runs a pinned number of " +

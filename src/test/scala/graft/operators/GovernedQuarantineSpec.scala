@@ -37,8 +37,8 @@ class GovernedQuarantineSpec extends SparkSpec {
       Dedup.writeSignatureIndex(docs(0L, 1L, 2L), "doc_id", "text", ix, p)
       Dedup.initIngestLedger(spark, ix)
       val e = intercept[IllegalArgumentException] {
-        Dedup.ingestBatchWithIndex(docs(1L), "doc_id", "text", ix, out,
-          batchId = 1L)
+        Dedup.ingestBatch(docs(1L), "doc_id", Dedup.MinHashText("text"), ix,
+          out, batchId = 1L)
       }
       assert(e.getMessage.contains("monotone"))
     } finally rmrf(base)
@@ -53,8 +53,8 @@ class GovernedQuarantineSpec extends SparkSpec {
       Dedup.initIngestLedger(spark, ix)
 
       // batch 1: id 1 <= watermark (2) → quarantined whole
-      val s1 = Dedup.ingestBatchWithIndex(docs(1L, 10L), "doc_id", "text",
-        ix, out, batchId = 1L, quarantine = true)
+      val s1 = Dedup.ingestBatch(docs(1L, 10L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 1L, quarantine = true)
       assert(s1.novelRows == Dedup.QuarantinedNovelRows && !s1.replayed)
       assert(s1.watermarkAfter == s1.watermarkBefore,
         "a quarantined batch must not advance the watermark")
@@ -71,8 +71,8 @@ class GovernedQuarantineSpec extends SparkSpec {
         "the ledger must flag the quarantined batch with novel_rows = -1")
 
       // replay of the quarantined batch: recognized, idempotent
-      val s1r = Dedup.ingestBatchWithIndex(docs(1L, 10L), "doc_id", "text",
-        ix, out, batchId = 1L, quarantine = true)
+      val s1r = Dedup.ingestBatch(docs(1L, 10L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 1L, quarantine = true)
       assert(s1r.replayed &&
         s1r.novelRows == Dedup.QuarantinedNovelRows &&
         s1r.watermarkAfter == s1.watermarkAfter)
@@ -83,8 +83,8 @@ class GovernedQuarantineSpec extends SparkSpec {
 
       // the stream CONTINUES: the next good batch processes normally
       // from the unmoved watermark
-      val s2 = Dedup.ingestBatchWithIndex(docs(20L, 21L), "doc_id", "text",
-        ix, out, batchId = 2L, quarantine = true)
+      val s2 = Dedup.ingestBatch(docs(20L, 21L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 2L, quarantine = true)
       assert(!s2.replayed && s2.novelRows == 2L &&
         s2.watermarkBefore == s1.watermarkAfter &&
         s2.watermarkAfter == 21L, s"continuation broke: $s2")
@@ -99,7 +99,7 @@ class GovernedQuarantineSpec extends SparkSpec {
     try {
       Dedup.writeSignatureIndex(docs(0L, 1L, 2L), "doc_id", "text", ix, p)
       Dedup.initIngestLedger(spark, ix)
-      Dedup.ingestBatchWithIndex(docs(1L), "doc_id", "text", ix, out,
+      Dedup.ingestBatch(docs(1L), "doc_id", Dedup.MinHashText("text"), ix, out,
         batchId = 1L, quarantine = true)
       val e = intercept[IllegalArgumentException] {
         Dedup.writeSignatureIndex(docs(0L, 1L, 2L), "doc_id", "text", ix, p)
@@ -122,8 +122,8 @@ class GovernedQuarantineSpec extends SparkSpec {
       Dedup.writeSignatureIndex(docs(0L, 1L), "doc_id", "text", ix, p)
       Dedup.initIngestLedger(spark, ix)
       val bad = Seq(("not-a-number", "some text here ok")).toDF("doc_id", "text")
-      val s1 = Dedup.ingestBatchWithIndex(bad, "doc_id", "text", ix, out,
-        batchId = 1L, quarantine = true)
+      val s1 = Dedup.ingestBatch(bad, "doc_id", Dedup.MinHashText("text"), ix,
+        out, batchId = 1L, quarantine = true)
       assert(s1.novelRows == Dedup.QuarantinedNovelRows)
       assert(spark.read.parquet(s"$ix/quarantine/batch_id=1").count() == 1L)
 
@@ -132,16 +132,16 @@ class GovernedQuarantineSpec extends SparkSpec {
       val corpus = Seq((0L, Array(1f, 0f, 0f, 0f)), (1L, Array(0f, 1f, 0f, 0f)))
         .toDF("id", "v")
       Dedup.writeSrpIndex(corpus, "id", "v", sx, dim = dim, tables = 2)
-      Dedup.initSrpIngestLedger(spark, sx)
+      Dedup.initIngestLedger(spark, sx)
       val badVec = Seq(("oops", Array(0f, 0f, 1f, 0f))).toDF("id", "v")
-      val s2 = Dedup.ingestBatchWithSrpIndex(badVec, "id", "v", sx, sout,
-        batchId = 1L, threshold = 0.9, quarantine = true)
+      val s2 = Dedup.ingestBatch(badVec, "id", Dedup.SrpVectors("v", 0.9), sx,
+        sout, batchId = 1L, quarantine = true)
       assert(s2.novelRows == Dedup.QuarantinedNovelRows)
       assert(spark.read.parquet(s"$sx/quarantine/batch_id=1").count() == 1L)
       // a good batch continues the SRP stream too
-      val s3 = Dedup.ingestBatchWithSrpIndex(
-        Seq((5L, Array(0f, 0f, 0f, 1f))).toDF("id", "v"), "id", "v", sx,
-        sout, batchId = 2L, threshold = 0.9, quarantine = true)
+      val s3 = Dedup.ingestBatch(
+        Seq((5L, Array(0f, 0f, 0f, 1f))).toDF("id", "v"), "id",
+        Dedup.SrpVectors("v", 0.9), sx, sout, batchId = 2L, quarantine = true)
       assert(!s3.replayed && s3.novelRows == 1L)
     } finally rmrf(base)
   }
@@ -160,9 +160,9 @@ class GovernedQuarantineSpec extends SparkSpec {
       Dedup.writeSignatureIndex(docs(0L, 1L, 2L), "doc_id", "text", ix, p)
       Dedup.initIngestLedger(spark, ix)
       // batch 1 quarantined (id 1 <= watermark 2); the stream continues
-      Dedup.ingestBatchWithIndex(docs(1L, 10L), "doc_id", "text", ix, out,
-        batchId = 1L, quarantine = true)
-      Dedup.ingestBatchWithIndex(docs(20L), "doc_id", "text", ix, out,
+      Dedup.ingestBatch(docs(1L, 10L), "doc_id", Dedup.MinHashText("text"), ix,
+        out, batchId = 1L, quarantine = true)
+      Dedup.ingestBatch(docs(20L), "doc_id", Dedup.MinHashText("text"), ix, out,
         batchId = 2L, quarantine = true)
 
       val qdir = new org.apache.hadoop.fs.Path(s"$ix/quarantine/batch_id=1")
@@ -174,7 +174,7 @@ class GovernedQuarantineSpec extends SparkSpec {
         spark.sparkContext.hadoopConfiguration)
 
       val s = Dedup.redriveQuarantined(spark, ix, out, 1L, "doc_id",
-        "text", rekey)
+        Dedup.MinHashText("text"), rekey)
       // doc 22 keeps corpus doc 1's text — legitimately screened as a
       // cross-dup; only 31 is novel
       assert(!s.replayed && s.novelRows == 1L && s.watermarkBefore == 20L &&
@@ -194,7 +194,7 @@ class GovernedQuarantineSpec extends SparkSpec {
       // the re-run resolves as a replay and finishes the removal
       require(fs.rename(qcopy, qdir))
       val sr = Dedup.redriveQuarantined(spark, ix, out, 1L, "doc_id",
-        "text", rekey)
+        Dedup.MinHashText("text"), rekey)
       assert(sr.replayed && sr.novelRows == 1L, s"$sr")
       assert(!fs.exists(qdir))
       assert(spark.read.parquet(s"$ix/ingest_ledger")
@@ -203,18 +203,18 @@ class GovernedQuarantineSpec extends SparkSpec {
 
       // a redrive with nothing quarantined fails loudly
       intercept[IllegalArgumentException] {
-        Dedup.redriveQuarantined(spark, ix, out, 1L, "doc_id", "text",
-          rekey)
+        Dedup.redriveQuarantined(spark, ix, out, 1L, "doc_id",
+          Dedup.MinHashText("text"), rekey)
       }
 
       // ≡ the run that never violated: same committed batches in the
       // same watermark order, no quarantine ever
       Dedup.writeSignatureIndex(docs(0L, 1L, 2L), "doc_id", "text", ix2, p)
       Dedup.initIngestLedger(spark, ix2)
-      Dedup.ingestBatchWithIndex(docs(20L), "doc_id", "text", ix2, out2,
-        batchId = 2L, quarantine = true)
-      Dedup.ingestBatchWithIndex(rekey(docs(1L, 10L)), "doc_id", "text",
-        ix2, out2, batchId = 1L, quarantine = true)
+      Dedup.ingestBatch(docs(20L), "doc_id", Dedup.MinHashText("text"), ix2,
+        out2, batchId = 2L, quarantine = true)
+      Dedup.ingestBatch(rekey(docs(1L, 10L)), "doc_id",
+        Dedup.MinHashText("text"), ix2, out2, batchId = 1L, quarantine = true)
       def sigIds(path: String) = spark.read.parquet(s"$path/signatures")
         .select("id").collect().map(_.getLong(0)).toSet
       def committed(path: String) = spark.read
@@ -230,8 +230,8 @@ class GovernedQuarantineSpec extends SparkSpec {
         "committed ledger history must equal the never-violated run")
 
       // and the governed loop continues normally after the redrive
-      val s4 = Dedup.ingestBatchWithIndex(docs(40L), "doc_id", "text", ix,
-        out, batchId = 3L, quarantine = true)
+      val s4 = Dedup.ingestBatch(docs(40L), "doc_id", Dedup.MinHashText("text"),
+        ix, out, batchId = 3L, quarantine = true)
       assert(!s4.replayed && s4.novelRows == 1L &&
         s4.watermarkBefore == 31L, s"$s4")
     } finally rmrf(base)
@@ -244,7 +244,7 @@ class GovernedQuarantineSpec extends SparkSpec {
     try {
       Dedup.writeSignatureIndex(docs(0L, 1L, 2L), "doc_id", "text", ix, p)
       Dedup.initIngestLedger(spark, ix)
-      Dedup.ingestBatchWithIndex(docs(1L), "doc_id", "text", ix, out,
+      Dedup.ingestBatch(docs(1L), "doc_id", Dedup.MinHashText("text"), ix, out,
         batchId = 1L, quarantine = true)
       intercept[IllegalArgumentException] {
         Dedup.writeSignatureIndex(docs(0L, 1L, 2L), "doc_id", "text", ix, p)
@@ -272,13 +272,13 @@ class GovernedQuarantineSpec extends SparkSpec {
       Dedup.writeSignatureIndex(docs(0L, 1L, 2L), "doc_id", "text", ix, p)
       Dedup.initIngestLedger(spark, ix)
       // batch 1 quarantined: id 1 replays a committed id (<= watermark 2)
-      Dedup.ingestBatchWithIndex(docs(1L, 10L), "doc_id", "text", ix, out,
-        batchId = 1L, quarantine = true)
+      Dedup.ingestBatch(docs(1L, 10L), "doc_id", Dedup.MinHashText("text"), ix,
+        out, batchId = 1L, quarantine = true)
       val qdir = s"$ix/quarantine/batch_id=1"
       assert(spark.read.parquet(qdir).count() == 2L)
 
       // takedown of id 1 must reach the diverted raw copy too
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(1L))
+      Dedup.deleteFromIndex(spark, ix, Seq(1L))
       assert(Dedup.scrubQuarantined(spark, ix, "doc_id") == 1L)
       assert(spark.read.parquet(qdir).select("doc_id").collect()
         .map(_.getLong(0)).toSet == Set(10L),
@@ -289,7 +289,7 @@ class GovernedQuarantineSpec extends SparkSpec {
       // take down the remaining row: the batch scrubs to zero rows and
       // the directory is dropped (nothing left to triage; the -1 ledger
       // row stays as the historical record)
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(10L))
+      Dedup.deleteFromIndex(spark, ix, Seq(10L))
       assert(Dedup.scrubQuarantined(spark, ix, "doc_id") == 1L)
       val fs = new org.apache.hadoop.fs.Path(base)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -310,14 +310,15 @@ class GovernedQuarantineSpec extends SparkSpec {
     try {
       Dedup.writeSignatureIndex(docs(0L, 1L, 2L), "doc_id", "text", ix, p)
       Dedup.initIngestLedger(spark, ix)
-      Dedup.ingestBatchWithIndex(docs(1L, 10L), "doc_id", "text", ix, out,
-        batchId = 1L, quarantine = true)
+      Dedup.ingestBatch(docs(1L, 10L), "doc_id", Dedup.MinHashText("text"), ix,
+        out, batchId = 1L, quarantine = true)
       // takedown id 1 — which hides its committed signature from the
       // screening view, so WITHOUT the raw-id anti-join the redrive
       // below would re-admit doc 1's text under the repaired id 22
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(1L))
+      Dedup.deleteFromIndex(spark, ix, Seq(1L))
       val s = Dedup.redriveQuarantined(spark, ix, out, 1L, "doc_id",
-        "text", df => df.withColumn("doc_id", col("doc_id") + lit(21L)))
+        Dedup.MinHashText("text"), df => df.withColumn("doc_id",
+          col("doc_id") + lit(21L)))
       assert(!s.replayed && s.novelRows == 1L && s.watermarkAfter == 31L,
         s"$s")
       assert(spark.read.parquet(s"$out/batch_id=1").select("doc_id")
@@ -336,8 +337,8 @@ class GovernedQuarantineSpec extends SparkSpec {
     try {
       Dedup.writeSignatureIndex(docs(0L, 1L, 2L), "doc_id", "text", ix, p)
       Dedup.initIngestLedger(spark, ix)
-      Dedup.ingestBatchWithIndex(docs(1L, 10L), "doc_id", "text", ix, out,
-        batchId = 1L, quarantine = true)
+      Dedup.ingestBatch(docs(1L, 10L), "doc_id", Dedup.MinHashText("text"), ix,
+        out, batchId = 1L, quarantine = true)
       // simulate scrubQuarantined dying between rename(dir, old) and
       // rename(tmp, dir): sole raw copy under the old-marker, temp orphan
       val fs = new org.apache.hadoop.fs.Path(base)
@@ -359,7 +360,8 @@ class GovernedQuarantineSpec extends SparkSpec {
       // novelRows 1: repaired doc 22 carries doc 1's text — the
       // cross-index screen drops it as a near-dup of the committed doc
       val s = Dedup.redriveQuarantined(spark, ix, out, 1L, "doc_id",
-        "text", df => df.withColumn("doc_id", col("doc_id") + lit(21L)))
+        Dedup.MinHashText("text"), df => df.withColumn("doc_id",
+          col("doc_id") + lit(21L)))
       assert(!s.replayed && s.novelRows == 1L && s.watermarkAfter == 31L,
         s"$s")
       assert(!fs.exists(live) && !fs.exists(old))
@@ -382,11 +384,12 @@ class GovernedQuarantineSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("in flight"), e.getMessage)
       intercept[IllegalArgumentException] {
-        Dedup.redriveQuarantined(spark, ix, out, 1L, "doc_id", "text")
+        Dedup.redriveQuarantined(spark, ix, out, 1L, "doc_id",
+          Dedup.MinHashText("text"))
       }
       // the stream replay completes the divert (rewrite + ledger row)…
-      val s = Dedup.ingestBatchWithIndex(docs(1L, 10L), "doc_id", "text",
-        ix, out, batchId = 1L, quarantine = true)
+      val s = Dedup.ingestBatch(docs(1L, 10L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 1L, quarantine = true)
       assert(!s.replayed && s.novelRows == Dedup.QuarantinedNovelRows)
       // …and triage proceeds on the committed divert
       Dedup.dropQuarantined(spark, ix, 1L)
@@ -404,13 +407,13 @@ class GovernedQuarantineSpec extends SparkSpec {
     try {
       Dedup.writeSignatureIndex(docs(0L, 1L, 2L), "doc_id", "text", ix, p)
       Dedup.initIngestLedger(spark, ix)
-      Dedup.ingestBatchWithIndex(docs(1L, 10L), "doc_id", "text", ix, out,
-        batchId = 1L, quarantine = true)
+      Dedup.ingestBatch(docs(1L, 10L), "doc_id", Dedup.MinHashText("text"), ix,
+        out, batchId = 1L, quarantine = true)
       Dedup.dropQuarantined(spark, ix, 1L)
       // the source re-delivers batch 1 (crash between the foreachBatch
       // return and the streaming checkpoint commit)
-      val r = Dedup.ingestBatchWithIndex(docs(1L, 10L), "doc_id", "text",
-        ix, out, batchId = 1L, quarantine = true)
+      val r = Dedup.ingestBatch(docs(1L, 10L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 1L, quarantine = true)
       assert(r.replayed && r.novelRows == Dedup.QuarantinedNovelRows, s"$r")
       val fs = new org.apache.hadoop.fs.Path(base)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -427,15 +430,15 @@ class GovernedQuarantineSpec extends SparkSpec {
     try {
       Dedup.writeSignatureIndex(docs(0L, 1L, 2L), "doc_id", "text", ix, p)
       Dedup.initIngestLedger(spark, ix)
-      Dedup.ingestBatchWithIndex(docs(1L, 10L), "doc_id", "text", ix, out,
-        batchId = 1L, quarantine = true)
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(1L))
+      Dedup.ingestBatch(docs(1L, 10L), "doc_id", Dedup.MinHashText("text"), ix,
+        out, batchId = 1L, quarantine = true)
+      Dedup.deleteFromIndex(spark, ix, Seq(1L))
       assert(Dedup.scrubQuarantined(spark, ix, "doc_id") == 1L)
       // compaction purges the pending tombstone set — after this, no
       // later scrub pass could ever remove a resurrected row again
-      Dedup.compactSignatureIndex(spark, ix)
-      val r = Dedup.ingestBatchWithIndex(docs(1L, 10L), "doc_id", "text",
-        ix, out, batchId = 1L, quarantine = true)
+      Dedup.compactIndex(spark, ix)
+      val r = Dedup.ingestBatch(docs(1L, 10L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 1L, quarantine = true)
       assert(r.replayed && r.novelRows == Dedup.QuarantinedNovelRows, s"$r")
       assert(spark.read.parquet(s"$ix/quarantine/batch_id=1")
         .select("doc_id").collect().map(_.getLong(0)).toSet == Set(10L),
@@ -450,16 +453,17 @@ class GovernedQuarantineSpec extends SparkSpec {
     try {
       Dedup.writeSignatureIndex(docs(0L, 1L, 2L), "doc_id", "text", ix, p)
       Dedup.initIngestLedger(spark, ix)
-      Dedup.ingestBatchWithIndex(docs(1L, 10L), "doc_id", "text", ix, out,
-        batchId = 1L, quarantine = true)
-      Dedup.redriveQuarantined(spark, ix, out, 1L, "doc_id", "text",
+      Dedup.ingestBatch(docs(1L, 10L), "doc_id", Dedup.MinHashText("text"), ix,
+        out, batchId = 1L, quarantine = true)
+      Dedup.redriveQuarantined(spark, ix, out, 1L, "doc_id",
+        Dedup.MinHashText("text"),
         df => df.withColumn("doc_id", col("doc_id") + lit(21L)))
       // raw batch 1 replays: the RAW ids re-violate against the advanced
       // watermark, but the batch is committed (under the repaired ids)
       // and triaged — the replay must be a pure no-op
       val sigsBefore = spark.read.parquet(s"$ix/signatures").count()
-      val r = Dedup.ingestBatchWithIndex(docs(1L, 10L), "doc_id", "text",
-        ix, out, batchId = 1L, quarantine = true)
+      val r = Dedup.ingestBatch(docs(1L, 10L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 1L, quarantine = true)
       assert(r.replayed && r.novelRows == Dedup.QuarantinedNovelRows, s"$r")
       val fs = new org.apache.hadoop.fs.Path(base)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -480,17 +484,18 @@ class GovernedQuarantineSpec extends SparkSpec {
       Dedup.writeSrpIndex(
         Seq((0L, Array(1f, 0f, 0f, 0f)), (2L, Array(0f, 1f, 0f, 0f)))
           .toDF("id", "v"), "id", "v", ix, dim = dim, tables = 2)
-      Dedup.initSrpIngestLedger(spark, ix)
+      Dedup.initIngestLedger(spark, ix)
       // batch 1 quarantined: id 2 replays a committed id (<= watermark 2)
-      Dedup.ingestBatchWithSrpIndex(
+      Dedup.ingestBatch(
         Seq((2L, Array(0f, 0f, 1f, 0f)), (5L, Array(0f, 0f, 0f, 1f)))
-          .toDF("id", "v"), "id", "v", ix, out, batchId = 1L,
-        threshold = 0.9, quarantine = true)
+          .toDF("id", "v"), "id", Dedup.SrpVectors("v", 0.9), ix, out,
+            batchId = 1L, quarantine = true)
       // takedown id 2 BEFORE the redrive: without the raw-id anti-join
       // the repaired redrive would re-admit its vector under id 23
-      Dedup.deleteFromSrpIndex(spark, ix, Seq(2L))
-      val s = Dedup.redriveQuarantinedSrp(spark, ix, out, 1L, "id", "v",
-        threshold = 0.9, repair = df => df.withColumn("id", $"id" + lit(21L)))
+      Dedup.deleteFromIndex(spark, ix, Seq(2L))
+      val s = Dedup.redriveQuarantined(spark, ix, out, 1L, "id",
+        Dedup.SrpVectors("v", 0.9), repair = df => df.withColumn("id",
+        $"id" + lit(21L)))
       assert(!s.replayed && s.novelRows == 1L && s.watermarkAfter == 26L,
         s"$s")
       assert(spark.read.parquet(s"$out/batch_id=1").select("id")
@@ -511,14 +516,15 @@ class GovernedQuarantineSpec extends SparkSpec {
       Dedup.writeSrpIndex(
         Seq((0L, Array(1f, 0f, 0f, 0f)), (2L, Array(0f, 1f, 0f, 0f)))
           .toDF("id", "v"), "id", "v", ix, dim = dim, tables = 2)
-      Dedup.initSrpIngestLedger(spark, ix)
-      val s1 = Dedup.ingestBatchWithSrpIndex(
-        Seq((1L, Array(0f, 0f, 1f, 0f))).toDF("id", "v"), "id", "v", ix,
-        out, batchId = 1L, threshold = 0.9, quarantine = true)
+      Dedup.initIngestLedger(spark, ix)
+      val s1 = Dedup.ingestBatch(
+        Seq((1L, Array(0f, 0f, 1f, 0f))).toDF("id", "v"), "id",
+        Dedup.SrpVectors("v", 0.9), ix, out, batchId = 1L, quarantine = true)
       assert(s1.novelRows == Dedup.QuarantinedNovelRows)
 
-      val s = Dedup.redriveQuarantinedSrp(spark, ix, out, 1L, "id", "v",
-        threshold = 0.9, repair = df => df.withColumn("id", lit(10L)))
+      val s = Dedup.redriveQuarantined(spark, ix, out, 1L, "id",
+        Dedup.SrpVectors("v", 0.9), repair = df => df.withColumn("id",
+        lit(10L)))
       assert(!s.replayed && s.novelRows == 1L && s.watermarkAfter == 10L,
         s"$s")
       val fs = new org.apache.hadoop.fs.Path(base)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Deletion / retraction contracts of the persisted indexes
-  * ([[Dedup.deleteFromSignatureIndex]] / [[Dedup.deleteFromSrpIndex]]):
+  * ([[Dedup.deleteFromIndex]] on MinHash and SRP indexes):
   *
   *  - a delete hides the ids from the NEXT index open (probes stop
   *    matching immediately, no compaction required);
@@ -80,7 +80,7 @@ class IndexDeletionSpec extends SparkSpec {
       assert(before.exists(_._2 == 2L) && before.exists(_._2 == 4L),
         s"fixture must near-dup the to-be-deleted ids: $before")
 
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(2L, 4L))
+      Dedup.deleteFromIndex(spark, ix, Seq(2L, 4L))
       val after = pairsOf(Dedup.minHashNearDupPairsIncremental(batch,
         Dedup.readSignatureIndex(spark, ix), "doc_id", "text", p))
       assert(!after.exists(pr => pr._2 == 2L || pr._2 == 4L),
@@ -96,7 +96,7 @@ class IndexDeletionSpec extends SparkSpec {
       assert(after == rebuilt, s"probe-after-delete $after != rebuild $rebuilt")
 
       // compaction: physical purge + tombstone fold + negative deltas
-      Dedup.compactSignatureIndex(spark, ix)
+      Dedup.compactIndex(spark, ix)
       val fs = new org.apache.hadoop.fs.Path(base)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$ix/tombstones")),
@@ -112,13 +112,13 @@ class IndexDeletionSpec extends SparkSpec {
         s"post-compaction probe $compacted != rebuild $rebuilt")
 
       // deleting absent ids is a harmless no-op
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(99999L))
+      Dedup.deleteFromIndex(spark, ix, Seq(99999L))
       assert(pairsOf(Dedup.minHashNearDupPairsIncremental(batch,
         Dedup.readSignatureIndex(spark, ix), "doc_id", "text", p)) == rebuilt)
 
       // an overwrite rebuild at the same path supersedes pending deletes
       // — stale tombstones must not hide rows of the new generation
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(6L))
+      Dedup.deleteFromIndex(spark, ix, Seq(6L))
       Dedup.writeSignatureIndex(corpus, "doc_id", "text", ix, p)
       assert(pairsOf(Dedup.minHashNearDupPairsIncremental(batch,
         Dedup.readSignatureIndex(spark, ix), "doc_id", "text", p)) == before,
@@ -138,7 +138,7 @@ class IndexDeletionSpec extends SparkSpec {
         val batch = docs(100L, 101L, 102L)
         val dropped = ids.filter(_ => rnd.nextDouble() < 0.4)
         Dedup.writeSignatureIndex(corpus, "doc_id", "text", ix, p)
-        Dedup.deleteFromSignatureIndex(spark, ix, dropped)
+        Dedup.deleteFromIndex(spark, ix, dropped)
         Dedup.writeSignatureIndex(
           corpus.filter(!$"doc_id".isin(dropped.map(Long.box): _*)),
           "doc_id", "text", retained, p)
@@ -148,7 +148,7 @@ class IndexDeletionSpec extends SparkSpec {
         val rebuilt = probeOf(retained)
         assert(probeOf(ix) == rebuilt,
           s"trial $trial pending-path diverged (dropped=$dropped)")
-        Dedup.compactSignatureIndex(spark, ix)
+        Dedup.compactIndex(spark, ix)
         assert(probeOf(ix) == rebuilt,
           s"trial $trial purged-path diverged (dropped=$dropped)")
       } finally rmrf(base)
@@ -177,7 +177,7 @@ class IndexDeletionSpec extends SparkSpec {
       val cappedWith0 = atCap.intersect(bucketsOf(0L))
       assert(cappedWith0.nonEmpty, "fixture must have full shared buckets")
 
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(0L))
+      Dedup.deleteFromIndex(spark, ix, Seq(0L))
 
       // pre-compaction: the tombstoned rows still hold their slots
       // (occupancy is conservative until the purge) — 10 stays out of
@@ -189,7 +189,7 @@ class IndexDeletionSpec extends SparkSpec {
 
       // post-compaction: 0's slots are freed (negative deltas) — 12
       // lands in at least one bucket that was at cap before the purge
-      Dedup.compactSignatureIndex(spark, ix)
+      Dedup.compactIndex(spark, ix)
       Dedup.appendSignatureIndex(docs(12L), "doc_id", "text", ix)
       val reopened12 = bucketsOf(12L).intersect(cappedWith0)
       assert(reopened12.nonEmpty,
@@ -217,7 +217,7 @@ class IndexDeletionSpec extends SparkSpec {
         Dedup.readSrpIndex(spark, ix), "id", "v", threshold = 0.99))
       assert(before == Set((100L, 3L), (101L, 5L)), s"fixture: $before")
 
-      Dedup.deleteFromSrpIndex(spark, ix, Seq(3L))
+      Dedup.deleteFromIndex(spark, ix, Seq(3L))
       val after = pairsOf(Dedup.embeddingNearDupLshIncremental(batch,
         Dedup.readSrpIndex(spark, ix), "id", "v", threshold = 0.99))
       assert(after == Set((101L, 5L)),
@@ -229,7 +229,7 @@ class IndexDeletionSpec extends SparkSpec {
         Dedup.readSrpIndex(spark, retained), "id", "v", threshold = 0.99))
       assert(after == rebuilt, s"$after != rebuild $rebuilt")
 
-      Dedup.compactSrpIndex(spark, ix)
+      Dedup.compactIndex(spark, ix)
       val fs = new org.apache.hadoop.fs.Path(base)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$ix/tombstones")))
@@ -248,8 +248,8 @@ class IndexDeletionSpec extends SparkSpec {
     val ix = s"$base/ix"
     try {
       Dedup.writeSignatureIndex(docs(0L to 9L: _*), "doc_id", "text", ix, p)
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(2L, 4L))
-      Dedup.compactSignatureIndex(spark, ix)
+      Dedup.deleteFromIndex(spark, ix, Seq(2L, 4L))
+      Dedup.compactIndex(spark, ix)
       occupancyMatchesRecomputed(ix, "bands", Seq("band", "bkey"))
       val occAfter = Dedup.readOccupancy(spark, ix, Seq("band", "bkey"),
         None, Long.MaxValue).collect()
@@ -259,8 +259,8 @@ class IndexDeletionSpec extends SparkSpec {
       // step: the same ids tombstoned again, but their rows are already
       // physically gone — the recomputed drop counts must be empty, so
       // occupancy must not move, and the stale tombstones must fold away
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(2L, 4L))
-      Dedup.compactSignatureIndex(spark, ix)
+      Dedup.deleteFromIndex(spark, ix, Seq(2L, 4L))
+      Dedup.compactIndex(spark, ix)
       val fs = new org.apache.hadoop.fs.Path(base)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$ix/tombstones")))
@@ -283,15 +283,15 @@ class IndexDeletionSpec extends SparkSpec {
       // no ingest in between — byte-identical negative rows under a
       // non-unique stamp, which dropDuplicates would fold into one
       Dedup.writeSignatureIndex(docs(0L, 2L, 4L), "doc_id", "text", ix, p)
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(0L))
-      Dedup.compactSignatureIndex(spark, ix)
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(2L))
-      Dedup.compactSignatureIndex(spark, ix)
+      Dedup.deleteFromIndex(spark, ix, Seq(0L))
+      Dedup.compactIndex(spark, ix)
+      Dedup.deleteFromIndex(spark, ix, Seq(2L))
+      Dedup.compactIndex(spark, ix)
       occupancyMatchesRecomputed(ix, "bands", Seq("band", "bkey"))
       // force an occupancy rewrite (huge target => parts = 1, file count
       // above the floor after the appended negative filesets) — the
       // dropDuplicates replay fold must keep BOTH purges' negatives
-      Dedup.compactSignatureIndex(spark, ix, targetFileBytes = 1L << 40)
+      Dedup.compactIndex(spark, ix, targetFileBytes = 1L << 40)
       occupancyMatchesRecomputed(ix, "bands", Seq("band", "bkey"))
     } finally rmrf(base)
   }
@@ -304,7 +304,7 @@ class IndexDeletionSpec extends SparkSpec {
       Dedup.writeSignatureIndex(docs(0L, 1L, 2L, 3L), "doc_id", "text",
         ix, p)
       Dedup.initIngestLedger(spark, ix)
-      Dedup.ingestBatchWithIndex(docs(10L, 11L), "doc_id", "text", ix,
+      Dedup.ingestBatch(docs(10L, 11L), "doc_id", Dedup.MinHashText("text"), ix,
         out, batchId = 1L)
 
       // torn attempt of batch 2 (doc 21, uniq text — a fam doc would
@@ -318,13 +318,13 @@ class IndexDeletionSpec extends SparkSpec {
         .write.mode("append").parquet(s"$ix/signatures")
 
       // takedown + physical purge land between the crash and the replay
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(0L))
-      Dedup.compactSignatureIndex(spark, ix)
+      Dedup.deleteFromIndex(spark, ix, Seq(0L))
+      Dedup.compactIndex(spark, ix)
 
       // replay: torn path; the replay-presence probe must not read the
       // purge's negative rows as "this batch's delta already landed"
-      val s = Dedup.ingestBatchWithIndex(docs(21L), "doc_id", "text", ix,
-        out, batchId = 2L)
+      val s = Dedup.ingestBatch(docs(21L), "doc_id", Dedup.MinHashText("text"),
+        ix, out, batchId = 2L)
       assert(!s.replayed && s.novelRows == 1L, s"$s")
       occupancyMatchesRecomputed(ix, "bands", Seq("band", "bkey"))
     } finally rmrf(base)
@@ -358,8 +358,8 @@ class IndexDeletionSpec extends SparkSpec {
       // 0.999) but their rows in the AT-CAP shared buckets are capped
       // out (their unshared tail-token buckets still admit); uniq 11
       // supplies a positive occupancy delta at the batch watermark
-      val s1 = Dedup.ingestBatchWithIndex(docs(10L, 11L, 12L), "doc_id",
-        "text", ix, out, batchId = 1L)
+      val s1 = Dedup.ingestBatch(docs(10L, 11L, 12L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 1L)
       assert(s1.novelRows == 3L, s"$s1")
       val bandsAfter1 = bandSet()
       assert(!bandsAfter1.exists(r =>
@@ -367,8 +367,8 @@ class IndexDeletionSpec extends SparkSpec {
         "fixture: batch rows in the at-cap buckets must be capped out")
 
       // takedown + purge free two slots per shared bucket
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(0L, 2L))
-      Dedup.compactSignatureIndex(spark, ix)
+      Dedup.deleteFromIndex(spark, ix, Seq(0L, 2L))
+      Dedup.compactIndex(spark, ix)
       val bandsAfterPurge = bandSet()
       assert(bandsAfterPurge ==
         bandsAfter1.filterNot(r => r._1 == 0L || r._1 == 2L))
@@ -376,15 +376,15 @@ class IndexDeletionSpec extends SparkSpec {
       // replay of the COMMITTED batch 1: its occupancy view must be the
       // FIRST attempt's (negatives stamped above its watermark), so the
       // capped-out rows stay out and nothing is appended
-      val s1r = Dedup.ingestBatchWithIndex(docs(10L, 11L, 12L), "doc_id",
-        "text", ix, out, batchId = 1L)
+      val s1r = Dedup.ingestBatch(docs(10L, 11L, 12L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 1L)
       assert(s1r.replayed && s1r.novelRows == 3L, s"$s1r")
       assert(bandSet() == bandsAfterPurge,
         "a replay after the purge must not re-admit capped-out rows")
       occupancyMatchesRecomputed(ix, "bands", Seq("band", "bkey"))
 
       // a FRESH batch sees the re-opened slots
-      val s2 = Dedup.ingestBatchWithIndex(docs(20L), "doc_id", "text",
+      val s2 = Dedup.ingestBatch(docs(20L), "doc_id", Dedup.MinHashText("text"),
         ix, out, batchId = 2L)
       assert(s2.novelRows == 1L, s"$s2")
       assert(bandSet().exists(r => r._1 == 20L && atCap((r._2, r._3))),
@@ -407,8 +407,8 @@ class IndexDeletionSpec extends SparkSpec {
       // batch 1 runs to completion (bands AND occupancy delta landed),
       // then the crash is simulated by removing only its ledger row —
       // the torn-with-delta state
-      Dedup.ingestBatchWithIndex(docs(10L, 11L, 12L), "doc_id", "text",
-        ix, out, batchId = 1L)
+      Dedup.ingestBatch(docs(10L, 11L, 12L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 1L)
       val ldir = new org.apache.hadoop.fs.Path(s"$ix/ingest_ledger")
       val fs = ldir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val removed = fs.listStatus(ldir)
@@ -418,21 +418,21 @@ class IndexDeletionSpec extends SparkSpec {
 
       // takedown + purge re-open the shared-bucket cap slots BEFORE the
       // replay
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(0L, 2L))
-      Dedup.compactSignatureIndex(spark, ix)
+      Dedup.deleteFromIndex(spark, ix, Seq(0L, 2L))
+      Dedup.compactIndex(spark, ix)
 
       // replay (fresh path — no ledger row): sees the re-opened caps,
       // heals the newly-admitted band rows, and MUST append a
       // supplementary delta for exactly that remainder — the first
       // attempt's delta alone would leave occupancy undercounting the
       // physical band table forever
-      val s = Dedup.ingestBatchWithIndex(docs(10L, 11L, 12L), "doc_id",
-        "text", ix, out, batchId = 1L)
+      val s = Dedup.ingestBatch(docs(10L, 11L, 12L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 1L)
       assert(!s.replayed && s.novelRows == 3L, s"$s")
       occupancyMatchesRecomputed(ix, "bands", Seq("band", "bkey"))
 
       // and the loop continues cleanly
-      val s2 = Dedup.ingestBatchWithIndex(docs(21L), "doc_id", "text",
+      val s2 = Dedup.ingestBatch(docs(21L), "doc_id", Dedup.MinHashText("text"),
         ix, out, batchId = 2L)
       assert(s2.novelRows == 1L, s"$s2")
       occupancyMatchesRecomputed(ix, "bands", Seq("band", "bkey"))
@@ -448,30 +448,30 @@ class IndexDeletionSpec extends SparkSpec {
       Dedup.initIngestLedger(spark, ix)
 
       // batch 1: 100 (fam) near-dups corpus doc 0 → screened; 101 novel
-      val s1 = Dedup.ingestBatchWithIndex(docs(100L, 101L), "doc_id",
-        "text", ix, out, batchId = 1L)
+      val s1 = Dedup.ingestBatch(docs(100L, 101L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 1L)
       assert(s1.novelRows == 1L, s"batch 1 expected 1 novel: $s1")
 
       // retract the fam representative — the only fam doc in the index
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(0L))
+      Dedup.deleteFromIndex(spark, ix, Seq(0L))
 
       // batch 2: 200 (fam) is no longer suppressed → ingested as novel
-      val s2 = Dedup.ingestBatchWithIndex(docs(200L), "doc_id", "text",
-        ix, out, batchId = 2L)
+      val s2 = Dedup.ingestBatch(docs(200L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 2L)
       assert(s2.novelRows == 1L,
         s"a deleted doc must stop suppressing near-dups: $s2")
 
       // replay of batch 2 (crash after ledger commit): recognized, same
       // result, no duplicate state
-      val s2r = Dedup.ingestBatchWithIndex(docs(200L), "doc_id", "text",
-        ix, out, batchId = 2L)
+      val s2r = Dedup.ingestBatch(docs(200L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 2L)
       assert(s2r.replayed && s2r.novelRows == s2.novelRows &&
         s2r.watermarkAfter == s2.watermarkAfter, s"replay diverged: $s2r")
       assert(spark.read.parquet(s"$out/batch_id=2").count() == 1L)
 
       // batch 3: 300 (fam) near-dups the now-indexed 200 → screened
-      val s3 = Dedup.ingestBatchWithIndex(docs(300L), "doc_id", "text",
-        ix, out, batchId = 3L)
+      val s3 = Dedup.ingestBatch(docs(300L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 3L)
       assert(s3.novelRows == 0L,
         s"the re-ingested family must suppress again: $s3")
       occupancyMatchesRecomputed(ix, "bands", Seq("band", "bkey"))
@@ -490,33 +490,36 @@ class IndexDeletionSpec extends SparkSpec {
     try {
       val corpus = Seq((0L, vec(0)), (1L, vec(1))).toDF("id", "v")
       Dedup.writeSrpIndex(corpus, "id", "v", ix, dim = dim, tables = 4)
-      Dedup.initSrpIngestLedger(spark, ix)
+      Dedup.initIngestLedger(spark, ix)
 
       // batch 1: 100 copies corpus vector 0 → screened; 101 novel
-      val s1 = Dedup.ingestBatchWithSrpIndex(
-        Seq((100L, vec(0)), (101L, vec(50))).toDF("id", "v"), "id", "v",
-        ix, out, batchId = 1L, threshold = 0.99)
+      val s1 = Dedup.ingestBatch(
+        Seq((100L, vec(0)), (101L, vec(50))).toDF("id", "v"), "id",
+        Dedup.SrpVectors("v", 0.99), ix, out, batchId = 1L)
       assert(s1.novelRows == 1L, s"batch 1 expected 1 novel: $s1")
 
-      Dedup.deleteFromSrpIndex(spark, ix, Seq(0L))
+      Dedup.deleteFromIndex(spark, ix, Seq(0L))
 
       // batch 2: another copy of vector 0 — no longer suppressed
-      val s2 = Dedup.ingestBatchWithSrpIndex(
-        Seq((200L, vec(0))).toDF("id", "v"), "id", "v", ix, out,
-        batchId = 2L, threshold = 0.99)
+      val s2 = Dedup.ingestBatch(
+        Seq((200L, vec(0))).toDF("id", "v"), "id", Dedup.SrpVectors("v", 0.99),
+          ix, out,
+        batchId = 2L)
       assert(s2.novelRows == 1L,
         s"a deleted vector must stop suppressing copies: $s2")
 
       // replay: recognized, idempotent
-      val s2r = Dedup.ingestBatchWithSrpIndex(
-        Seq((200L, vec(0))).toDF("id", "v"), "id", "v", ix, out,
-        batchId = 2L, threshold = 0.99)
+      val s2r = Dedup.ingestBatch(
+        Seq((200L, vec(0))).toDF("id", "v"), "id", Dedup.SrpVectors("v", 0.99),
+          ix, out,
+        batchId = 2L)
       assert(s2r.replayed && s2r.novelRows == 1L)
 
       // batch 3: yet another copy — suppressed by the re-ingested 200
-      val s3 = Dedup.ingestBatchWithSrpIndex(
-        Seq((300L, vec(0))).toDF("id", "v"), "id", "v", ix, out,
-        batchId = 3L, threshold = 0.99)
+      val s3 = Dedup.ingestBatch(
+        Seq((300L, vec(0))).toDF("id", "v"), "id", Dedup.SrpVectors("v", 0.99),
+          ix, out,
+        batchId = 3L)
       assert(s3.novelRows == 0L, s"200 must suppress again: $s3")
       occupancyMatchesRecomputed(ix, "buckets", Seq("tbl", "bkt"))
     } finally rmrf(base)
@@ -528,7 +531,7 @@ class IndexDeletionSpec extends SparkSpec {
     val ix = s"$base/ix"
     try {
       Dedup.writeSignatureIndex(docs(0L to 5L: _*), "doc_id", "text", ix, p)
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(2L))
+      Dedup.deleteFromIndex(spark, ix, Seq(2L))
       // simulated purge crash: every data file folded, the directory
       // removal not reached — only the write's _SUCCESS marker remains
       val dir = new org.apache.hadoop.fs.Path(s"$ix/tombstones")
@@ -600,8 +603,8 @@ class IndexDeletionSpec extends SparkSpec {
       Dedup.writeSignatureIndex(docs(0L to 3L: _*), "doc_id", "text",
         ixPath, p)
       Dedup.initIngestLedger(spark, ixPath)
-      Dedup.ingestBatchWithIndex(docs(10L, 11L), "doc_id", "text", ixPath,
-        outPath, batchId = 1L)
+      Dedup.ingestBatch(docs(10L, 11L), "doc_id", Dedup.MinHashText("text"),
+        ixPath, outPath, batchId = 1L)
     }
     try {
       driveTo(s"$crashed/ix", s"$crashed/out")
@@ -613,20 +616,20 @@ class IndexDeletionSpec extends SparkSpec {
       // state (signatures + bands on disk, delta + ledger missing)
       val occBefore = listDataFiles(s"$cix/occupancy")
       val ledBefore = listDataFiles(s"$cix/ingest_ledger")
-      Dedup.ingestBatchWithIndex(docs(21L, 23L), "doc_id", "text", cix,
-        s"$crashed/out", batchId = 2L)
+      Dedup.ingestBatch(docs(21L, 23L), "doc_id", Dedup.MinHashText("text"),
+        cix, s"$crashed/out", batchId = 2L)
       deleteFiles(listDataFiles(s"$cix/occupancy") -- occBefore)
       deleteFiles(listDataFiles(s"$cix/ingest_ledger") -- ledBefore)
 
       // takedown of EXACTLY the torn ids: the tombstone-filtered index
       // view reads an EMPTY tail past the watermark — only a physical
       // read can still see the tear
-      Dedup.deleteFromSignatureIndex(spark, cix, Seq(21L, 23L))
+      Dedup.deleteFromIndex(spark, cix, Seq(21L, 23L))
 
       // replay: must detect the tear, heal (no duplicate rows), append
       // ONE delta, and commit
-      val s = Dedup.ingestBatchWithIndex(docs(21L, 23L), "doc_id", "text",
-        cix, s"$crashed/out", batchId = 2L)
+      val s = Dedup.ingestBatch(docs(21L, 23L), "doc_id",
+        Dedup.MinHashText("text"), cix, s"$crashed/out", batchId = 2L)
       assert(!s.replayed && s.novelRows == 2L, s"$s")
       val sigIds = spark.read.parquet(s"$cix/signatures").select("id")
         .collect().map(_.getLong(0)).toSeq
@@ -634,19 +637,19 @@ class IndexDeletionSpec extends SparkSpec {
         s"replay re-appended signature rows over the torn tail: $sigIds")
 
       // the never-crashed twin: same batches, then the same takedown
-      Dedup.ingestBatchWithIndex(docs(21L, 23L), "doc_id", "text",
+      Dedup.ingestBatch(docs(21L, 23L), "doc_id", Dedup.MinHashText("text"),
         s"$clean/ix", s"$clean/out", batchId = 2L)
-      Dedup.deleteFromSignatureIndex(spark, s"$clean/ix", Seq(21L, 23L))
+      Dedup.deleteFromIndex(spark, s"$clean/ix", Seq(21L, 23L))
       assert(contentOf(cix) == contentOf(s"$clean/ix"),
         "crashed+healed index must be bit-identical to the never-crashed " +
           "run")
 
       // the physical purge nets out exactly (no negative drift) and the
       // loop continues
-      Dedup.compactSignatureIndex(spark, cix)
+      Dedup.compactIndex(spark, cix)
       occupancyMatchesRecomputed(cix, "bands", Seq("band", "bkey"))
-      val s3 = Dedup.ingestBatchWithIndex(docs(31L), "doc_id", "text", cix,
-        s"$crashed/out", batchId = 3L)
+      val s3 = Dedup.ingestBatch(docs(31L), "doc_id", Dedup.MinHashText("text"),
+        cix, s"$crashed/out", batchId = 3L)
       assert(s3.novelRows == 1L, s"$s3")
       occupancyMatchesRecomputed(cix, "bands", Seq("band", "bkey"))
     } finally rmrf(base)
@@ -681,10 +684,10 @@ class IndexDeletionSpec extends SparkSpec {
       Dedup.writeSrpIndex(
         Seq((0L, vec(0)), (1L, vec(1))).toDF("id", "v"), "id", "v",
         ixPath, dim = dim, tables = 4)
-      Dedup.initSrpIngestLedger(spark, ixPath)
-      Dedup.ingestBatchWithSrpIndex(
-        Seq((10L, vec(10)), (11L, vec(11))).toDF("id", "v"), "id", "v",
-        ixPath, outPath, batchId = 1L, threshold = 0.99)
+      Dedup.initIngestLedger(spark, ixPath)
+      Dedup.ingestBatch(
+        Seq((10L, vec(10)), (11L, vec(11))).toDF("id", "v"), "id",
+        Dedup.SrpVectors("v", 0.99), ixPath, outPath, batchId = 1L)
     }
     try {
       driveTo(s"$crashed/ix", s"$crashed/out")
@@ -693,36 +696,37 @@ class IndexDeletionSpec extends SparkSpec {
 
       val occBefore = listDataFiles(s"$cix/occupancy")
       val ledBefore = listDataFiles(s"$cix/ingest_ledger")
-      Dedup.ingestBatchWithSrpIndex(
-        Seq((21L, vec(21)), (23L, vec(23))).toDF("id", "v"), "id", "v",
-        cix, s"$crashed/out", batchId = 2L, threshold = 0.99)
+      Dedup.ingestBatch(
+        Seq((21L, vec(21)), (23L, vec(23))).toDF("id", "v"), "id",
+        Dedup.SrpVectors("v", 0.99), cix, s"$crashed/out", batchId = 2L)
       deleteFiles(listDataFiles(s"$cix/occupancy") -- occBefore)
       deleteFiles(listDataFiles(s"$cix/ingest_ledger") -- ledBefore)
 
-      Dedup.deleteFromSrpIndex(spark, cix, Seq(21L, 23L))
+      Dedup.deleteFromIndex(spark, cix, Seq(21L, 23L))
 
-      val s = Dedup.ingestBatchWithSrpIndex(
-        Seq((21L, vec(21)), (23L, vec(23))).toDF("id", "v"), "id", "v",
-        cix, s"$crashed/out", batchId = 2L, threshold = 0.99)
+      val s = Dedup.ingestBatch(
+        Seq((21L, vec(21)), (23L, vec(23))).toDF("id", "v"), "id",
+        Dedup.SrpVectors("v", 0.99), cix, s"$crashed/out", batchId = 2L)
       assert(!s.replayed && s.novelRows == 2L, s"$s")
       val vecIds = spark.read.parquet(s"$cix/vectors").select("id")
         .collect().map(_.getLong(0)).toSeq
       assert(vecIds.distinct.size == vecIds.size,
         s"replay re-appended vector rows over the torn tail: $vecIds")
 
-      Dedup.ingestBatchWithSrpIndex(
-        Seq((21L, vec(21)), (23L, vec(23))).toDF("id", "v"), "id", "v",
-        s"$clean/ix", s"$clean/out", batchId = 2L, threshold = 0.99)
-      Dedup.deleteFromSrpIndex(spark, s"$clean/ix", Seq(21L, 23L))
+      Dedup.ingestBatch(
+        Seq((21L, vec(21)), (23L, vec(23))).toDF("id", "v"), "id",
+        Dedup.SrpVectors("v", 0.99), s"$clean/ix", s"$clean/out", batchId = 2L)
+      Dedup.deleteFromIndex(spark, s"$clean/ix", Seq(21L, 23L))
       assert(contentOf(cix) == contentOf(s"$clean/ix"),
         "crashed+healed SRP index must be bit-identical to the " +
           "never-crashed run")
 
-      Dedup.compactSrpIndex(spark, cix)
+      Dedup.compactIndex(spark, cix)
       occupancyMatchesRecomputed(cix, "buckets", Seq("tbl", "bkt"))
-      val s3 = Dedup.ingestBatchWithSrpIndex(
-        Seq((30L, vec(30))).toDF("id", "v"), "id", "v", cix,
-        s"$crashed/out", batchId = 3L, threshold = 0.99)
+      val s3 = Dedup.ingestBatch(
+        Seq((30L, vec(30))).toDF("id", "v"), "id", Dedup.SrpVectors("v", 0.99),
+          cix,
+        s"$crashed/out", batchId = 3L)
       assert(s3.novelRows == 1L, s"$s3")
       occupancyMatchesRecomputed(cix, "buckets", Seq("tbl", "bkt"))
     } finally rmrf(base)

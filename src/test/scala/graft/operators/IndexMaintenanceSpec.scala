@@ -77,7 +77,7 @@ class IndexMaintenanceSpec extends SparkSpec {
 
       // a governed batch through the exactly-once path
       Dedup.initIngestLedger(spark, ix)
-      Dedup.ingestBatchWithIndex(docs(30L, 31L), "doc_id", "text", ix,
+      Dedup.ingestBatch(docs(30L, 31L), "doc_id", Dedup.MinHashText("text"), ix,
         out, batchId = 0L)
       occupancyMatchesRecomputed(ix, "bands", Seq("band", "bkey"))
 
@@ -88,14 +88,14 @@ class IndexMaintenanceSpec extends SparkSpec {
         .select($"doc_id".as("id"), $"shingles",
           size($"shingles").as("sz"), $"minhash")
         .write.mode("append").parquet(s"$ix/signatures")
-      Dedup.ingestBatchWithIndex(torn, "doc_id", "text", ix, out,
+      Dedup.ingestBatch(torn, "doc_id", Dedup.MinHashText("text"), ix, out,
         batchId = 1L)
       occupancyMatchesRecomputed(ix, "bands", Seq("band", "bkey"))
 
       // a replay of the committed batch appends no second delta (the
       // governed path's shard+wm-pruned presence check skips it)
       val occBefore = spark.read.parquet(s"$ix/occupancy").count()
-      Dedup.ingestBatchWithIndex(torn, "doc_id", "text", ix, out,
+      Dedup.ingestBatch(torn, "doc_id", Dedup.MinHashText("text"), ix, out,
         batchId = 1L)
       assert(spark.read.parquet(s"$ix/occupancy").count() == occBefore,
         "replay must not append a second occupancy delta")
@@ -103,7 +103,7 @@ class IndexMaintenanceSpec extends SparkSpec {
 
       // compaction re-files the deltas without changing the counts (and
       // its defense-in-depth dropDuplicates leaves unique rows unique)
-      Dedup.compactSignatureIndex(spark, ix, targetFileBytes = Long.MaxValue)
+      Dedup.compactIndex(spark, ix, targetFileBytes = Long.MaxValue)
       occupancyMatchesRecomputed(ix, "bands", Seq("band", "bkey"))
       val occRows = spark.read.parquet(s"$ix/occupancy")
       assert(occRows.count() == occRows.dropDuplicates().count(),
@@ -123,11 +123,11 @@ class IndexMaintenanceSpec extends SparkSpec {
       occupancyMatchesRecomputed(ix, "buckets", Seq("tbl", "bkt"))
       Dedup.appendSrpIndex(batch(30L, 31L, 32L), "vec_id", "v", ix)
       occupancyMatchesRecomputed(ix, "buckets", Seq("tbl", "bkt"))
-      Dedup.initSrpIngestLedger(spark, ix)
-      Dedup.ingestBatchWithSrpIndex(batch(40L, 41L), "vec_id", "v", ix,
-        out, batchId = 0L, threshold = 0.9)
+      Dedup.initIngestLedger(spark, ix)
+      Dedup.ingestBatch(batch(40L, 41L), "vec_id", Dedup.SrpVectors("v", 0.9),
+        ix, out, batchId = 0L)
       occupancyMatchesRecomputed(ix, "buckets", Seq("tbl", "bkt"))
-      Dedup.compactSrpIndex(spark, ix, targetFileBytes = Long.MaxValue)
+      Dedup.compactIndex(spark, ix, targetFileBytes = Long.MaxValue)
       occupancyMatchesRecomputed(ix, "buckets", Seq("tbl", "bkt"))
     } finally rmrf(base)
   }
@@ -159,7 +159,7 @@ class IndexMaintenanceSpec extends SparkSpec {
       // serialized mutators keep working: append after compaction after
       // append, each re-reading the epoch it claims
       Dedup.appendSignatureIndex(docs(10L, 11L), "doc_id", "text", ix)
-      Dedup.compactSignatureIndex(spark, ix, targetFileBytes = Long.MaxValue)
+      Dedup.compactIndex(spark, ix, targetFileBytes = Long.MaxValue)
       Dedup.appendSignatureIndex(docs(20L, 21L), "doc_id", "text", ix)
       val sigs = spark.read.parquet(s"$ix/signatures")
         .select("id").collect().map(_.getLong(0)).toSet
@@ -173,16 +173,16 @@ class IndexMaintenanceSpec extends SparkSpec {
     try {
       Dedup.writeSignatureIndex(docs(0L, 1L, 2L, 3L), "doc_id", "text", ix, p)
       Dedup.initIngestLedger(spark, ix)
-      val s0 = Dedup.ingestBatchWithIndex(docs(10L, 11L), "doc_id", "text",
-        ix, out, batchId = 0L)
+      val s0 = Dedup.ingestBatch(docs(10L, 11L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 0L)
       Dedup.appendIngestStats(spark, ix, s0)
-      val s1 = Dedup.ingestBatchWithIndex(docs(20L, 21L, 22L), "doc_id",
-        "text", ix, out, batchId = 1L)
+      val s1 = Dedup.ingestBatch(docs(20L, 21L, 22L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 1L)
       Dedup.appendIngestStats(spark, ix, s1)
       // the replay path: same batch id again (crash after ledger commit,
       // before the checkpoint advanced) — the stats append must be a no-op
-      val s1r = Dedup.ingestBatchWithIndex(docs(20L, 21L, 22L), "doc_id",
-        "text", ix, out, batchId = 1L)
+      val s1r = Dedup.ingestBatch(docs(20L, 21L, 22L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 1L)
       assert(s1r.replayed)
       Dedup.appendIngestStats(spark, ix, s1r)
 
@@ -296,11 +296,11 @@ class IndexMaintenanceSpec extends SparkSpec {
     try {
       Dedup.writeSignatureIndex(docs(0L to 9L: _*), "doc_id", "text", ix, p)
       // fold the build's one-file-per-task write, then: quiet index
-      Dedup.compactSignatureIndex(spark, ix)
+      Dedup.compactIndex(spark, ix)
       val baseline = sigFiles
       var preCalls = 0
       (1 to 3).foreach { _ =>
-        assert(Dedup.autoCompactSignatureIndex(spark, ix,
+        assert(Dedup.autoCompactIndex(spark, ix,
             preCompact = () => preCalls += 1).isEmpty,
           "an un-fragmented index must never churn")
       }
@@ -316,19 +316,19 @@ class IndexMaintenanceSpec extends SparkSpec {
         i += 2
       }
       val fragmented = sigFiles
-      val res = Dedup.autoCompactSignatureIndex(spark, ix)
+      val res = Dedup.autoCompactIndex(spark, ix)
       assert(res.nonEmpty, s"a fragmented index ($fragmented files) must " +
         "self-compact")
       assert(sigFiles < fragmented, "compaction must actually fold files")
       occupancyMatchesRecomputed(ix, "bands", Seq("band", "bkey"))
-      assert(Dedup.autoCompactSignatureIndex(spark, ix).isEmpty,
+      assert(Dedup.autoCompactIndex(spark, ix).isEmpty,
         "immediately after compaction the index is quiet again")
 
       // pending tombstones force reclamation regardless of file counts;
       // the preCompact hook (the streams' scrub pass) runs exactly once,
       // BEFORE the purge — the tombstones must still be pending inside it
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(0L))
-      assert(Dedup.autoCompactSignatureIndex(spark, ix, preCompact = () => {
+      Dedup.deleteFromIndex(spark, ix, Seq(0L))
+      assert(Dedup.autoCompactIndex(spark, ix, preCompact = () => {
           preCalls += 1
           assert(fs.exists(new org.apache.hadoop.fs.Path(s"$ix/tombstones")),
             "preCompact must run before the purge folds the tombstones")
@@ -336,7 +336,7 @@ class IndexMaintenanceSpec extends SparkSpec {
         "pending deletes must trigger physical reclamation")
       assert(preCalls == 1, "preCompact fires exactly once per compaction")
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$ix/tombstones")))
-      assert(Dedup.autoCompactSignatureIndex(spark, ix).isEmpty)
+      assert(Dedup.autoCompactIndex(spark, ix).isEmpty)
     } finally rmrf(base)
   }
 
@@ -356,9 +356,9 @@ class IndexMaintenanceSpec extends SparkSpec {
       val withDig = docs(0L to 19L: _*).withColumn("dg",
         sha2(col("text").cast("binary"), 256))
       Dedup.writeDigestIndex(withDig, "doc_id", "dg", ix)
-      Dedup.compactDigestIndex(spark, ix)
+      Dedup.compactIndex(spark, ix)
       (1 to 3).foreach { _ =>
-        assert(Dedup.autoCompactDigestIndex(spark, ix).isEmpty,
+        assert(Dedup.autoCompactIndex(spark, ix).isEmpty,
           "a freshly-compacted sharded table must read un-fragmented")
       }
       // genuine fragmentation: replicate one shard's data file until
@@ -384,10 +384,10 @@ class IndexMaintenanceSpec extends SparkSpec {
           spark.sparkContext.hadoopConfiguration)
         n += 1
       }
-      assert(Dedup.autoCompactDigestIndex(spark, ix).nonEmpty,
+      assert(Dedup.autoCompactIndex(spark, ix).nonEmpty,
         s"${files().size} files over $dirs dirs must trigger")
       assert(files().size < 8 * dirs, "compaction must fold the copies")
-      assert(Dedup.autoCompactDigestIndex(spark, ix).isEmpty,
+      assert(Dedup.autoCompactIndex(spark, ix).isEmpty,
         "quiet again immediately after the fold")
     } finally rmrf(base)
   }
@@ -470,9 +470,9 @@ class IndexMaintenanceSpec extends SparkSpec {
           .map(_.getLong(0)).toSet
       for ((ix, out) <- Seq((ixS, outS), (ixL, outL))) {
         Dedup.initIngestLedger(spark, ix)
-        Dedup.ingestBatchWithIndex(docs(20L, 21L, 22L), "doc_id", "text",
-          ix, out, batchId = 0L)
-        Dedup.ingestBatchWithIndex(docs(30L, 31L), "doc_id", "text",
+        Dedup.ingestBatch(docs(20L, 21L, 22L), "doc_id",
+          Dedup.MinHashText("text"), ix, out, batchId = 0L)
+        Dedup.ingestBatch(docs(30L, 31L), "doc_id", Dedup.MinHashText("text"),
           ix, out, batchId = 1L)
       }
       assert(novel(outL) == novel(outS),

@@ -371,7 +371,7 @@ class DedupSpec extends SparkSpec {
       // sharded floor: one file per occupied shard dir is already compact
       assert(filesBefore._1 > 1 && filesBefore._2 > shardDirs("bands"),
         s"appends must have fragmented the tables, got $filesBefore")
-      val stats = Dedup.compactSignatureIndex(spark, dir,
+      val stats = Dedup.compactIndex(spark, dir,
         targetFileBytes = Long.MaxValue)
       assert(stats("signatures")._1 == filesBefore._1)
       assert(stats("signatures")._2 == 1)
@@ -386,7 +386,7 @@ class DedupSpec extends SparkSpec {
       assert(pairs() == pairsBefore, "probe results diverged")
       // idempotent: already-compact tables are left alone
       val bandFloor = shardDirs("bands")
-      val again = Dedup.compactSignatureIndex(spark, dir,
+      val again = Dedup.compactIndex(spark, dir,
         targetFileBytes = Long.MaxValue)
       assert(again("signatures") == ((1, 1)) &&
         again("bands") == ((bandFloor, bandFloor)))

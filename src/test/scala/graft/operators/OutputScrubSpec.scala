@@ -60,16 +60,16 @@ class OutputScrubSpec extends SparkSpec {
     try {
       Dedup.writeSignatureIndex(docs(0L, 1L), "doc_id", "text", ix, p)
       Dedup.initIngestLedger(spark, ix)
-      Dedup.ingestBatchWithIndex(docs(10L, 11L), "doc_id", "text", ix, out,
-        batchId = 1L)
-      Dedup.ingestBatchWithIndex(docs(21L, 23L), "doc_id", "text", ix, out,
-        batchId = 2L)
+      Dedup.ingestBatch(docs(10L, 11L), "doc_id", Dedup.MinHashText("text"), ix,
+        out, batchId = 1L)
+      Dedup.ingestBatch(docs(21L, 23L), "doc_id", Dedup.MinHashText("text"), ix,
+        out, batchId = 2L)
       val batch1Files = filesOf(s"$out/batch_id=1")
 
       // scrub with nothing pending: zero work, zero rewrites
       assert(Dedup.scrubOutputs(spark, ix, out, "doc_id") == 0L)
 
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(21L))
+      Dedup.deleteFromIndex(spark, ix, Seq(21L))
       assert(Dedup.scrubOutputs(spark, ix, out, "doc_id") == 1L)
       assert(idsIn(s"$out/batch_id=2") == Set(23L),
         "the scrub must drop exactly the tombstoned rows")
@@ -84,14 +84,14 @@ class OutputScrubSpec extends SparkSpec {
       // governed REPLAY of the scrubbed batch overwrites the directory
       // from the raw batch — the in-batch scrub must re-remove the
       // tombstoned rows (replay-after-scrub ≡ scrub)
-      val r = Dedup.ingestBatchWithIndex(docs(21L, 23L), "doc_id", "text",
-        ix, out, batchId = 2L)
+      val r = Dedup.ingestBatch(docs(21L, 23L), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 2L)
       assert(r.replayed, s"$r")
       assert(idsIn(s"$out/batch_id=2") == Set(23L),
         "a replay must not resurrect scrubbed rows")
 
       // compaction folds the tombstones; the scrubbed outputs stand
-      Dedup.compactSignatureIndex(spark, ix)
+      Dedup.compactIndex(spark, ix)
       assert(idsIn(s"$out/batch_id=2") == Set(23L))
       assert(idsIn(s"$out/batch_id=1") == Set(10L, 11L))
 
@@ -100,10 +100,10 @@ class OutputScrubSpec extends SparkSpec {
       val ix2 = s"$base/ix2"; val out2 = s"$base/out2"
       Dedup.writeSignatureIndex(docs(0L, 1L), "doc_id", "text", ix2, p)
       Dedup.initIngestLedger(spark, ix2)
-      Dedup.ingestBatchWithIndex(docs(10L, 11L), "doc_id", "text", ix2,
-        out2, batchId = 1L)
-      Dedup.ingestBatchWithIndex(docs(23L), "doc_id", "text", ix2, out2,
-        batchId = 2L)
+      Dedup.ingestBatch(docs(10L, 11L), "doc_id", Dedup.MinHashText("text"),
+        ix2, out2, batchId = 1L)
+      Dedup.ingestBatch(docs(23L), "doc_id", Dedup.MinHashText("text"), ix2,
+        out2, batchId = 2L)
       assert(idsIn(s"$out/batch_id=1") == idsIn(s"$out2/batch_id=1") &&
         idsIn(s"$out/batch_id=2") == idsIn(s"$out2/batch_id=2"),
         "scrubbed outputs must equal the retained-corpus replay")
@@ -116,8 +116,8 @@ class OutputScrubSpec extends SparkSpec {
     try {
       Dedup.writeSignatureIndex(docs(0L), "doc_id", "text", ix, p)
       Dedup.initIngestLedger(spark, ix)
-      Dedup.ingestBatchWithIndex(docs(10L, 11L), "doc_id", "text", ix, out,
-        batchId = 1L)
+      Dedup.ingestBatch(docs(10L, 11L), "doc_id", Dedup.MinHashText("text"), ix,
+        out, batchId = 1L)
       val fs = fsOf(out)
 
       // crash state A: moved aside, temp not yet swapped in (live dir
@@ -133,7 +133,7 @@ class OutputScrubSpec extends SparkSpec {
       // crash state B: an orphaned temp copy — dropped, live untouched
       docs(10L, 11L).write
         .parquet(s"$out/__scrub_tmp_batch_id=1")
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(10L))
+      Dedup.deleteFromIndex(spark, ix, Seq(10L))
       assert(Dedup.scrubOutputs(spark, ix, out, "doc_id") == 1L)
       assert(idsIn(s"$out/batch_id=1") == Set(11L))
       assert(!fs.exists(
@@ -152,11 +152,11 @@ class OutputScrubSpec extends SparkSpec {
     try {
       Dedup.writeSrpIndex(Seq((0L, vec(0))).toDF("id", "v"), "id", "v", ix,
         dim = dim, tables = 4)
-      Dedup.initSrpIngestLedger(spark, ix)
-      Dedup.ingestBatchWithSrpIndex(
-        Seq((10L, vec(10)), (11L, vec(11))).toDF("id", "v"), "id", "v",
-        ix, out, batchId = 1L, threshold = 0.99)
-      Dedup.deleteFromSrpIndex(spark, ix, Seq(10L))
+      Dedup.initIngestLedger(spark, ix)
+      Dedup.ingestBatch(
+        Seq((10L, vec(10)), (11L, vec(11))).toDF("id", "v"), "id",
+        Dedup.SrpVectors("v", 0.99), ix, out, batchId = 1L)
+      Dedup.deleteFromIndex(spark, ix, Seq(10L))
       assert(Dedup.scrubOutputs(spark, ix, out, "id") == 1L)
       assert(spark.read.parquet(s"$out/batch_id=1").select("id").collect()
         .map(_.getLong(0)).toSet == Set(11L))

@@ -57,16 +57,17 @@ class CrossShardReconcileSpec extends SparkSpec {
     // shard's own screens (within-batch star + committed-index probe)
     // cannot see the other shard's index by construction
     val batch1 = df(11L -> famA(11), 13L -> uniq(13))
-    Dedup.ingestBatchWithIndex(df(10L -> famA(10), 12L -> uniq(12)),
-      "doc_id", "text", ix0, out0, batchId = 0L)
-    Dedup.ingestBatchWithIndex(batch1, "doc_id", "text", ix1, out1,
+    Dedup.ingestBatch(df(10L -> famA(10), 12L -> uniq(12)),
+      "doc_id", Dedup.MinHashText("text"), ix0, out0, batchId = 0L)
+    Dedup.ingestBatch(batch1, "doc_id", Dedup.MinHashText("text"), ix1, out1,
       batchId = 0L)
     assert(servedIds(out0) == Set(10L, 12L))
     assert(servedIds(out1) == Set(11L, 13L))
 
     val shards = Seq(Dedup.GovernedShardPaths(ix0, out0),
       Dedup.GovernedShardPaths(ix1, out1))
-    val st = Dedup.reconcileShardOutputs(spark, shards, "doc_id", "text")
+    val st = Dedup.reconcileShardOutputs(spark, shards, "doc_id",
+      Dedup.MinHashText("text"))
     assert(st.crossPairs == 1L, st)
     assert(st.dropped == 1L && st.droppedPerShard == Seq(0L, 1L), st)
     assert(st.scrubbedRows == 1L, st)
@@ -79,13 +80,14 @@ class CrossShardReconcileSpec extends SparkSpec {
       "tombstone must hide the dropped id from the index view")
 
     // idempotence: the dropped side is physically gone from the union
-    val st2 = Dedup.reconcileShardOutputs(spark, shards, "doc_id", "text")
+    val st2 = Dedup.reconcileShardOutputs(spark, shards, "doc_id",
+      Dedup.MinHashText("text"))
     assert(st2.dropped == 0L && st2.crossPairs == 0L, st2)
 
     // governed replay of the scrubbed batch must NOT resurrect 11:
     // the replay rewrites the output dir from the raw batch, then the
     // in-loop scrub re-applies the pending tombstones
-    val replay = Dedup.ingestBatchWithIndex(batch1, "doc_id", "text",
+    val replay = Dedup.ingestBatch(batch1, "doc_id", Dedup.MinHashText("text"),
       ix1, out1, batchId = 0L)
     assert(replay.replayed)
     assert(servedIds(out1) == Set(13L),
@@ -102,18 +104,19 @@ class CrossShardReconcileSpec extends SparkSpec {
     Dedup.writeSignatureIndex(df(1L -> uniq(1)), "doc_id", "text", ix1, p)
     Dedup.initIngestLedger(spark, ix0)
     Dedup.initIngestLedger(spark, ix1)
-    Dedup.ingestBatchWithIndex(df(10L -> famA(10)), "doc_id", "text",
+    Dedup.ingestBatch(df(10L -> famA(10)), "doc_id", Dedup.MinHashText("text"),
       ix0, out0, batchId = 0L)
-    Dedup.ingestBatchWithIndex(df(11L -> famA(11)), "doc_id", "text",
+    Dedup.ingestBatch(df(11L -> famA(11)), "doc_id", Dedup.MinHashText("text"),
       ix1, out1, batchId = 0L)
     // take down 10 in shard 0 — deliberately WITHOUT scrubbing, so its
     // row is still physically present in out0 (the scrub is a separate
     // pass); the union must see the RETAINED corpus, where 11 has no
     // smaller-id duplicate and must survive
-    Dedup.deleteFromSignatureIndex(spark, ix0, Seq(10L))
+    Dedup.deleteFromIndex(spark, ix0, Seq(10L))
     val st = Dedup.reconcileShardOutputs(spark,
       Seq(Dedup.GovernedShardPaths(ix0, out0),
-        Dedup.GovernedShardPaths(ix1, out1)), "doc_id", "text")
+        Dedup.GovernedShardPaths(ix1, out1)), "doc_id",
+          Dedup.MinHashText("text"))
     assert(st.crossPairs == 0L && st.dropped == 0L,
       s"a tombstoned row dropped its surviving duplicate: $st")
     assert(servedIds(out1) == Set(11L))
@@ -136,12 +139,12 @@ class CrossShardReconcileSpec extends SparkSpec {
       "vec_id", "embedding", ix0, dim = 8)
     Dedup.writeSrpIndex(edf(1L -> oneHot(1), 3L -> oneHot(3)),
       "vec_id", "embedding", ix1, dim = 8)
-    Dedup.initSrpIngestLedger(spark, ix0)
-    Dedup.initSrpIngestLedger(spark, ix1)
-    Dedup.ingestBatchWithSrpIndex(edf(10L -> shared, 12L -> oneHot(6)),
-      "vec_id", "embedding", ix0, out0, batchId = 0L, threshold = 0.9)
-    Dedup.ingestBatchWithSrpIndex(edf(11L -> shared, 13L -> oneHot(7)),
-      "vec_id", "embedding", ix1, out1, batchId = 0L, threshold = 0.9)
+    Dedup.initIngestLedger(spark, ix0)
+    Dedup.initIngestLedger(spark, ix1)
+    Dedup.ingestBatch(edf(10L -> shared, 12L -> oneHot(6)),
+      "vec_id", Dedup.SrpVectors("embedding", 0.9), ix0, out0, batchId = 0L)
+    Dedup.ingestBatch(edf(11L -> shared, 13L -> oneHot(7)),
+      "vec_id", Dedup.SrpVectors("embedding", 0.9), ix1, out1, batchId = 0L)
     def ids(out: String): Set[Long] =
       spark.read.parquet(out).select("vec_id").collect()
         .map(_.getLong(0)).toSet
@@ -150,8 +153,8 @@ class CrossShardReconcileSpec extends SparkSpec {
 
     val shards = Seq(Dedup.GovernedShardPaths(ix0, out0),
       Dedup.GovernedShardPaths(ix1, out1))
-    val st = Dedup.reconcileShardOutputsSrp(spark, shards,
-      "vec_id", "embedding", threshold = 0.9)
+    val st = Dedup.reconcileShardOutputs(spark, shards,
+      "vec_id", Dedup.SrpVectors("embedding", 0.9))
     assert(st.crossPairs == 1L && st.dropped == 1L &&
       st.droppedPerShard == Seq(0L, 1L), st)
     assert(ids(out0) == Set(10L, 12L))
@@ -159,8 +162,8 @@ class CrossShardReconcileSpec extends SparkSpec {
     assert(Dedup.readSrpIndex(spark, ix1).vectors
       .filter(col("id") === 11L).isEmpty)
     // idempotent
-    val st2 = Dedup.reconcileShardOutputsSrp(spark, shards,
-      "vec_id", "embedding", threshold = 0.9)
+    val st2 = Dedup.reconcileShardOutputs(spark, shards,
+      "vec_id", Dedup.SrpVectors("embedding", 0.9))
     assert(st2.dropped == 0L && st2.crossPairs == 0L, st2)
   }
 
@@ -175,23 +178,24 @@ class CrossShardReconcileSpec extends SparkSpec {
     // router: even doc_id -> shard 0, odd -> shard 1
     Dedup.writeDigestIndex(ddf(0L -> "h0", 2L -> "h2"), "doc_id", "dig", ix0)
     Dedup.writeDigestIndex(ddf(1L -> "h1", 3L -> "h3"), "doc_id", "dig", ix1)
-    Dedup.initDigestIngestLedger(spark, ix0)
-    Dedup.initDigestIngestLedger(spark, ix1)
+    Dedup.initIngestLedger(spark, ix0)
+    Dedup.initIngestLedger(spark, ix1)
     // "hX" is the planted CROSS-shard duplicate digest (docs 10 and 11);
     // 14/15 carry NULL digests in both shards — admitted by the exact
     // screen (unindexable) and they must never pair with each other.
     val batch1 = ddf(11L -> "hX", 13L -> "h13", 15L -> (null: String))
-    Dedup.ingestBatchWithDigestIndex(ddf(10L -> "hX", 12L -> "h12",
-      14L -> (null: String)), "doc_id", "dig", ix0, out0, batchId = 0L)
-    Dedup.ingestBatchWithDigestIndex(batch1, "doc_id", "dig", ix1, out1,
+    Dedup.ingestBatch(ddf(10L -> "hX", 12L -> "h12",
+      14L -> (null: String)), "doc_id", Dedup.Digests("dig"), ix0, out0,
+        batchId = 0L)
+    Dedup.ingestBatch(batch1, "doc_id", Dedup.Digests("dig"), ix1, out1,
       batchId = 0L)
     assert(servedIds(out0) == Set(10L, 12L, 14L))
     assert(servedIds(out1) == Set(11L, 13L, 15L))
 
     val shards = Seq(Dedup.GovernedShardPaths(ix0, out0),
       Dedup.GovernedShardPaths(ix1, out1))
-    val st = Dedup.reconcileShardOutputsDigest(spark, shards, "doc_id",
-      "dig")
+    val st = Dedup.reconcileShardOutputs(spark, shards, "doc_id",
+      Dedup.Digests("dig"))
     assert(st.crossPairs == 1L, st)
     assert(st.dropped == 1L && st.droppedPerShard == Seq(0L, 1L), st)
     // convergence: min-id representative 10 kept in shard 0; 11 gone
@@ -203,13 +207,13 @@ class CrossShardReconcileSpec extends SparkSpec {
       .filter(col("id") === 11L).isEmpty,
       "tombstone must hide the dropped id from the index view")
 
-    val st2 = Dedup.reconcileShardOutputsDigest(spark, shards, "doc_id",
-      "dig")
+    val st2 = Dedup.reconcileShardOutputs(spark, shards, "doc_id",
+      Dedup.Digests("dig"))
     assert(st2.dropped == 0L && st2.crossPairs == 0L, st2)
 
     // governed replay of the scrubbed batch must NOT resurrect 11
-    val replay = Dedup.ingestBatchWithDigestIndex(batch1, "doc_id",
-      "dig", ix1, out1, batchId = 0L)
+    val replay = Dedup.ingestBatch(batch1, "doc_id",
+      Dedup.Digests("dig"), ix1, out1, batchId = 0L)
     assert(replay.replayed)
     assert(servedIds(out1) == Set(13L, 15L),
       "replay resurrected a reconciled takedown")
@@ -233,7 +237,7 @@ class CrossShardReconcileSpec extends SparkSpec {
     Dedup.writeDigestIndex(ddf(0L -> "h0"), "doc_id", "dig", dIx0)
     Dedup.writeDigestIndex(ddf(1L -> "h1"), "doc_id", "dig", dIx1)
     Seq(mIx0, mIx1).foreach(Dedup.initIngestLedger(spark, _))
-    Seq(dIx0, dIx1).foreach(Dedup.initDigestIngestLedger(spark, _))
+    Seq(dIx0, dIx1).foreach(Dedup.initIngestLedger(spark, _))
 
     // planted: 10<->11 is a cross-shard NEAR-dup (distinct digests —
     // only the MinHash family may drop it); 20<->21 is a cross-shard
@@ -246,14 +250,14 @@ class CrossShardReconcileSpec extends SparkSpec {
       21L -> (uniq(21), "hX"))
     def mBatch(ids: Long*) = df(ids.map(i => i -> corpus(i)._1): _*)
     def dBatch(ids: Long*) = ddf(ids.map(i => i -> corpus(i)._2): _*)
-    Dedup.ingestBatchWithIndex(mBatch(10L, 12L, 20L), "doc_id", "text",
-      mIx0, mOut0, batchId = 0L)
-    Dedup.ingestBatchWithIndex(mBatch(11L, 13L, 21L), "doc_id", "text",
-      mIx1, mOut1, batchId = 0L)
-    Dedup.ingestBatchWithDigestIndex(dBatch(10L, 12L, 20L), "doc_id",
-      "dig", dIx0, dOut0, batchId = 0L)
-    Dedup.ingestBatchWithDigestIndex(dBatch(11L, 13L, 21L), "doc_id",
-      "dig", dIx1, dOut1, batchId = 0L)
+    Dedup.ingestBatch(mBatch(10L, 12L, 20L), "doc_id",
+      Dedup.MinHashText("text"), mIx0, mOut0, batchId = 0L)
+    Dedup.ingestBatch(mBatch(11L, 13L, 21L), "doc_id",
+      Dedup.MinHashText("text"), mIx1, mOut1, batchId = 0L)
+    Dedup.ingestBatch(dBatch(10L, 12L, 20L), "doc_id",
+      Dedup.Digests("dig"), dIx0, dOut0, batchId = 0L)
+    Dedup.ingestBatch(dBatch(11L, 13L, 21L), "doc_id",
+      Dedup.Digests("dig"), dIx1, dOut1, batchId = 0L)
     assert(servedIds(mOut1) == Set(11L, 13L, 21L))
     assert(servedIds(dOut1) == Set(11L, 13L, 21L))
 
@@ -261,9 +265,10 @@ class CrossShardReconcileSpec extends SparkSpec {
       Dedup.GovernedShardPaths(mIx1, mOut1))
     val dShards = Seq(Dedup.GovernedShardPaths(dIx0, dOut0),
       Dedup.GovernedShardPaths(dIx1, dOut1))
-    val mSt = Dedup.reconcileShardOutputs(spark, mShards, "doc_id", "text")
-    val dSt = Dedup.reconcileShardOutputsDigest(spark, dShards, "doc_id",
-      "dig")
+    val mSt = Dedup.reconcileShardOutputs(spark, mShards, "doc_id",
+      Dedup.MinHashText("text"))
+    val dSt = Dedup.reconcileShardOutputs(spark, dShards, "doc_id",
+      Dedup.Digests("dig"))
     // each family converged exactly its own duplicate kind
     assert(mSt.crossPairs == 1L && mSt.dropped == 1L, mSt)
     assert(dSt.crossPairs == 1L && dSt.dropped == 1L, dSt)
@@ -283,9 +288,10 @@ class CrossShardReconcileSpec extends SparkSpec {
       "the MinHash family's drop leaked into the digest index")
     assert(dView.filter(col("id") === 21L).isEmpty)
     // both passes idempotent against the composed state
-    val mSt2 = Dedup.reconcileShardOutputs(spark, mShards, "doc_id", "text")
-    val dSt2 = Dedup.reconcileShardOutputsDigest(spark, dShards,
-      "doc_id", "dig")
+    val mSt2 = Dedup.reconcileShardOutputs(spark, mShards, "doc_id",
+      Dedup.MinHashText("text"))
+    val dSt2 = Dedup.reconcileShardOutputs(spark, dShards,
+      "doc_id", Dedup.Digests("dig"))
     assert(mSt2.dropped == 0L && mSt2.crossPairs == 0L, mSt2)
     assert(dSt2.dropped == 0L && dSt2.crossPairs == 0L, dSt2)
   }
@@ -301,7 +307,8 @@ class CrossShardReconcileSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       Dedup.reconcileShardOutputs(spark,
         Seq(Dedup.GovernedShardPaths(ixA, outA),
-          Dedup.GovernedShardPaths(ixB, outB)), "doc_id", "text")
+          Dedup.GovernedShardPaths(ixB, outB)), "doc_id",
+            Dedup.MinHashText("text"))
     }
     assert(e.getMessage.contains("MinHashParams"))
 
@@ -310,14 +317,15 @@ class CrossShardReconcileSpec extends SparkSpec {
     Dedup.writeSignatureIndex(df(1L -> uniq(1)), "doc_id", "text", ixC, p)
     Dedup.initIngestLedger(spark, ixA)
     Dedup.initIngestLedger(spark, ixC)
-    Dedup.ingestBatchWithIndex(df(5L -> uniq(5)), "doc_id", "text",
+    Dedup.ingestBatch(df(5L -> uniq(5)), "doc_id", Dedup.MinHashText("text"),
       ixA, outA, batchId = 0L)
-    Dedup.ingestBatchWithIndex(df(5L -> uniq(50)), "doc_id", "text",
+    Dedup.ingestBatch(df(5L -> uniq(50)), "doc_id", Dedup.MinHashText("text"),
       ixC, outC, batchId = 0L)
     val e2 = intercept[IllegalArgumentException] {
       Dedup.reconcileShardOutputs(spark,
         Seq(Dedup.GovernedShardPaths(ixA, outA),
-          Dedup.GovernedShardPaths(ixC, outC)), "doc_id", "text")
+          Dedup.GovernedShardPaths(ixC, outC)), "doc_id",
+            Dedup.MinHashText("text"))
     }
     assert(e2.getMessage.contains("duplicate"))
   }
@@ -329,7 +337,8 @@ class CrossShardReconcileSpec extends SparkSpec {
     Dedup.writeSignatureIndex(df(1L -> uniq(1)), "doc_id", "text", ix1, p)
     val st = Dedup.reconcileShardOutputs(spark,
       Seq(Dedup.GovernedShardPaths(ix0, s"$base/out0"),
-        Dedup.GovernedShardPaths(ix1, s"$base/out1")), "doc_id", "text")
+        Dedup.GovernedShardPaths(ix1, s"$base/out1")), "doc_id",
+          Dedup.MinHashText("text"))
     assert(st == Dedup.ShardReconcileStats(0L, 0L, Seq(0L, 0L), 0L))
   }
 }

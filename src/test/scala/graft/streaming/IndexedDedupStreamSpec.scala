@@ -10,8 +10,8 @@ import graft.SparkSpec
 import graft.operators.Dedup
 
 /** The streaming incremental-dedup loop over the persisted MinHash
-  * signature index ([[StreamOps.indexedDedupStream]] /
-  * [[Dedup.ingestBatchWithIndex]]): end-to-end exactly-once across
+  * signature index ([[StreamOps.governedDedupStream]] /
+  * [[Dedup.ingestBatch]] with `MinHashText`): end-to-end exactly-once across
   * restarts, ledger-governed replay idempotence, and torn-append
   * self-healing — the crash contracts the operator's docs state,
   * asserted rather than assumed.
@@ -81,8 +81,8 @@ class IndexedDedupStreamSpec extends SparkSpec {
       Dedup.writeSignatureIndex(corpus, "doc_id", "text", ix, p)
 
       batch1.coalesce(1).write.mode("append").parquet(in)
-      val q1 = StreamOps.indexedDedupStream(spark, in, schema, "doc_id",
-        "text", ix, out, cp)
+      val q1 = StreamOps.governedDedupStream(spark, in, schema, "doc_id",
+        Dedup.MinHashText("text"), ix, out, cp)
       q1.awaitTermination(120000)
 
       assert(outIds(out) == Set(11L, 13L),
@@ -91,8 +91,8 @@ class IndexedDedupStreamSpec extends SparkSpec {
 
       // second drop through a RESTARTED stream on the same checkpoint
       batch2.coalesce(1).write.mode("append").parquet(in)
-      val q2 = StreamOps.indexedDedupStream(spark, in, schema, "doc_id",
-        "text", ix, out, cp)
+      val q2 = StreamOps.governedDedupStream(spark, in, schema, "doc_id",
+        Dedup.MinHashText("text"), ix, out, cp)
       q2.awaitTermination(120000)
 
       assert(outIds(out) == Set(11L, 13L, 21L),
@@ -128,17 +128,17 @@ class IndexedDedupStreamSpec extends SparkSpec {
       Dedup.writeSignatureIndex(corpus, "doc_id", "text", ix, p)
       Seq(100L -> uniq(100), 101L -> uniq(101)).toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(in)
-      StreamOps.indexedDedupStream(spark, in, schema, "doc_id", "text",
-        ix, out, cp).awaitTermination(120000)
+      StreamOps.governedDedupStream(spark, in, schema, "doc_id",
+        Dedup.MinHashText("text"), ix, out, cp).awaitTermination(120000)
       assert(outIds(out) == Set(100L, 101L))
 
       // takedown while the stream is down; the stream never compacts, so
       // only the pending-set scrub gate can propagate it
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(100L))
+      Dedup.deleteFromIndex(spark, ix, Seq(100L))
       Seq(200L -> uniq(200)).toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(in)
-      StreamOps.indexedDedupStream(spark, in, schema, "doc_id", "text",
-        ix, out, cp).awaitTermination(120000)
+      StreamOps.governedDedupStream(spark, in, schema, "doc_id",
+        Dedup.MinHashText("text"), ix, out, cp).awaitTermination(120000)
       assert(outIds(out) == Set(101L, 200L),
         "the takedown'd doc must leave the SERVED corpus on the next " +
           "committed batch, not wait for a compaction")
@@ -161,7 +161,8 @@ class IndexedDedupStreamSpec extends SparkSpec {
       // batch 0: good (novel unique docs)
       Seq(100L -> uniq(100), 101L -> uniq(101)).toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(in)
-      StreamOps.indexedDedupStream(spark, in, schema, "doc_id", "text",
+      StreamOps.governedDedupStream(spark, in, schema, "doc_id",
+        Dedup.MinHashText("text"),
         ix, out, cp, quarantine = true).awaitTermination(120000)
       assert(outIds(out) == Set(100L, 101L))
 
@@ -169,7 +170,8 @@ class IndexedDedupStreamSpec extends SparkSpec {
       // — without quarantine this kills the stream; with it, diverted
       Seq(50L -> uniq(50)).toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(in)
-      StreamOps.indexedDedupStream(spark, in, schema, "doc_id", "text",
+      StreamOps.governedDedupStream(spark, in, schema, "doc_id",
+        Dedup.MinHashText("text"),
         ix, out, cp, quarantine = true).awaitTermination(120000)
       assert(spark.read.parquet(s"$ix/quarantine/batch_id=1").count() == 1L,
         "the bad batch must land in the quarantine directory")
@@ -182,7 +184,8 @@ class IndexedDedupStreamSpec extends SparkSpec {
       // unmoved watermark
       Seq(200L -> uniq(200)).toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(in)
-      StreamOps.indexedDedupStream(spark, in, schema, "doc_id", "text",
+      StreamOps.governedDedupStream(spark, in, schema, "doc_id",
+        Dedup.MinHashText("text"),
         ix, out, cp, quarantine = true).awaitTermination(120000)
       assert(outIds(out) == Set(100L, 101L, 200L),
         "the stream must continue normally after a quarantined batch")
@@ -204,16 +207,16 @@ class IndexedDedupStreamSpec extends SparkSpec {
     try {
       Dedup.writeSignatureIndex(corpus, "doc_id", "text", ix, p)
       Dedup.initIngestLedger(spark, ix)
-      val s1 = Dedup.ingestBatchWithIndex(batch1, "doc_id", "text", ix,
-        out, batchId = 7L)
+      val s1 = Dedup.ingestBatch(batch1, "doc_id", Dedup.MinHashText("text"),
+        ix, out, batchId = 7L)
       assert(!s1.replayed && s1.novelRows == 2L && s1.watermarkBefore == 3L
         && s1.watermarkAfter == 13L)
       val (sig1, band1, out1) = (sigSet(ix), bandSet(ix), outIds(out))
 
       // the replay: same batch id, same data — e.g. a crash after the
       // ledger commit but before the stream checkpoint advanced
-      val s2 = Dedup.ingestBatchWithIndex(batch1, "doc_id", "text", ix,
-        out, batchId = 7L)
+      val s2 = Dedup.ingestBatch(batch1, "doc_id", Dedup.MinHashText("text"),
+        ix, out, batchId = 7L)
       assert(s2.replayed, "second run must recognize the ledgered batch")
       assert(s2.novelRows == s1.novelRows &&
         s2.watermarkBefore == s1.watermarkBefore)
@@ -235,7 +238,7 @@ class IndexedDedupStreamSpec extends SparkSpec {
         Dedup.writeSignatureIndex(corpus, "doc_id", "text", d, p)
         Dedup.initIngestLedger(spark, d)
       }
-      Dedup.ingestBatchWithIndex(batch1, "doc_id", "text", ix,
+      Dedup.ingestBatch(batch1, "doc_id", Dedup.MinHashText("text"), ix,
         s"$base/outClean", batchId = 0L)
 
       // the crash: the attempt computed novel = {11, 13}, committed the
@@ -252,8 +255,8 @@ class IndexedDedupStreamSpec extends SparkSpec {
 
       // replay through the governed path: heals the bands, fixes the
       // output, commits the ledger
-      val s = Dedup.ingestBatchWithIndex(batch1, "doc_id", "text", ixT,
-        out, batchId = 0L)
+      val s = Dedup.ingestBatch(batch1, "doc_id", Dedup.MinHashText("text"),
+        ixT, out, batchId = 0L)
       assert(!s.replayed, "no ledger row landed, so this is not a replay")
       assert(s.novelRows == 2L)
       assert(sigSet(ixT) == sigSet(ix),
@@ -286,9 +289,9 @@ class IndexedDedupStreamSpec extends SparkSpec {
         Dedup.writeSignatureIndex(corpus, "doc_id", "text", d, p)
         Dedup.initIngestLedger(spark, d)
       }
-      Dedup.ingestBatchWithIndex(batch1, "doc_id", "text", ix,
+      Dedup.ingestBatch(batch1, "doc_id", Dedup.MinHashText("text"), ix,
         s"$base/outClean", batchId = 0L)
-      Dedup.ingestBatchWithIndex(batch1, "doc_id", "text", ixS,
+      Dedup.ingestBatch(batch1, "doc_id", Dedup.MinHashText("text"), ixS,
         s"$base/outScratch", batchId = 0L)
 
       // the crash: the attempt computed novel = {11, 13}, the BAND lane
@@ -303,8 +306,8 @@ class IndexedDedupStreamSpec extends SparkSpec {
       // replay through the governed path: must see the band tail (the
       // signature tail is empty), heal the bands append (no duplicates),
       // run the signature append in full, and commit exactly once
-      val s = Dedup.ingestBatchWithIndex(batch1, "doc_id", "text", ixT,
-        out, batchId = 0L)
+      val s = Dedup.ingestBatch(batch1, "doc_id", Dedup.MinHashText("text"),
+        ixT, out, batchId = 0L)
       assert(!s.replayed, "no ledger row landed, so this is not a replay")
       assert(s.novelRows == 2L)
       assert(sigSet(ixT) == sigSet(ix),
@@ -350,7 +353,7 @@ class IndexedDedupStreamSpec extends SparkSpec {
           "watermark_after" -> graft.sources.MetaIO.MLong,
           "novel_rows" -> graft.sources.MetaIO.MLong), Seq())
       val e = intercept[IllegalArgumentException] {
-        Dedup.ingestBatchWithIndex(batch1, "doc_id", "text", ix,
+        Dedup.ingestBatch(batch1, "doc_id", Dedup.MinHashText("text"), ix,
           s"$base/out", batchId = 0L)
       }
       assert(e.getMessage.contains("zero rows"),
@@ -371,24 +374,25 @@ class IndexedDedupStreamSpec extends SparkSpec {
       (0 until 3).foreach { i =>
         val b = Seq(100L + 10 * i -> uniq(100 + 10 * i),
           101L + 10 * i -> uniq(101 + 10 * i)).toDF("doc_id", "text")
-        Dedup.ingestBatchWithIndex(b, "doc_id", "text", ix, out, i.toLong)
+        Dedup.ingestBatch(b, "doc_id", Dedup.MinHashText("text"), ix, out,
+          i.toLong)
       }
       val before = ledgerRows()
       assert(before.length == 4) // bootstrap + 3 committed batches
-      val stats = Dedup.compactSignatureIndex(spark, ix)
+      val stats = Dedup.compactIndex(spark, ix)
       val (lb, la) = stats("ingest_ledger")
       assert(lb >= 4 && la < lb,
         s"ledger must fold its per-batch files: $lb -> $la")
       assert(ledgerRows() == before, "compaction changed ledger content")
       // governance intact: a replay is still recognized against its own
       // watermark, and a fresh batch still commits
-      val s2 = Dedup.ingestBatchWithIndex(
+      val s2 = Dedup.ingestBatch(
         Seq(110L -> uniq(110), 111L -> uniq(111)).toDF("doc_id", "text"),
-        "doc_id", "text", ix, out, 1L)
+        "doc_id", Dedup.MinHashText("text"), ix, out, 1L)
       assert(s2.replayed && s2.watermarkBefore == before(2)._2)
-      val s3 = Dedup.ingestBatchWithIndex(
+      val s3 = Dedup.ingestBatch(
         Seq(130L -> uniq(130)).toDF("doc_id", "text"),
-        "doc_id", "text", ix, out, 3L)
+        "doc_id", Dedup.MinHashText("text"), ix, out, 3L)
       assert(!s3.replayed && s3.watermarkBefore == 121L &&
         s3.watermarkAfter == 130L)
     } finally rmrf(base)
@@ -415,10 +419,10 @@ class IndexedDedupStreamSpec extends SparkSpec {
       // the measured trigger, so compaction fires after EVERY committed
       // batch — the most adversarial cadence. The deleted corpus docs
       // (3 and 4) share no family with either batch.
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(3L))
+      Dedup.deleteFromIndex(spark, ix, Seq(3L))
       batch1.coalesce(1).write.mode("append").parquet(in)
-      val q1 = StreamOps.indexedDedupStream(spark, in, schema, "doc_id",
-        "text", ix, out, cp, autoCompact = true)
+      val q1 = StreamOps.governedDedupStream(spark, in, schema, "doc_id",
+        Dedup.MinHashText("text"), ix, out, cp, autoCompact = true)
       q1.awaitTermination(120000)
       assert(Dedup.listTombstoneFiles(spark, ix).isEmpty,
         "the pending takedown did not trigger the in-loop compaction")
@@ -426,10 +430,10 @@ class IndexedDedupStreamSpec extends SparkSpec {
 
       // batch 1 through a RESTARTED stream on the same checkpoint — the
       // restart must read the POST-compaction index generation cleanly
-      Dedup.deleteFromSignatureIndex(spark, ix, Seq(4L))
+      Dedup.deleteFromIndex(spark, ix, Seq(4L))
       batch2.coalesce(1).write.mode("append").parquet(in)
-      val q2 = StreamOps.indexedDedupStream(spark, in, schema, "doc_id",
-        "text", ix, out, cp, autoCompact = true)
+      val q2 = StreamOps.governedDedupStream(spark, in, schema, "doc_id",
+        Dedup.MinHashText("text"), ix, out, cp, autoCompact = true)
       q2.awaitTermination(120000)
       assert(Dedup.listTombstoneFiles(spark, ix).isEmpty,
         "the second takedown did not trigger the in-loop compaction")
@@ -455,7 +459,7 @@ class IndexedDedupStreamSpec extends SparkSpec {
         s"file folding ineffective: $sigFilesAfterCpt -> ${files("signatures")}")
       // governance intact: replaying the last committed batch by hand is
       // recognized and is a no-op
-      val s = Dedup.ingestBatchWithIndex(batch2, "doc_id", "text", ix,
+      val s = Dedup.ingestBatch(batch2, "doc_id", Dedup.MinHashText("text"), ix,
         out, batchId = 1L)
       assert(s.replayed, "replay not recognized after in-loop compaction")
       assert(outIds(out) == Set(11L, 13L, 21L))
@@ -470,7 +474,7 @@ class IndexedDedupStreamSpec extends SparkSpec {
       Dedup.initIngestLedger(spark, ix)
       val (sig0, band0) = (sigSet(ix), bandSet(ix))
       val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-      val s = Dedup.ingestBatchWithIndex(empty, "doc_id", "text", ix,
+      val s = Dedup.ingestBatch(empty, "doc_id", Dedup.MinHashText("text"), ix,
         out, batchId = 0L)
       assert(!s.replayed && s.batchRows == 0L && s.novelRows == 0L)
       assert(s.watermarkBefore == s.watermarkAfter,
@@ -478,12 +482,12 @@ class IndexedDedupStreamSpec extends SparkSpec {
       assert(sigSet(ix) == sig0 && bandSet(ix) == band0,
         "empty batch appended index rows")
       // the commit marker landed: a follow-up batch sees batch 0 as done
-      val s2 = Dedup.ingestBatchWithIndex(
-        Seq(50L -> uniq(50)).toDF("doc_id", "text"), "doc_id", "text",
-        ix, out, batchId = 1L)
+      val s2 = Dedup.ingestBatch(
+        Seq(50L -> uniq(50)).toDF("doc_id", "text"), "doc_id",
+        Dedup.MinHashText("text"), ix, out, batchId = 1L)
       assert(!s2.replayed && s2.novelRows == 1L)
       // and replaying the empty batch is recognized
-      val s3 = Dedup.ingestBatchWithIndex(empty, "doc_id", "text", ix,
+      val s3 = Dedup.ingestBatch(empty, "doc_id", Dedup.MinHashText("text"), ix,
         out, batchId = 0L)
       assert(s3.replayed)
     } finally rmrf(base)
@@ -497,14 +501,14 @@ class IndexedDedupStreamSpec extends SparkSpec {
       Dedup.initIngestLedger(spark, ix)
       val bad = Seq("not-a-number" -> uniq(60)).toDF("doc_id", "text")
       val e = intercept[IllegalArgumentException] {
-        Dedup.ingestBatchWithIndex(bad, "doc_id", "text", ix,
+        Dedup.ingestBatch(bad, "doc_id", Dedup.MinHashText("text"), ix,
           s"$base/out", batchId = 0L)
       }
       assert(e.getMessage.contains("non-long-castable"))
       // NULL ids are equally non-castable — loud failure, not an NPE
       val withNull = Seq((null: String) -> uniq(61)).toDF("doc_id", "text")
       val e2 = intercept[IllegalArgumentException] {
-        Dedup.ingestBatchWithIndex(withNull, "doc_id", "text", ix,
+        Dedup.ingestBatch(withNull, "doc_id", Dedup.MinHashText("text"), ix,
           s"$base/out", batchId = 0L)
       }
       assert(e2.getMessage.contains("non-long-castable"))
@@ -521,7 +525,7 @@ class IndexedDedupStreamSpec extends SparkSpec {
       assert(spark.read.parquet(s"$ix/ingest_ledger").count() == 1L)
       val stale = Seq(2L -> uniq(99)).toDF("doc_id", "text")
       val e = intercept[IllegalArgumentException] {
-        Dedup.ingestBatchWithIndex(stale, "doc_id", "text", ix,
+        Dedup.ingestBatch(stale, "doc_id", Dedup.MinHashText("text"), ix,
           s"$base/out", batchId = 0L)
       }
       assert(e.getMessage.contains("monotone"))
@@ -546,8 +550,8 @@ class IndexedDedupStreamSpec extends SparkSpec {
       val ledger = spark.read.parquet(s"$ix/ingest_ledger").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       assert(ledger.toSeq == Seq((-1L, 3L, 3L, 0L)))
-      val s = Dedup.ingestBatchWithIndex(batch1, "doc_id", "text", ix, out,
-        batchId = 0L)
+      val s = Dedup.ingestBatch(batch1, "doc_id", Dedup.MinHashText("text"), ix,
+        out, batchId = 0L)
       assert(!s.replayed && s.novelRows == 2L && s.watermarkAfter == 13L)
     } finally rmrf(base)
   }

@@ -8,7 +8,7 @@ import graft.SparkSpec
 import graft.operators.Dedup
 
 /** Governed streaming EXACT-dedup over the persisted digest index
-  * (`StreamOps.indexedDigestDedupStream`): exactly-once across
+  * (`StreamOps.governedDedupStream` with `Digests`): exactly-once across
   * restarts, the committed index equals a rebuild from corpus ∪
   * accepted docs, and a replayed stream changes nothing.
   */
@@ -27,8 +27,8 @@ class IndexedDigestDedupStreamSpec extends SparkSpec {
     // file 1: two novel digests + one corpus dup + one within-batch dup
     objs((100L, "e1"), (101L, "e2"), (102L, "d5"), (103L, "e1"))
       .coalesce(1).write.parquet(in)
-    val q = StreamOps.indexedDigestDedupStream(spark, in,
-      objs((0L, "x")).schema, "id", "dig", ix, out, cp)
+    val q = StreamOps.governedDedupStream(spark, in,
+      objs((0L, "x")).schema, "id", Dedup.Digests("dig"), ix, out, cp)
     q.processAllAvailable(); q.awaitTermination(120000)
     def served() = spark.read.parquet(out).drop("batch_id")
       .select("id").as[Long].collect().toSet
@@ -37,8 +37,8 @@ class IndexedDigestDedupStreamSpec extends SparkSpec {
     // file 2 arrives: dups vs the GROWN committed index drop
     objs((200L, "e2"), (201L, "f1")).coalesce(1)
       .write.mode("append").parquet(in)
-    val q2 = StreamOps.indexedDigestDedupStream(spark, in,
-      objs((0L, "x")).schema, "id", "dig", ix, out, cp)
+    val q2 = StreamOps.governedDedupStream(spark, in,
+      objs((0L, "x")).schema, "id", Dedup.Digests("dig"), ix, out, cp)
     q2.processAllAvailable(); q2.awaitTermination(120000)
     assert(served() == Set(100L, 101L, 201L))
 
@@ -51,8 +51,8 @@ class IndexedDigestDedupStreamSpec extends SparkSpec {
     assert(rows(ix) == rows(reb))
 
     // restart with no new files: nothing recomputes, nothing changes
-    val q3 = StreamOps.indexedDigestDedupStream(spark, in,
-      objs((0L, "x")).schema, "id", "dig", ix, out, cp)
+    val q3 = StreamOps.governedDedupStream(spark, in,
+      objs((0L, "x")).schema, "id", Dedup.Digests("dig"), ix, out, cp)
     q3.processAllAvailable(); q3.awaitTermination(120000)
     assert(served() == Set(100L, 101L, 201L))
     assert(rows(ix) == rows(reb))
@@ -64,14 +64,14 @@ class IndexedDigestDedupStreamSpec extends SparkSpec {
     val cp = s"$base/cp"
     Dedup.writeDigestIndex(objs((0L, "d0"), (1L, "d1")), "id", "dig", ix)
     objs((100L, "e1"), (101L, "e2")).coalesce(1).write.parquet(in)
-    val q = StreamOps.indexedDigestDedupStream(spark, in,
-      objs((0L, "x")).schema, "id", "dig", ix, out, cp)
+    val q = StreamOps.governedDedupStream(spark, in,
+      objs((0L, "x")).schema, "id", Dedup.Digests("dig"), ix, out, cp)
     q.processAllAvailable(); q.awaitTermination(120000)
     // takedown 100, then commit one more batch — the scrub gate fires
-    Dedup.deleteFromDigestIndex(spark, ix, Seq(100L))
+    Dedup.deleteFromIndex(spark, ix, Seq(100L))
     objs((200L, "e3")).coalesce(1).write.mode("append").parquet(in)
-    val q2 = StreamOps.indexedDigestDedupStream(spark, in,
-      objs((0L, "x")).schema, "id", "dig", ix, out, cp)
+    val q2 = StreamOps.governedDedupStream(spark, in,
+      objs((0L, "x")).schema, "id", Dedup.Digests("dig"), ix, out, cp)
     q2.processAllAvailable(); q2.awaitTermination(120000)
     val served = spark.read.parquet(out).drop("batch_id")
       .select("id").as[Long].collect().toSet

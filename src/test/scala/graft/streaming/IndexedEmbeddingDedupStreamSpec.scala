@@ -10,8 +10,8 @@ import graft.SparkSpec
 import graft.operators.Dedup
 
 /** The embedding twin of `IndexedDedupStreamSpec`: the governed ingest
-  * loop over the persisted SRP index ([[StreamOps.indexedEmbeddingDedupStream]]
-  * / [[Dedup.ingestBatchWithSrpIndex]]). The ledger machinery is shared
+  * loop over the persisted SRP index ([[StreamOps.governedDedupStream]]
+  * / [[Dedup.ingestBatch]] with `SrpVectors`). The ledger machinery is shared
   * with the MinHash loop (proven there); these specs assert the
   * embedding-family semantics ride it correctly: exactly-once across a
   * streamed run, bit-identical replays, and torn-append self-healing on
@@ -75,14 +75,14 @@ class IndexedEmbeddingDedupStreamSpec extends SparkSpec {
       Dedup.writeSrpIndex(corpus, "vec_id", "embedding", ix, dim)
 
       batch1.coalesce(1).write.mode("append").parquet(in)
-      val q1 = StreamOps.indexedEmbeddingDedupStream(spark, in, schema,
-        "vec_id", "embedding", ix, out, cp, threshold = 0.4)
+      val q1 = StreamOps.governedDedupStream(spark, in, schema,
+        "vec_id", Dedup.SrpVectors("embedding", 0.4), ix, out, cp)
       q1.awaitTermination(120000)
       assert(outIds(out) == Set(11L, 13L))
 
       batch2.coalesce(1).write.mode("append").parquet(in)
-      val q2 = StreamOps.indexedEmbeddingDedupStream(spark, in, schema,
-        "vec_id", "embedding", ix, out, cp, threshold = 0.4)
+      val q2 = StreamOps.governedDedupStream(spark, in, schema,
+        "vec_id", Dedup.SrpVectors("embedding", 0.4), ix, out, cp)
       q2.awaitTermination(120000)
       assert(outIds(out) == Set(11L, 13L, 21L),
         "batch 2 must drop the dup of batch 1's survivor and the corpus " +
@@ -105,14 +105,14 @@ class IndexedEmbeddingDedupStreamSpec extends SparkSpec {
     val out = s"$base/out"; val ix = s"$base/ix"
     try {
       Dedup.writeSrpIndex(corpus, "vec_id", "embedding", ix, dim)
-      Dedup.initSrpIngestLedger(spark, ix)
-      val s1 = Dedup.ingestBatchWithSrpIndex(batch1, "vec_id", "embedding",
-        ix, out, batchId = 3L, threshold = 0.4)
+      Dedup.initIngestLedger(spark, ix)
+      val s1 = Dedup.ingestBatch(batch1, "vec_id",
+        Dedup.SrpVectors("embedding", 0.4), ix, out, batchId = 3L)
       assert(!s1.replayed && s1.novelRows == 2L && s1.watermarkBefore == 3L
         && s1.watermarkAfter == 13L)
       val (v1, b1, o1) = (vecSet(ix), bktSet(ix), outIds(out))
-      val s2 = Dedup.ingestBatchWithSrpIndex(batch1, "vec_id", "embedding",
-        ix, out, batchId = 3L, threshold = 0.4)
+      val s2 = Dedup.ingestBatch(batch1, "vec_id",
+        Dedup.SrpVectors("embedding", 0.4), ix, out, batchId = 3L)
       assert(s2.replayed && s2.watermarkBefore == s1.watermarkBefore)
       assert(vecSet(ix) == v1 && bktSet(ix) == b1 && outIds(out) == o1)
       assert(spark.read.parquet(s"$ix/ingest_ledger")
@@ -126,10 +126,10 @@ class IndexedEmbeddingDedupStreamSpec extends SparkSpec {
     try {
       Seq(ix, ixT).foreach { d =>
         Dedup.writeSrpIndex(corpus, "vec_id", "embedding", d, dim)
-        Dedup.initSrpIngestLedger(spark, d)
+        Dedup.initIngestLedger(spark, d)
       }
-      Dedup.ingestBatchWithSrpIndex(batch1, "vec_id", "embedding", ix,
-        s"$base/outClean", batchId = 0L, threshold = 0.4)
+      Dedup.ingestBatch(batch1, "vec_id", Dedup.SrpVectors("embedding", 0.4),
+        ix, s"$base/outClean", batchId = 0L)
 
       // the crash: novel = {11, 13} vectors committed, buckets + ledger
       // lost; a partial output from the same attempt is left behind
@@ -140,8 +140,8 @@ class IndexedEmbeddingDedupStreamSpec extends SparkSpec {
       batch1.filter($"vec_id" === 13L)
         .write.mode("overwrite").parquet(s"$out/batch_id=0")
 
-      val s = Dedup.ingestBatchWithSrpIndex(batch1, "vec_id", "embedding",
-        ixT, out, batchId = 0L, threshold = 0.4)
+      val s = Dedup.ingestBatch(batch1, "vec_id",
+        Dedup.SrpVectors("embedding", 0.4), ixT, out, batchId = 0L)
       assert(!s.replayed && s.novelRows == 2L)
       assert(vecSet(ixT) == vecSet(ix), "healed vectors diverge")
       assert(bktSet(ixT) == bktSet(ix), "healed buckets diverge")

@@ -93,12 +93,12 @@ class ShardedGovernedIngestSpec extends SparkSpec {
       // batch 1, both shards CONCURRENTLY: 12 near-dups shard 0's own
       // family (screened); 13 carries shard-0 family text but lives in
       // shard 1 — the documented cross-shard miss (stays novel there)
-      val f0 = Future(Dedup.ingestBatchWithIndex(
-        dfOn(sess0)(10L -> uniq(10), 12L -> famA(12)), "doc_id", "text",
-        ix0, out0, batchId = 1L))
-      val f1 = Future(Dedup.ingestBatchWithIndex(
-        dfOn(sess1)(11L -> uniq(11), 13L -> famA(13)), "doc_id", "text",
-        ix1, out1, batchId = 1L))
+      val f0 = Future(Dedup.ingestBatch(
+        dfOn(sess0)(10L -> uniq(10), 12L -> famA(12)), "doc_id",
+        Dedup.MinHashText("text"), ix0, out0, batchId = 1L))
+      val f1 = Future(Dedup.ingestBatch(
+        dfOn(sess1)(11L -> uniq(11), 13L -> famA(13)), "doc_id",
+        Dedup.MinHashText("text"), ix1, out1, batchId = 1L))
       val s0 = Await.result(f0, 5.minutes)
       val s1 = Await.result(f1, 5.minutes)
       assert(!s0.replayed && s0.novelRows == 1L, s"$s0")
@@ -112,11 +112,13 @@ class ShardedGovernedIngestSpec extends SparkSpec {
       // batch 2, concurrent again: shard 1's new doc 21 near-dups the
       // row batch 1 of the SAME shard ingested (13, famA text) — the
       // within-shard screen spans the shard's whole committed history
-      val g0 = Future(Dedup.ingestBatchWithIndex(
-        dfOn(sess0)(20L -> uniq(20)), "doc_id", "text", ix0, out0,
+      val g0 = Future(Dedup.ingestBatch(
+        dfOn(sess0)(20L -> uniq(20)), "doc_id", Dedup.MinHashText("text"), ix0,
+          out0,
         batchId = 2L))
-      val g1 = Future(Dedup.ingestBatchWithIndex(
-        dfOn(sess1)(21L -> famA(21)), "doc_id", "text", ix1, out1,
+      val g1 = Future(Dedup.ingestBatch(
+        dfOn(sess1)(21L -> famA(21)), "doc_id", Dedup.MinHashText("text"), ix1,
+          out1,
         batchId = 2L))
       val t0 = Await.result(g0, 5.minutes)
       val t1 = Await.result(g1, 5.minutes)
@@ -125,11 +127,13 @@ class ShardedGovernedIngestSpec extends SparkSpec {
         s"within-shard screening must span committed history: $t1")
 
       // concurrent REPLAYS: recognized on both shards, no extra state
-      val r0 = Future(Dedup.ingestBatchWithIndex(
-        dfOn(sess0)(20L -> uniq(20)), "doc_id", "text", ix0, out0,
+      val r0 = Future(Dedup.ingestBatch(
+        dfOn(sess0)(20L -> uniq(20)), "doc_id", Dedup.MinHashText("text"), ix0,
+          out0,
         batchId = 2L))
-      val r1 = Future(Dedup.ingestBatchWithIndex(
-        dfOn(sess1)(21L -> famA(21)), "doc_id", "text", ix1, out1,
+      val r1 = Future(Dedup.ingestBatch(
+        dfOn(sess1)(21L -> famA(21)), "doc_id", Dedup.MinHashText("text"), ix1,
+          out1,
         batchId = 2L))
       assert(Await.result(r0, 5.minutes).replayed)
       assert(Await.result(r1, 5.minutes).replayed)
@@ -188,17 +192,17 @@ class ShardedGovernedIngestSpec extends SparkSpec {
         "id", "dig", ix0)
       Dedup.writeDigestIndex(obj(spark)(0L -> d1(0), 1L -> d1(1)),
         "id", "dig", ix1)
-      Dedup.initDigestIngestLedger(spark, ix0)
-      Dedup.initDigestIngestLedger(spark, ix1)
+      Dedup.initIngestLedger(spark, ix0)
+      Dedup.initIngestLedger(spark, ix1)
       val sess0 = spark.newSession(); val sess1 = spark.newSession()
 
       // concurrent batch 1: shard 0 sees a corpus dup (d0(0)); shard 1
       // sees a within-batch dup (d1(2) twice)
-      val f0 = Future(Dedup.ingestBatchWithDigestIndex(
-        obj(sess0)(10L -> d0(2), 11L -> d0(0)), "id", "dig",
+      val f0 = Future(Dedup.ingestBatch(
+        obj(sess0)(10L -> d0(2), 11L -> d0(0)), "id", Dedup.Digests("dig"),
         ix0, out0, batchId = 1L))
-      val f1 = Future(Dedup.ingestBatchWithDigestIndex(
-        obj(sess1)(10L -> d1(2), 11L -> d1(2)), "id", "dig",
+      val f1 = Future(Dedup.ingestBatch(
+        obj(sess1)(10L -> d1(2), 11L -> d1(2)), "id", Dedup.Digests("dig"),
         ix1, out1, batchId = 1L))
       val s0 = Await.result(f0, 5.minutes)
       val s1 = Await.result(f1, 5.minutes)
@@ -209,19 +213,19 @@ class ShardedGovernedIngestSpec extends SparkSpec {
       // shard 0 — a cross-shard duplicate cannot be constructed — and
       // the second copy is screened within that shard
       assert(route(d0(3)) == 0)
-      val s2 = Dedup.ingestBatchWithDigestIndex(
-        obj(sess0)(20L -> d0(3), 21L -> d0(3)), "id", "dig",
+      val s2 = Dedup.ingestBatch(
+        obj(sess0)(20L -> d0(3), 21L -> d0(3)), "id", Dedup.Digests("dig"),
         ix0, out0, batchId = 2L)
       assert(s2.novelRows == 1L, s"$s2")
       assert(spark.read.parquet(s"$out0/batch_id=2").select("id")
         .collect().map(_.getLong(0)).toSet == Set(20L))
 
       // concurrent replays: recognized per shard, no extra state
-      val r0 = Future(Dedup.ingestBatchWithDigestIndex(
-        obj(sess0)(20L -> d0(3), 21L -> d0(3)), "id", "dig",
+      val r0 = Future(Dedup.ingestBatch(
+        obj(sess0)(20L -> d0(3), 21L -> d0(3)), "id", Dedup.Digests("dig"),
         ix0, out0, batchId = 2L))
-      val r1 = Future(Dedup.ingestBatchWithDigestIndex(
-        obj(sess1)(10L -> d1(2), 11L -> d1(2)), "id", "dig",
+      val r1 = Future(Dedup.ingestBatch(
+        obj(sess1)(10L -> d1(2), 11L -> d1(2)), "id", Dedup.Digests("dig"),
         ix1, out1, batchId = 1L))
       assert(Await.result(r0, 5.minutes).replayed)
       assert(Await.result(r1, 5.minutes).replayed)
